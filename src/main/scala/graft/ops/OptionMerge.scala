@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.expr.SyncExprs
 
-/** A4: `mergeSelectedOptions` (products.js:194-223) as a relational
-  * explode → union → re-aggregate. Keys present on either side
-  * survive (full-outer union semantics); per (color, variant):
-  * stock sums, uniqueNumbers concatenates (duplicates KEPT — the
-  * reference uses array concat, not a set: products.js:208-212),
+/** A4: `mergeSelectedOptions` (products.js:194-223) as one row-local
+  * column expression over two option arrays. Options of either side
+  * survive; per distinct (color, variant), compared null-safe: stock
+  * sums, uniqueNumbers concatenates (duplicates KEPT — the reference
+  * uses array concat, not a set: products.js:208-212) and sorts,
   * price takes the min, discount follows price.
   *
   * NOTE the reference semantic quirk preserved here (SURVEY §7.4#2):
@@ -17,30 +17,27 @@ import graft.expr.SyncExprs
   */
 object OptionMerge {
 
-  /** Merge two option-array tables keyed by `keyCols`; both inputs
-    * need (keyCols..., selectedOptions). Output has the same shape.
-    * One shuffle on (key, color, variant); map-side partial combine
-    * applies to the sums. */
-  def merge(existing: DataFrame, incoming: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val key = keyCols.map(col)
-    def exploded(df: DataFrame) = df
-      .select(key :+ explode(col("selectedOptions")).as("o"): _*)
-      .select(key ++ Seq(
-        col("o.color").as("color"), col("o.variant").as("variant"),
-        col("o.stock").as("stock"), col("o.price").as("price"),
-        col("o.uniqueNumbers").as("uniqueNumbers")): _*)
-
-    exploded(existing).unionByName(exploded(incoming))
-      .groupBy(key :+ col("color") :+ col("variant"): _*)
-      .agg(
-        sum(col("stock")).cast("int").as("stock"),
-        sort_array(flatten(collect_list(col("uniqueNumbers")))).as("uniqueNumbers"),
-        min(col("price")).as("price"))
-      .groupBy(key: _*)
-      .agg(sort_array(collect_list(struct(
-        SyncExprs.surrogateId(key ++ Seq(col("color"), col("variant")): _*).as("_id"),
-        col("color"), col("variant"), col("stock"),
-        col("price"), col("price").as("discount"),
-        col("uniqueNumbers")))).as("selectedOptions"))
+  /** Merge the `existing` and `incoming` selectedOptions arrays of one
+    * row; `key` are the row's key columns, hashed with (color, variant)
+    * into each option's `_id`. Built-in higher-order functions only —
+    * no shuffle, no UDF; the result is sorted like OptionAgg's. */
+  def merge(existing: Column, incoming: Column, key: Seq[Column]): Column = {
+    val all = concat(existing, incoming)
+    val cvs = array_distinct(transform(all, o =>
+      struct(o("color").as("color"), o("variant").as("variant"))))
+    sort_array(transform(cvs, cv => {
+      val same = filter(all, o =>
+        o("color") <=> cv("color") && o("variant") <=> cv("variant"))
+      // SQL sum semantics: null stocks are skipped, all-null sums to null
+      val stock = aggregate(same("stock"), lit(null).cast("long"), (acc, s) =>
+        when(s.isNull, acc).otherwise(coalesce(acc, lit(0L)) + s))
+      val price = array_min(same("price"))
+      struct(
+        SyncExprs.surrogateId(key ++ Seq(cv("color"), cv("variant")): _*).as("_id"),
+        cv("color").as("color"), cv("variant").as("variant"),
+        stock.cast("int").as("stock"), price.as("price"), price.as("discount"),
+        sort_array(flatten(filter(same("uniqueNumbers"), u => u.isNotNull)))
+          .as("uniqueNumbers"))
+    }))
   }
 }

@@ -5,6 +5,7 @@ import scala.util.{Failure, Success}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model.{Schemas, VendorApi, VendorSummary}
 import graft.ops.{CatalogMatch, OptionAgg}
 import graft.sink.MergeWriter
@@ -256,80 +257,90 @@ object SyncJob {
       mode: MergeWriter.MergeMode, now: Timestamp,
       dryRun: Boolean): (Map[String, VendorCounters], DataFrame) = {
 
-    // Relational core: enrich → match → aggregate.
-    val enriched = OptionAgg.enrich(allItems)
-    val names = enriched.filter(col("vendorName") =!= "")
-      .select(col("vendorName")).distinct()
-    val admin = readAdmin(spark)
-    val matched = CatalogMatch.matchCatalog(names, admin)
-    val withAdmin = enriched.join(matched, Seq("vendorName"), "left")
-    val incoming = OptionAgg.aggregate(withAdmin)
+    // ONE execution of the relational core: the stats action fills the
+    // caches, the write reads `merged` from them. They only accelerate:
+    // a lost block recomputes from the OLD snapshot, which every store
+    // keeps until its write job ends (parquet tmp+rename, JDBC staged
+    // swap). Released blocking, merged first (no dependent recache), on
+    // success and failure, so nothing leaks into a SyncServer session.
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame) = { cached += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
+      // Relational core: enrich → match → aggregate.
+      val enriched = cache(OptionAgg.enrich(allItems))
+      val names = enriched.filter(col("vendorName") =!= "")
+        .select(col("vendorName")).distinct()
+      val admin = readAdmin(spark)
+      val matched = cache(CatalogMatch.matchCatalog(names, admin))
+      val withAdmin = enriched.join(matched, Seq("vendorName"), "left")
+      val incoming = OptionAgg.aggregate(withAdmin)
 
-    // J5 accounting: groups (vendorId, vendorName, grade) kept vs
-    // skipped by catalog existence.
-    val groups = enriched.filter(SyncExprsAvailable)
-      .select(col("vendorId"), col("vendorName"), col("grade")).distinct()
-      .join(matched.select(col("vendorName"), col("admin_id")), Seq("vendorName"), "left")
+      // J5 accounting: groups (vendorId, vendorName, grade) kept vs
+      // skipped by catalog existence.
+      val groups = enriched.filter(SyncExprsAvailable)
+        .select(col("vendorId"), col("vendorName"), col("grade")).distinct()
+        .join(matched.select(col("vendorName"), col("admin_id")), Seq("vendorName"), "left")
 
-    // MERGE into the sink snapshot. When the store supports partial
-    // writes (parquet partitioned by vendorId), the snapshot READ is
-    // pre-filtered to this sync's vendors — partition pruning skips
-    // every other vendor's files — and the WRITE below swaps only
-    // those vendors' partition directories. A sync touching k of N
-    // vendors then scans and rewrites k partitions, not N (at 100 TB
-    // of sink the difference between a bounded incremental sync and a
-    // full-table rewrite per sync). Untouched vendors never enter the
-    // merge: their rows would all be action=keep, which the stats job
-    // ignores, so the summary is identical on both paths.
-    val partial = store.supportsPartialWrite && !dryRun
-    val existingAll = store.read(spark)
-    val existing =
-      if (partial) existingAll.filter(col("vendorId").isin(okIds: _*))
-      else existingAll
-    val merged = MergeWriter.merge(existing, incoming, mode, now)
+      // MERGE into the sink snapshot. When the store supports partial
+      // writes (parquet partitioned by vendorId), the snapshot READ is
+      // pre-filtered to this sync's vendors — partition pruning skips
+      // every other vendor's files — and the WRITE below swaps only
+      // those vendors' partition directories. A sync touching k of N
+      // vendors then scans and rewrites k partitions, not N (at 100 TB
+      // of sink the difference between a bounded incremental sync and a
+      // full-table rewrite per sync). Untouched vendors never enter the
+      // merge: their rows would all be action=keep, which the stats job
+      // ignores, so the summary is identical on both paths.
+      val partial = store.supportsPartialWrite && !dryRun
+      val existingAll = store.read(spark)
+      val existing =
+        if (partial) existingAll.filter(col("vendorId").isin(okIds: _*))
+        else existingAll
+      val merged = cache(MergeWriter.merge(existing, incoming, mode, now))
 
-    // ALL per-vendor A5 counters in ONE action: the three stat
-    // families (fetch totals, valid/skipped groups, merge actions +
-    // written stock) are tagged into one union and aggregated in a
-    // single job — one driver round-trip per sync instead of three.
-    // Collected BEFORE the snapshot swap: the merge leg lazily reads
-    // the OLD snapshot files, which writeSnapshot deletes.
-    val zero = lit(0L)
-    val fetchLeg = allItems.groupBy(col("vendorId"))
-      .agg(count(lit(1)).as("fetched"))
-      .select(col("vendorId"), col("fetched"), zero.as("valid"), zero.as("skipped"),
-        zero.as("inserted"), zero.as("updated"), zero.as("stock"))
-    val groupLeg = groups.groupBy(col("vendorId")).agg(
-        sum(when(col("admin_id").isNotNull, 1L).otherwise(0L)).as("valid"),
-        sum(when(col("admin_id").isNull, 1L).otherwise(0L)).as("skipped"))
-      .select(col("vendorId"), zero.as("fetched"), col("valid"), col("skipped"),
-        zero.as("inserted"), zero.as("updated"), zero.as("stock"))
-    val actionLeg = merged.filter(col("action") =!= "keep")
-      .withColumn("optStock", aggregate(
-        transform(col("selectedOptions"), o => o.getField("stock").cast("long")),
-        lit(0L), (acc, x) => acc + x))
-      .groupBy(col("vendorId")).agg(
-        sum(when(col("action") === "insert", 1L).otherwise(0L)).as("inserted"),
-        sum(when(col("action") === "merge", 1L).otherwise(0L)).as("updated"),
-        sum(col("optStock")).as("stock"))
-      .select(col("vendorId"), zero.as("fetched"), zero.as("valid"), zero.as("skipped"),
-        col("inserted"), col("updated"), col("stock"))
-    val stats: Map[String, VendorCounters] =
-      fetchLeg.unionByName(groupLeg).unionByName(actionLeg)
+      // ALL per-vendor A5 counters in ONE action: the three stat
+      // families (fetch totals, valid/skipped groups, merge actions +
+      // written stock) are tagged into one union and aggregated in a
+      // single job — one driver round-trip per sync instead of three.
+      // Collected BEFORE the snapshot swap: the merge leg lazily reads
+      // the OLD snapshot files, which writeSnapshot deletes.
+      val zero = lit(0L)
+      val fetchLeg = enriched.groupBy(col("vendorId"))
+        .agg(count(lit(1)).as("fetched"))
+        .select(col("vendorId"), col("fetched"), zero.as("valid"), zero.as("skipped"),
+          zero.as("inserted"), zero.as("updated"), zero.as("stock"))
+      val groupLeg = groups.groupBy(col("vendorId")).agg(
+          sum(when(col("admin_id").isNotNull, 1L).otherwise(0L)).as("valid"),
+          sum(when(col("admin_id").isNull, 1L).otherwise(0L)).as("skipped"))
+        .select(col("vendorId"), zero.as("fetched"), col("valid"), col("skipped"),
+          zero.as("inserted"), zero.as("updated"), zero.as("stock"))
+      val actionLeg = merged.filter(col("action") =!= "keep")
+        .withColumn("optStock", aggregate(
+          transform(col("selectedOptions"), o => o.getField("stock").cast("long")),
+          lit(0L), (acc, x) => acc + x))
         .groupBy(col("vendorId")).agg(
-          sum(col("fetched")).as("fetched"), sum(col("valid")).as("valid"),
-          sum(col("skipped")).as("skipped"), sum(col("inserted")).as("inserted"),
-          sum(col("updated")).as("updated"), sum(col("stock")).as("stock"))
-        .collect().map(r => r.getString(0) -> VendorCounters(
-          r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6))).toMap
+          sum(when(col("action") === "insert", 1L).otherwise(0L)).as("inserted"),
+          sum(when(col("action") === "merge", 1L).otherwise(0L)).as("updated"),
+          sum(col("optStock")).as("stock"))
+        .select(col("vendorId"), zero.as("fetched"), zero.as("valid"), zero.as("skipped"),
+          col("inserted"), col("updated"), col("stock"))
+      val stats: Map[String, VendorCounters] =
+        fetchLeg.unionByName(groupLeg).unionByName(actionLeg)
+          .groupBy(col("vendorId")).agg(
+            sum(col("fetched")).as("fetched"), sum(col("valid")).as("valid"),
+            sum(col("skipped")).as("skipped"), sum(col("inserted")).as("inserted"),
+            sum(col("updated")).as("updated"), sum(col("stock")).as("stock"))
+          .collect().map(r => r.getString(0) -> VendorCounters(
+            r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5), r.getLong(6))).toMap
 
-    if (!dryRun) {
-      if (partial) store.writeVendors(spark, merged.drop("action"), okIds)
-      else store.write(spark, merged.drop("action"))
-    }
+      if (!dryRun) {
+        if (partial) store.writeVendors(spark, merged.drop("action"), okIds)
+        else store.write(spark, merged.drop("action"))
+      }
 
-    (stats, merged.drop("action"))
+      (stats, merged.drop("action"))
+    } finally cached.reverseIterator.foreach(_.unpersist(blocking = true))
   }
 
   private val SyncExprsAvailable = graft.expr.SyncExprs.isAvailable(col("status"))

@@ -10,7 +10,7 @@ import graft.ops.OptionMerge
   * upsert to parquet, so the reference's per-group
   * `findOne`-then-`bulkWrite` (products.js:285-341 — an N+1 probe
   * followed by a batch) becomes ONE outer join against the current
-  * sink snapshot followed by a snapshot rewrite:
+  * sink snapshot, one projection, and a snapshot rewrite:
   *
   *   incoming FULL OUTER JOIN existing ON (vendorId, product,
   *   condition) → matched rows merge options (A4), right-only rows
@@ -60,10 +60,7 @@ object MergeWriter {
       writeSnapshotVendors(spark, df, path, vendors)
   }
 
-  /** JDBC-backed snapshot (see JdbcSnapshot for type mapping).
-    * `write` materializes the merged frame BEFORE the overwrite:
-    * unlike the parquet tmp+swap, a JDBC overwrite truncates the
-    * table the lazy merge plan is still reading. */
+  /** JDBC-backed snapshot (see JdbcSnapshot for type mapping). */
   final case class JdbcStore(url: String, table: String,
       options: Map[String, String] = Map.empty) extends SnapshotStore {
     def read(spark: SparkSession): DataFrame = {
@@ -156,7 +153,6 @@ object MergeWriter {
     * for deterministic tests (P12's `new Date()`). */
   def merge(existing: DataFrame, incoming: DataFrame, mode: MergeMode,
       now: java.sql.Timestamp): DataFrame = {
-    val key = keyCols.map(col)
     val e = existing.select(
       col("vendorId"), col("product"), col("condition"),
       col("database").as("e_database"),
@@ -174,25 +170,18 @@ object MergeWriter {
           .when(col("i_options").isNull, lit("keep"))
           .otherwise(lit("merge")))
 
+    // A4 runs row-locally: no second reference to the join, no shuffle
     val mergedOptions = mode match {
-      case Accumulate =>
-        val both = joined.filter(col("action") === "merge")
-        val m = OptionMerge.merge(
-          both.select(key :+ col("e_options").as("selectedOptions"): _*),
-          both.select(key :+ col("i_options").as("selectedOptions"): _*),
-          keyCols)
-        joined.join(m.withColumnRenamed("selectedOptions", "m_options"),
-          keyCols, "left")
-      case Replace =>
-        joined.withColumn("m_options", col("i_options"))
+      case Accumulate => OptionMerge.merge(col("e_options"), col("i_options"), keyCols.map(col))
+      case Replace => col("i_options")
     }
 
-    mergedOptions.select(
+    joined.select(
       col("vendorId"), col("product"), col("condition"),
       coalesce(col("i_database"), col("e_database")).as("database"),
       when(col("action") === "insert", col("i_options"))
         .when(col("action") === "keep", col("e_options"))
-        .otherwise(coalesce(col("m_options"), col("i_options"))).as("selectedOptions"),
+        .otherwise(mergedOptions).as("selectedOptions"),
       coalesce(col("e_createdAt"), lit(now)).as("createdAt"),
       // Rows untouched by this sync keep their existing updatedAt —
       // the reference only $set-updates touched documents
@@ -243,8 +232,12 @@ object MergeWriter {
     }
     val old = new Path(path + "__old")
     if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(p)) fs.rename(p, old)
-    fs.rename(tmp, p)
+    // checked: rename reports most failures as `false` (a snapshot
+    // left only in `__old` is restored by the next read)
+    if (fs.exists(p) && !fs.rename(p, old))
+      throw new java.io.IOException(s"could not move $p aside to $old")
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"could not move new snapshot $tmp into $p")
     if (fs.exists(old)) fs.delete(old, true)
   }
 

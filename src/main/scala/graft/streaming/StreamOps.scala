@@ -865,7 +865,9 @@ object StreamOps {
     * minutes of driver CPU in `explainString` over those duplicated
     * trees (round-17 measurement; guide §7.3). The frames cut here
     * are batch-sized, so the eager materialization is the work the
-    * first downstream action did anyway. */
+    * first downstream action did anyway. Tradeoff: with no lineage
+    * behind the checkpoint, a lost executor fails the whole ingest
+    * batch instead of recomputing its partitions; the batch replays. */
   private def cutLineage(df: DataFrame): DataFrame = {
     val c = df.localCheckpoint(true)
     c.sparkSession.createDataFrame(c.rdd, c.schema)
@@ -4159,12 +4161,9 @@ object StreamOps {
     val existing = graft.sink.MergeWriter.readSnapshot(spark, sinkPath)
     val merged = graft.sink.MergeWriter.merge(existing, batch, mode,
       new java.sql.Timestamp(System.currentTimeMillis()))
-    // Stats must materialize before the swap (the lazy plan reads the
-    // old snapshot files); then rewrite.
-    val counted = merged.persist()
-    counted.count()
-    graft.sink.MergeWriter.writeSnapshot(spark, counted.drop("action"), sinkPath)
-    counted.unpersist()
+    // one execution: the lazy plan reads the old snapshot files, which
+    // writeSnapshot's tmp+rename swap keeps until the write job is done
+    graft.sink.MergeWriter.writeSnapshot(spark, merged.drop("action"), sinkPath)
   }
 
   /** Incremental END-TO-END sync — SURVEY §7.4#7 made concrete: each

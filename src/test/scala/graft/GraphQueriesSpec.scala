@@ -235,8 +235,10 @@ class GraphQueriesSpec extends SparkSpec {
     // one scan collect; forcing rawCollectMax = 0 re-runs each query
     // through the order-sets exchange it replaces — every row must be
     // identical (same longs, same IEEE doubles)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq).toSet
+    // a multiset, not a Set: a route that duplicates or drops a
+    // repeated row must fail
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
     val liDf = graft.sources.Tables.lineitem(spark, sf001)
       .select(org.apache.spark.sql.functions.col("l_orderkey"),
         org.apache.spark.sql.functions.col("l_partkey"))
