@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main. Prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},
-  *  "queries_warm":{...},"sf":...}.
+  *  "queries_warm":{...},"failed":[...],"sf":...}.
   *
   * Isolation rules (round-1 bench overstated per-query cost ~3×
   * without them): `spark.catalog.clearCache()` between queries so one
@@ -96,19 +96,41 @@ object Bench {
     line
   }
 
+  /** One bench pass: each query run once cold and `runsPerQuery - 1`
+    * times warm, caches cleared after each query. A noop sink forces
+    * full materialization of every column — count() would let
+    * Catalyst prune projection-only queries to a metadata scan and
+    * under-report them. A run that throws still yields its
+    * time-to-failure, so every map keeps one row per query, and the
+    * query's name is returned beside the measurements so the record
+    * can say that its time is not a measurement. */
+  private[graft] def measurePass(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      runsPerQuery: Int): (Measured, Set[String]) = {
+    var failed = Set.empty[String]
+    val measured = queries.map { case (name, fn) =>
+      def timed(run: String): Double = {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name ($run) failed: ${e.getMessage}") }
+        (System.nanoTime() - t0) / 1e9
+      }
+      val cold = timed("cold")
+      val warms = (1 until runsPerQuery).map(i => timed(s"warm$i"))
+      spark.catalog.clearCache()
+      System.err.println(f"[bench] $name%-24s cold $cold%8.2fs  warm " +
+        warms.map(w => f"$w%.2fs").mkString(" "))
+      (name, cold, warms)
+    }
+    (measured, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup so the first timed query doesn't absorb the
     // JIT/codegen/session warmup. One query per table family:
@@ -120,15 +142,6 @@ object Bench {
         .write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => }
     spark.catalog.clearCache()
-    // noop sink forces full materialization of every column — count()
-    // would let Catalyst prune projection-only queries to a metadata
-    // scan and under-report them.
-    def timed(name: String, run: String)(fn: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try fn catch { case e: Throwable =>
-        System.err.println(s"[bench] $name ($run) failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
     // N runs per query (default 3: one cold + two warm). On a noisy
     // shared box (co-tenant load spikes measured 2-27s on identical
     // runs — they twice polluted round-over-round comparisons) the
@@ -149,16 +162,13 @@ object Bench {
     if (runsRequested < 2)
       System.err.println(s"[bench] SPARK_GRAFT_BENCH_RUNS=$runsRequested clamped to 2 (need cold+warm)")
     val runsPerQuery = math.max(2, runsRequested)
-    def measureAll(): Measured = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val cold = timed(name, "cold")(
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save())
-        val warms = (1 until runsPerQuery).map(i => timed(name, s"warm$i")(
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()))
-        spark.catalog.clearCache()
-        System.err.println(f"[bench] $name%-24s cold $cold%8.2fs  warm " +
-          warms.map(w => f"$w%.2fs").mkString(" "))
-        (name, cold, warms)
+    // a query that threw in any pass is listed in `failed`
+    var failed = Set.empty[String]
+    def measureAll(): Measured = {
+      val (m, f) = measurePass(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+        runsPerQuery)
+      failed ++= f
+      m
     }
     // AUTO-RETRY on load pollution: multiple recorded rounds shipped
     // numbers measured under co-tenant spikes (variance 4.7-28.8) that
@@ -191,7 +201,12 @@ object Bench {
     // Double.toString is locale-independent; the f-interpolator is NOT
     // (a comma-decimal locale would emit "1,43" and break the JSON)
     val loadVarStr = (math.round(loadVariance * 100) / 100.0).toString
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$cold,"queries_warm":$warm,"queries_best":$best,"total_best":$totalBest,"runs_per_query":$runsPerQuery,"load_variance":$loadVarStr,"noisy":$noisy,"retried":$retried,"sf":"$sfDir"}"""
+    val failedNames = failed.toSeq.sorted
+    if (failedNames.nonEmpty)
+      System.err.println(s"[bench] ${failedNames.size} of ${SparkEntry.queries.size} " +
+        s"queries FAILED: ${failedNames.mkString(", ")}")
+    val failedJson = failedNames.map(Verify.jsonStr).mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$cold,"queries_warm":$warm,"queries_best":$best,"total_best":$totalBest,"runs_per_query":$runsPerQuery,"load_variance":$loadVarStr,"noisy":$noisy,"retried":$retried,"failed":$failedJson,"sf":"$sfDir"}"""
     println(json)
     // Self-record the complete JSON to a file as well: the stdout
     // capture path once truncated its tail and silently dropped the

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.Session
 import graft.model.{VendorApi, VendorSummary}
 import graft.sink.MergeWriter
 import graft.sources.HttpSource
@@ -124,13 +125,7 @@ object SyncServer {
     require(args.length >= 4,
       "usage: SyncServer <credentialsParquet> <sinkPath> <adminPath> <vendorApiBaseUrl> [port]")
     val port = if (args.length > 4) args(4).toInt else 8080
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.builder(sys.env.getOrElse("SPARK_MASTER", "local[32]"), 32).getOrCreate()
     spark.conf.set("graft.sync.admin.path", args(2))
     import spark.implicits._
     val creds = () => spark.read.parquet(args(0)).as[VendorApi]

@@ -108,13 +108,6 @@ object GraphQueries {
     * build runs unchanged. */
   private[graft] val RawCollectMaxRows: Long = 8000000L
 
-  /** Group raw (orderkey, partkey) rows into per-order DISTINCT,
-    * sorted part sets — `collect_set`'s semantics (null parts
-    * skipped, a null order key is its own group) replayed on the
-    * driver. One cheap count gates the collect; the collected model
-    * is re-checked against the same elems/pairs budgets as
-    * [[basketModelOf]]. None past any budget — callers fall through
-    * to the distributed sets build unchanged. */
   /** Generous upper bound on the bytes one input row can occupy —
     * the short-circuit constant of the raw-collect gate. A TPC-H
     * lineitem row is ~120 B raw / ~20 B in compressed parquet; 512 B
@@ -129,6 +122,13 @@ object GraphQueries {
     * just run the count. */
   private[graft] val RawGateMaxBytesPerRow: Long = 512L
 
+  /** Group raw (orderkey, partkey) rows into per-order DISTINCT,
+    * sorted part sets — `collect_set`'s semantics (null parts
+    * skipped, a null order key is its own group) replayed on the
+    * driver. Plan statistics, then one cheap count, gate the
+    * collect; the collected model is re-checked against the same
+    * elems/pairs budgets as [[basketModelOf]]. None past any budget —
+    * callers fall through to the distributed sets build unchanged. */
   private def basketSetsRaw(li: DataFrame, maxPairs: Long,
       maxElems: Long = BasketModelMaxElems,
       maxRows: Long = RawCollectMaxRows): Option[Array[Array[Long]]] = {
@@ -352,7 +352,7 @@ object GraphQueries {
     val out =
       if (nNodes <= localModelMax)
         localSupersteps(spark, canon, nodes, iters, localFinishEdges)
-      else distributedSupersteps(spark, canon, nodes, iters)
+      else distributedSupersteps(canon, nodes, iters)
     nodes.unpersist(); sets.unpersist()
     out
   }
@@ -865,14 +865,6 @@ object GraphQueries {
       .toDF("part_a", "part_b", "n_ab", "n_a", "n_b"), nOrders))
   }
 
-  /** Iteration-1 pre-checkpoint plan of the last distributed
-    * superstep run — captured ONLY when `spark.graft.g1.capturePlan`
-    * is set (explainString over the superstep tree is driver work the
-    * hot path must never pay; the round-17 ingest stall was exactly
-    * that). Evidence hook for the plans/ dump, nothing reads it in
-    * query paths. */
-  @volatile private[graft] var lastDistSuperstepPlan: Option[String] = None
-
   /** Distributed path: degree-attached symmetric edge frame
     * hash-partitioned on `src` ONCE and persisted; per superstep one
     * co-partitioned rank join (ranks exchange O(V) — never an O(V)
@@ -886,7 +878,7 @@ object GraphQueries {
     * iterations (guide §2.4 share-one-exchange); the rank side builds
     * the per-partition hash table (SHUFFLE_HASH — node-sized per
     * partition, no edge-side sort). */
-  private def distributedSupersteps(spark: SparkSession, canonIn: DataFrame,
+  private def distributedSupersteps(canonIn: DataFrame,
       nodes: DataFrame, iters: Int): DataFrame = {
     // persisted BEFORE the symmetrizing union — both branches read
     // the cache, not the pair-build plan (the dedup_clusters_lsh
@@ -907,20 +899,14 @@ object GraphQueries {
     // avoid (the localSupersteps nEdges-count discipline)
     ewd.count()
     val zeros = nodes.select(col("node"), lit(0L).as("c"))
-    val capturePlan = spark.conf.getOption("spark.graft.g1.capturePlan")
-      .exists(_.toBoolean)
-
     var ranks = nodes.withColumn("r", lit(1000000L))
-    for (i <- 1 to iters) {
-      val step = ewd.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
+    for (_ <- 1 to iters) {
+      ranks = ewd.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .union(zeros)
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
         .select(col("node"), expr("150000 + (85 * s) div 100").as("r"))
-      if (capturePlan && i == iters)
-        lastDistSuperstepPlan = Some(step.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      ranks = step.localCheckpoint(true)
+        .localCheckpoint(true)
     }
     val out = ranks.select(col("node").as("part_key"),
       col("r").cast("long").as("rank_micros"))

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** ColdOne's twin for the MAINTENANCE surface: fresh-JVM timed runs
   * of the staged rebuilds and the unified policy sweep, so future
@@ -34,13 +34,7 @@ import org.apache.spark.sql.functions._
 object ColdMaint {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.queries.VectorIndex
     import graft.streaming.StreamOps

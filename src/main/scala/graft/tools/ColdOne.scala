@@ -1,5 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
+import graft.Session
 
 /** Dev harness: time one query cold then warm in a fresh session —
   * separates plan cost from first-run JIT when a bench number looks
@@ -8,13 +9,7 @@ object ColdOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (i <- 1 to 3) {
       val t0 = System.nanoTime()

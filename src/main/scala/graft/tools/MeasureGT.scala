@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Session
 import graft.queries.{TextQueries, VectorQueries}
 
 /** Dev harness: prints the ground-truth measurements behind the
@@ -11,12 +11,7 @@ import graft.queries.{TextQueries, VectorQueries}
 object MeasureGT {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // ANN recall@5

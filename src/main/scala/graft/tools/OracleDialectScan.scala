@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** One-shot diagnostic: classify WHY each SparkEntry.oracleSql text
   * fails through spark.sql — parse error, unresolved function (and
@@ -9,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object OracleDialectScan {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SqlGateway.open(spark, dir)
     graft.SparkEntry.registerGatedQueries

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.Session
 
 /** Whole-suite plan-health audit: one line per SparkEntry query with
   * the counts that decide scale behavior — exchanges (shuffles),
@@ -19,14 +19,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(s: String, token: String): Int =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** One-shot diagnostic behind SqlGatewaySpec's inventory test: for
   * every SparkEntry.oracleSql text, report whether it runs through
@@ -11,17 +11,7 @@ object PortableScan {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val prefix = if (args.length > 1) args(1) else ""
-    val spark = SparkSession.builder().master("local[8]")
-      // the ASOF-capable parser rides the extensions config only —
-      // without it the three as-of texts read as non-runnable here
-      // while SqlGatewaySpec (whose session has it) counts them
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SqlGateway.open(spark, dir)
     graft.SparkEntry.registerGatedQueries.foreach { n =>

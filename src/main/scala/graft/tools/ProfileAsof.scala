@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Measures the two ASOF lowerings (AsofJoinRewriteRule) on uniform
   * vs hot-key corpora — the rehearsal behind the "window form is
@@ -18,15 +19,7 @@ object ProfileAsof {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val replicas = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 4)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SqlGateway.open(spark, dir)
     val base = graft.sources.Tables.events(spark, dir)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** g6 BFS volume rehearsal on a CONNECTED ×reps graph — closes the
   * round-12 gap where ProfileSuite10x's replicas are disjoint
@@ -39,14 +40,7 @@ object ProfileBfsStitched {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val reps = if (args.length > 1) args(1).toInt else 10
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val maxHops = 20 + 2 * reps // runaway bound only — the loop exits

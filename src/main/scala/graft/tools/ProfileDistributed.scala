@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Session
 
 /** Volume rehearsal for the PAST-THE-BOUND distributed legs of the
   * graph/cluster family — the one set of 100 TB paths the ×40
@@ -83,14 +84,7 @@ object ProfileDistributed {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 40
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val bigDir = ProfileSuite10x.replicate(spark, dir, reps)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Time the graph-ANN BUILD (the stage the round-13 verdict flagged
   * as latently quadratic under the old 256-cell cap) across corpus
@@ -12,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileGraphBuild {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileGraphBuild <dir> [<dir> ...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { dir =>
       val idx = java.nio.file.Files

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Measurement harness for the streaming near-dup ingest path: feeds
   * the documents corpus through `nearDupIngestBatch` in N
@@ -19,13 +19,7 @@ object ProfileIngest {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val nBatches = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

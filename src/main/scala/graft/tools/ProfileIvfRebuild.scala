@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** What the IVF quantizer-rebuild BUYS, measured: the stale-quantizer
   * penalty for IVF is RECALL, not cost (probe cost is nprobe-bounded
@@ -25,17 +26,10 @@ import org.apache.spark.sql.functions._
 object ProfileIvfRebuild {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.queries.VectorIndex
     import graft.streaming.StreamOps
-    graft.functions.GraftFunctions.ensureRegistered(spark)
 
     val idx = java.nio.file.Files.createTempDirectory("ivf-rb-prof").toString
     VectorIndex.buildIvf(spark, dir, idx)

@@ -1,6 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Scale rehearsal for the graph family (the ProfileScale pattern):
   * replicates the basket corpus `reps`× with l_orderkey offsets —
@@ -18,13 +19,7 @@ object ProfilePr {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def t[A](n: String)(f: => A): A = {

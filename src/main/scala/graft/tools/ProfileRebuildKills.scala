@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart, SparkListenerTaskEnd}
 
+import graft.Session
 import graft.queries.VectorIndex
 import graft.streaming.StreamOps
 
@@ -51,15 +52,8 @@ object ProfileRebuildKills {
   private val KillResidue = 2
 
   private def session(faulty: Boolean, cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val b = Session.builder(s"local[$cpus]", cpus.toInt)
       .appName(if (faulty) "graft-rebuildkills-faulted" else "graft-rebuildkills-clean")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (faulty)
       b.config("spark.speculation", "true")
         .config("spark.speculation.interval", "50ms")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart, SparkListenerTaskEnd}
+import graft.Session
 
 /** Task-retry / speculation determinism rehearsal — the failure mode
   * the small-SF suite never exercises: at 1000-executor scale task
@@ -84,15 +85,8 @@ object ProfileRetry {
   private val KillResidue = 2
 
   private def session(faulty: Boolean, cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val b = Session.builder(s"local[$cpus]", cpus.toInt)
       .appName(if (faulty) "graft-retry-faulted" else "graft-retry-clean")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (faulty)
       b.config("spark.speculation", "true")
         .config("spark.speculation.interval", "50ms")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Whole-suite 10× scale rehearsal — the round-9 complement to
   * [[ProfileScale]] (which stresses the dedup guard rails with
@@ -214,14 +215,7 @@ object ProfileSuite10x {
     // the cheap linear families the sandbox can hold at that factor
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val t0 = System.nanoTime()

@@ -1,17 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Consumer-style demo of the streaming layer: rate source →
   * 1-second tumbling counts with watermark → memory sink. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rate = spark.readStream.format("rate").option("rowsPerSecond", "50").load()
       .select(col("timestamp").as("ts"),

@@ -3,7 +3,7 @@ package graft.tools
 import java.sql.Timestamp
 import scala.util.{Success, Try}
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import graft.model.VendorApi
 import graft.pipeline.SyncJob
 import graft.sink.MergeWriter
@@ -19,12 +19,7 @@ object SyncDemo {
   def main(args: Array[String]): Unit = {
     val sink = (if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft-demo").toString) + "/vendor_products"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Prefix-filtered graft.Verify — dump only the named queries (and
   * their oracle texts) so a single family's oracle can be DuckDB-
@@ -11,15 +11,7 @@ object VerifySome {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, prefixes) = args
     val ps = prefixes.split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("local[16]", 16).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

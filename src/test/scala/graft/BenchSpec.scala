@@ -1,12 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{lit, raise_error}
 
-/** The bench harness's load-variance / auto-retry decision logic —
-  * pure functions, no SparkSession needed. The retry exists because
-  * two recorded rounds shipped co-tenant-polluted numbers; these pin
-  * the signal that triggers it and the pick-the-calmer-pass rule. */
-class BenchSpec extends AnyFunSuite {
+/** The bench harness's load-variance / auto-retry decision logic (pure
+  * functions) and its measure step. The retry exists because two
+  * recorded rounds shipped co-tenant-polluted numbers; these pin the
+  * signal that triggers it and the pick-the-calmer-pass rule. */
+class BenchSpec extends SparkSpec {
 
   private def q(name: String, cold: Double, warms: Double*) =
     (name, cold, warms.toSeq)
@@ -92,5 +93,16 @@ class BenchSpec extends AnyFunSuite {
     // 3x are within this box's observed calm-day jitter
     assert(!(3.0 > Bench.NoisyThreshold))
     assert(28.8 > Bench.NoisyThreshold) // the round-4 polluted run
+  }
+
+  test("measurePass names a query that throws and still times every run") {
+    val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(3).toDF("x")
+    val boom: (SparkSession, String) => DataFrame = (s, _) =>
+      s.range(1).select(raise_error(lit("boom")))
+    val (measured, failed) = Bench.measurePass(spark, "unused",
+      Seq("a_ok" -> ok, "b_boom" -> boom), runsPerQuery = 3)
+    assert(failed == Set("b_boom"))
+    assert(measured.map(_._1) == Seq("a_ok", "b_boom"))
+    assert(measured.forall(r => r._2 >= 0 && r._3.size == 2))
   }
 }

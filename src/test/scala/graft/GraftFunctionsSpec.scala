@@ -1,12 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftExtensions, GraftFunctions}
 
 /** Both registration routes for the native expressions: the
   * SparkSessionExtensions injection (config route) and the idempotent
-  * runtime hook. */
+  * runtime hook; and the session factory that carries the config
+  * route to every entry point. */
 class GraftFunctionsSpec extends SparkSpec {
 
   test("config route: withExtensions(GraftExtensions) resolves graft_dot in SQL") {
@@ -29,6 +32,32 @@ class GraftFunctionsSpec extends SparkSpec {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
     }
+  }
+
+  test("the shared spec session carries every canonical factory conf") {
+    val canonical = Map(
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    canonical.foreach { case (k, v) =>
+      assert(SparkSpec.session.conf.get(k) == v, s"$k on the spec session")
+    }
+  }
+
+  test("src/main builds a SparkSession only through the factory") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val builders = try walk.iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        Files.readString(f).contains("SparkSession.builder"))
+      .map(f => root.relativize(f).toString).toSeq.sorted
+    finally walk.close()
+    assert(builders == Seq("graft/Session.scala"))
   }
 
   test("runtime route is idempotent and registers the same function") {

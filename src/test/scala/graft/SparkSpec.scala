@@ -20,18 +20,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  // the production factory, so specs run the engine Bench and Verify
+  // run: graft extensions, optimizer rules and the ASOF-capable parser
+  lazy val session: SparkSession = Session.builder("local[4]", 4)
     .appName("graft-test")
-    // the library's documented activation route — exercises the
-    // injected functions, optimizer rules, and the ASOF-capable
-    // parser exactly as a production session would
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 }
