@@ -35,7 +35,10 @@ object SqlGateway {
     // parser mode matches DuckDB (and standard SQL). Engine code is
     // unaffected: DataFrame-API literals never pass through the SQL
     // parser, and no in-repo expr()/selectExpr text uses backslashes.
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    // set only when needed: Spark warns that the conf is deprecated
+    // on every set, and open runs once per gateway query
+    if (spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") != "true")
+      spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     for (t <- TableNames) load(spark, dir, t).createOrReplaceTempView(t)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sink.DirSwap
 
 /** Incremental maintenance of a materialized aggregate — the
   * "refresh the rollup without recomputing history" pattern every
@@ -87,11 +88,11 @@ object IncrementalAgg {
   }
 
   /** Refresh the parquet-stored aggregate at `storePath` with a new
-    * fact `delta`: state' = merge(stored, partial(delta)), written
-    * via the tmp+rename swap discipline (MergeWriter.scala:203-218)
-    * so a crash mid-write leaves the previous state readable — the
-    * caller simply re-runs the refresh. First call (no stored
-    * state) bootstraps from the delta alone.
+    * fact `delta`: state' = merge(stored, partial(delta)), committed
+    * by graft.sink.DirSwap so a crash mid-write leaves the previous
+    * state readable (healed from `__old` before any read) — the caller
+    * simply re-runs the refresh. First call (no stored state)
+    * bootstraps from the delta alone.
     *
     * NOTE at-least-once semantics: replaying the SAME delta doubles
     * its contribution (the same accumulate quirk as the reference's
@@ -130,28 +131,24 @@ object IncrementalAgg {
     else { refreshInternal(spark, storePath, delta, spec, Some(token)); true }
   }
 
-  /** High-water token of the state at `p`, if any. Absent file (no
-    * state yet, or a state only ever driven by plain refresh) reads
-    * None. An unreadable payload throws: it cannot arise from any
-    * crash ordering (the file is fully written before the rename
-    * publishes it), so it means external corruption — refolding or
-    * skipping on a guess would silently corrupt the aggregate. */
+  /** High-water token of the state at `p`, if any, after healing a
+    * crashed commit. Absent file (no state yet, or a state only ever
+    * driven by plain refresh) reads None; an unreadable one throws
+    * (DirSwap.readToken). */
   private def readToken(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): Option[Long] = {
-    val f = new Path(p, TokenFile)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(txt.toLong)
-    }
+    DirSwap.heal(fs, p, DirSwap.old(p))
+    DirSwap.readToken(fs, p, TokenFile)
   }
 
   private def refreshInternal(spark: SparkSession, storePath: String,
       delta: DataFrame, spec: AggSpec, token: Option[Long]): Unit = {
     val p = new Path(storePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // carry the ledger forward even through plain refresh() calls, so
+    // interleaving batch backfills with streaming maintenance cannot
+    // silently drop the high-water token
+    val carried = (token.toSeq ++ readToken(fs, p).toSeq).maxOption
     val deltaState = partial(delta, spec)
     val next =
       if (fs.exists(p)) merge(Seq(spark.read.parquet(storePath), deltaState), spec)
@@ -159,22 +156,7 @@ object IncrementalAgg {
     val tmp = new Path(storePath + "__tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     next.write.mode("overwrite").parquet(tmp.toString)
-    // carry the ledger forward even through plain refresh() calls, so
-    // interleaving batch backfills with streaming maintenance cannot
-    // silently drop the high-water token
-    val carried = (token.toSeq ++ readToken(fs, p).toSeq).maxOption
-    carried.foreach { t =>
-      val out = fs.create(new Path(tmp, TokenFile), true)
-      try out.write(t.toString.getBytes("UTF-8")) finally out.close()
-    }
-    val old = new Path(storePath + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(p) && !fs.rename(p, old))
-      sys.error(s"rename $p -> $old failed")
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(old)) fs.rename(old, p) // restore previous state
-      sys.error(s"rename $tmp -> $p failed")
-    }
-    fs.delete(old, true)
+    carried.foreach(DirSwap.writeToken(fs, tmp, TokenFile, _))
+    DirSwap.commit(fs, tmp, p, DirSwap.old(p))
   }
 }

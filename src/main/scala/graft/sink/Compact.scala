@@ -17,10 +17,13 @@ import org.apache.spark.sql.SparkSession
   * partitions out as separate jobs. Already-compact partitions are
   * skipped without a write (their files stay byte-identical, the
   * same untouched-partition guarantee MergeWriter's partial sync
-  * makes). Each rewrite swaps via the checked tmp+rename discipline
-  * (MergeWriter.scala:242-274): a crash leaves either the old files
-  * or the new, never a mix, and a stale tmp from a previous crash is
-  * cleared on the next run.
+  * makes). Each rewrite commits through DirSwap: a crash leaves
+  * either the old files or the new, never a mix, the next run heals
+  * a copy left only aside before it lists anything, and a stale tmp
+  * from a previous crash is cleared. A partition's staging and aside
+  * copies sit BESIDE the table root (`<root>__ctmp_<part>`,
+  * `<root>__cold_<part>`), where readers never see them as partition
+  * values; a flat table's are `<root>__ctmp` and `<root>__cold`.
   *
   * Ordering note: a plain repartition rewrite does not preserve
   * clustering; re-clustering a z-ordered table is
@@ -46,18 +49,20 @@ object Compact {
     require(targetBytes > 0, "targetBytes must be positive")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val children = fs.listStatus(root).toSeq
-    val partDirs = children.filter(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
-    val units =
-      if (partDirs.nonEmpty) partDirs.map(st => st.getPath)
-      else Seq(root)
-    units.map(u => compactDir(spark, fs, u,
-      if (u == root) "<root>" else u.getName, targetBytes))
+    def beside(kind: String, part: String) = new Path(s"${root}__$kind$part")
+    DirSwap.heal(fs, root, beside("cold", ""))
+    DirSwap.healBeside(fs, root, "__cold_")
+    val partDirs = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      .map(_.getPath)
+    if (partDirs.isEmpty) Seq(compactDir(spark, fs, root, "<root>",
+      beside("ctmp", ""), beside("cold", ""), targetBytes))
+    else partDirs.map(d => compactDir(spark, fs, d, d.getName,
+      beside("ctmp", "_" + d.getName), beside("cold", "_" + d.getName), targetBytes))
   }
 
   private def compactDir(spark: SparkSession, fs: FileSystem, dir: Path,
-      label: String, targetBytes: Long): PartitionResult = {
+      label: String, tmp: Path, old: Path, targetBytes: Long): PartitionResult = {
     val files = fs.listStatus(dir).toSeq
       .filter(st => st.isFile && isDataFile(st.getPath))
     val bytes = files.map(_.getLen).sum
@@ -65,19 +70,11 @@ object Compact {
     if (files.size <= nTarget)
       return PartitionResult(label, files.size, files.size, bytes, rewritten = false)
 
-    val tmp = new Path(dir.toString + "__ctmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     spark.read.parquet(dir.toString)
       .repartition(nTarget)
       .write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(dir.toString + "__cold")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(dir, old)) sys.error(s"compact: rename $dir -> $old failed")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // restore
-      sys.error(s"compact: rename $tmp -> $dir failed")
-    }
-    fs.delete(old, true)
+    DirSwap.commit(fs, tmp, dir, old)
     val after = fs.listStatus(dir).toSeq
       .count(st => st.isFile && isDataFile(st.getPath))
     PartitionResult(label, files.size, after, bytes, rewritten = true)

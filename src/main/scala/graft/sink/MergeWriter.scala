@@ -131,15 +131,15 @@ object MergeWriter {
 
   /** Read the current sink snapshot, or an empty frame with the sink
     * schema when the table doesn't exist yet. Heals any interrupted
-    * per-vendor swap FIRST: a crashed partial write leaves a vendor
-    * only in its `__vold_` backup, and reading without restoring it
-    * would hand the merge a snapshot missing that vendor — the next
-    * write would then reset its accumulated state to `insert`. */
+    * swap FIRST: a crashed write leaves a vendor only in its `__vold_`
+    * backup (or the whole snapshot only in `__old`), and reading
+    * without restoring it would hand the merge a snapshot missing that
+    * state — the next write would then reset it to `insert`. */
   def readSnapshot(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverVendorSwaps(fs, p)
-    recoverFullSwap(fs, p)
+    DirSwap.healBeside(fs, p, VendorAside)
+    DirSwap.heal(fs, p, DirSwap.old(p))
     if (fs.exists(p))
       spark.read.schema(Schemas.vendorProduct).parquet(path)
     else
@@ -226,49 +226,21 @@ object MergeWriter {
       // groups instead of scanning the vendor
       .sortWithinPartitions(col("vendorId"), col("product"))
       .write.mode("overwrite").partitionBy("vendorId").parquet(tmp.toString)
-    token.foreach { t =>
-      val out = fs.create(new Path(tmp, TokenFile), true)
-      try out.write(t.toString.getBytes("UTF-8")) finally out.close()
-    }
-    val old = new Path(path + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    // checked: rename reports most failures as `false` (a snapshot
-    // left only in `__old` is restored by the next read)
-    if (fs.exists(p) && !fs.rename(p, old))
-      throw new java.io.IOException(s"could not move $p aside to $old")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"could not move new snapshot $tmp into $p")
-    if (fs.exists(old)) fs.delete(old, true)
+    token.foreach(DirSwap.writeToken(fs, tmp, TokenFile, _))
+    DirSwap.commit(fs, tmp, p, DirSwap.old(p))
   }
 
   private val TokenFile = "_graft_batch"
+  // where a per-vendor swap keeps the previous copy, beside the table
+  private val VendorAside = "__vold_"
 
   /** Last batch token committed with the snapshot (None before the
     * first tokened write, or for untokened snapshots). */
   def readBatchToken(spark: SparkSession, path: String): Option[Long] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverFullSwap(fs, p)
-    val f = new Path(p, TokenFile)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Recovery for the full-table swap's crash window: a crash between
-    * `rename(p, old)` and `rename(tmp, p)` leaves the snapshot ONLY
-    * in `__old` — reading without restoring it would hand the next
-    * merge an empty snapshot and silently reset all accumulated
-    * state. `__old` alongside a live `p` is the opposite (post-swap
-    * residue) and is ignored; writeSnapshot deletes it. */
-  private def recoverFullSwap(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
-    val old = new Path(p.toString + "__old")
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      throw new java.io.IOException(s"could not restore crashed swap from $old")
+    DirSwap.heal(fs, p, DirSwap.old(p))
+    DirSwap.readToken(fs, p, TokenFile)
   }
 
   /** ParquetStore variant whose every write commits `token` in the
@@ -276,8 +248,8 @@ object MergeWriter {
     * syncs. Deliberately NO partial-vendor writes: the token must
     * ride ONE atomic swap, and k independent partition renames
     * cannot carry one commit point (a transactional table format is
-    * the at-scale answer; the k-partition path remains available as
-    * documented at-least-once via plain ParquetStore). */
+    * the at-scale answer; batch syncs keep the k-partition path via
+    * plain ParquetStore). */
   final case class TokenParquetStore(path: String, token: Long) extends SnapshotStore {
     def read(spark: SparkSession): DataFrame = readSnapshot(spark, path)
     def write(spark: SparkSession, df: DataFrame): Unit =
@@ -293,17 +265,18 @@ object MergeWriter {
     * the caller also pre-filters the snapshot READ to those vendors,
     * so a k-vendor sync scans and writes k partitions, not N).
     *
-    * Each vendor directory swaps via the same tmp+rename discipline as
-    * the full-snapshot path. The swap is atomic per vendor but not
-    * across vendors: a crash mid-loop leaves some vendors new and some
-    * old — each still a consistent snapshot of SOME sync, which is the
-    * same guarantee class as the reference's non-transactional
-    * bulkWrite batches. Single-writer, like every sink path here. */
+    * Each vendor directory swaps through DirSwap.commit, like the
+    * full-snapshot path, with its backup beside the table. The swap
+    * is atomic per vendor but not across vendors: a crash mid-loop
+    * leaves some vendors new and some old — each still a consistent
+    * snapshot of SOME sync, which is the same guarantee class as the
+    * reference's non-transactional bulkWrite batches. Single-writer,
+    * like every sink path here. */
   def writeSnapshotVendors(spark: SparkSession, df: DataFrame, path: String,
       vendors: Seq[String]): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverVendorSwaps(fs, p)
+    DirSwap.healBeside(fs, p, VendorAside)
     val tmp = new Path(path + "__vtmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     df.select(Schemas.vendorProduct.fieldNames.map(col).toSeq: _*)
@@ -314,50 +287,13 @@ object MergeWriter {
     if (!fs.exists(p)) fs.mkdirs(p)
     // swap the partition dirs the write actually produced (listing tmp
     // rather than constructing names keeps Spark's partition-value
-    // escaping out of our hands)
+    // escaping out of our hands); each backup sits beside the table
     val written = fs.listStatus(tmp).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("vendorId="))
     for (st <- written) {
       val name = st.getPath.getName
-      val target = new Path(p, name)
-      // old dir moves aside before the new one moves in; every rename
-      // result is CHECKED — Hadoop FileSystem.rename reports most
-      // failures as `false`, not an exception, and ignoring one here
-      // could delete a vendor's only surviving copy
-      val old = new Path(path + "__vold_" + name)
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(target) && !fs.rename(target, old))
-        throw new java.io.IOException(s"could not move $target aside to $old")
-      if (!fs.rename(st.getPath, target)) {
-        // restore the backup before failing: the vendor must never be
-        // left with data in no live location
-        if (fs.exists(old)) fs.rename(old, target)
-        throw new java.io.IOException(s"could not move new $name into $target")
-      }
-      if (fs.exists(old)) fs.delete(old, true)
+      DirSwap.commit(fs, st.getPath, new Path(p, name), new Path(path + VendorAside + name))
     }
     fs.delete(tmp, true)
-  }
-
-  /** Heal an interrupted per-vendor swap: a crash between the
-    * move-aside and move-in renames leaves `<path>__vold_<dir>` as a
-    * vendor's only copy. Restoring any backup whose live dir is
-    * missing runs before every partial write (and is a no-op
-    * otherwise), so the table never silently loses a vendor to a
-    * mid-swap crash — the vendor reverts to its pre-sync state and
-    * the re-run syncs it again. */
-  private def recoverVendorSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Unit = {
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val prefix = p.getName + "__vold_"
-    for (st <- fs.listStatus(parent) if st.getPath.getName.startsWith(prefix)) {
-      val target = new Path(p, st.getPath.getName.stripPrefix(prefix))
-      if (!fs.exists(target)) {
-        if (!fs.rename(st.getPath, target))
-          throw new java.io.IOException(
-            s"crashed swap recovery: could not restore ${st.getPath} to $target")
-      } else fs.delete(st.getPath, true) // stale backup, live dir intact
-    }
   }
 }

@@ -601,29 +601,16 @@ object StreamOps {
     } catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
 
-  /** Heal an interrupted compaction swap: table dir missing while the
-    * complete pre-compaction copy sits in `__old` (the only state a
-    * crash inside compactNearDupIndex's rename pair leaves). Without
-    * this the next batch would read batch-0 semantics and silently
-    * lose the entire accumulated dedup index. With EVERY reader and
-    * ingester healing first (readIndex, readPhashIndex,
-    * ivfIngestBatch, VectorIndex.searchIvf/searchIvfPq), the only
-    * state where `__old` exists ALONGSIDE the table is a crash after
-    * the swap completed but before the `__old` cleanup delete — the
-    * table is then the complete compacted copy and authoritative, so
-    * both-present needs no action here (the next compaction deletes
-    * the stale `__old`). Shared across the text/phash/IVF index
-    * families — `private[graft]` so the serving paths outside this
-    * object apply the same heal-first discipline. */
+  /** Heal an interrupted maintained-table swap: DirSwap.heal with the
+    * `__old` aside copy. Every reader and ingester of the index
+    * families heals first (readIndex, readPhashIndex, ivfIngestBatch,
+    * VectorIndex.searchIvf/searchIvfPq); otherwise the next batch would
+    * read batch-0 semantics and silently lose the accumulated index.
+    * `private[graft]` so the serving paths outside this object apply
+    * the same heal-first discipline. */
   private[graft] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(p.toString + "__old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(
-          s"crashed compaction recovery: could not restore $old to $p")
-    }
-  }
+      p: org.apache.hadoop.fs.Path): Unit =
+    graft.sink.DirSwap.heal(fs, p, graft.sink.DirSwap.old(p))
 
   /** Per-acquisition-unique compaction staging path —
     * `<sub>__compact_<lease name>` (epoch + token embedded), the
@@ -657,11 +644,10 @@ object StreamOps {
   }
 
   /** THE checked tmp+swap every maintained-table rewrite uses — one
-    * copy of the protocol instead of one per family (heal first,
-    * stage into the per-acquisition tmp, re-check the lease at the
-    * point of no return, rename-pair with rollback, drop the aside
-    * copy): a protocol change lands once, not eight times. `write`
-    * stages the new table contents into the tmp path it receives.
+    * call instead of one per family (heal first, stage into the
+    * per-acquisition tmp, then graft.sink.DirSwap.commit with the
+    * lease re-checked at the point of no return). `write` stages the
+    * new table contents into the tmp path it receives.
     * Returns false (nothing written, nothing swapped) for an absent
     * table unless `createIfAbsent` — compactions rewrite what exists;
     * first-write surfaces (the pins overlay, a fresh stats ledger)
@@ -674,16 +660,8 @@ object StreamOps {
     if (!createIfAbsent && !fs.exists(p)) return false
     val tmp = compactStaging(fs, parent, sub, lease)
     write(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(s"$parent/${sub}__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    checkMaintenanceLease(fs, lease)
-    if (fs.exists(p) && !fs.rename(p, old))
-      throw new java.io.IOException(s"could not move $p aside to $old")
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(old)) fs.rename(old, p)
-      throw new java.io.IOException(s"could not move compacted $tmp into $p")
-    }
-    fs.delete(old, true)
+    graft.sink.DirSwap.commit(fs, tmp, p, graft.sink.DirSwap.old(p),
+      () => checkMaintenanceLease(fs, lease))
     true
   }
 
@@ -4187,36 +4165,34 @@ object StreamOps {
     * specs); `onSummary` receives the per-vendor A5 summaries the
     * batch route returns from its HTTP response.
     *
-    * Replay (foreachBatch's documented failure mode): with
-    * `exactlyOnce` (default) on a ParquetStore OR a JdbcStore, each
-    * batch's id is committed as a token INSIDE the snapshot swap —
-    * token and data become visible in the same rename / the same DB
-    * transaction (mvMaintainBatch's token-with-state pattern applied
-    * to the sink), so a replayed batch is detected and becomes a
-    * no-op (no re-merge, no summary). The exactly-once path trades
-    * away partial-vendor writes: one commit point needs ONE atomic
-    * swap (k independent partition renames can't carry it — a
-    * transactional table format is the at-scale answer). JDBC
-    * exactly-once additionally assumes transactional DDL (Derby,
-    * Postgres; see JdbcSnapshot.writeStagedToken). `exactlyOnce =
-    * false` (or another store) keeps the k-of-N partial-write path
-    * with at-least-once replay semantics: Replace mode is naturally
+    * Replay (foreachBatch's documented failure mode): on a
+    * ParquetStore OR a JdbcStore, each batch's id is committed as a
+    * token INSIDE the snapshot swap — token and data become visible in
+    * the same rename / the same DB transaction (mvMaintainBatch's
+    * token-with-state pattern applied to the sink), so a replayed
+    * batch is detected and becomes a no-op (no re-merge, no summary).
+    * Streamed syncs therefore trade away partial-vendor writes: one
+    * commit point needs ONE atomic swap (k independent partition
+    * renames can't carry it — a transactional table format is the
+    * at-scale answer). JDBC exactly-once additionally assumes
+    * transactional DDL (Derby, Postgres; see
+    * JdbcSnapshot.writeStagedToken). Another store keeps its own write
+    * path and at-least-once replay: Replace mode is naturally
     * idempotent, Accumulate can double-fold a replayed batch. */
   def syncBatch(store: graft.sink.MergeWriter.SnapshotStore,
       mode: graft.sink.MergeWriter.MergeMode = graft.sink.MergeWriter.Accumulate,
       clock: Long => java.sql.Timestamp =
         _ => new java.sql.Timestamp(System.currentTimeMillis()),
-      onSummary: Seq[graft.model.VendorSummary] => Unit = _ => (),
-      exactlyOnce: Boolean = true)(
+      onSummary: Seq[graft.model.VendorSummary] => Unit = _ => ())(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.sink.MergeWriter
     val spark = batch.sparkSession
     val effStore = store match {
-      case MergeWriter.ParquetStore(path) if exactlyOnce =>
+      case MergeWriter.ParquetStore(path) =>
         if (MergeWriter.readBatchToken(spark, path).exists(_ >= batchId))
           return  // replayed batch: already committed, whole-batch no-op
         MergeWriter.TokenParquetStore(path, batchId)
-      case MergeWriter.JdbcStore(url, table, opts) if exactlyOnce =>
+      case MergeWriter.JdbcStore(url, table, opts) =>
         // same token-in-swap pattern through the DB: the token commits
         // in the swap's transaction (JdbcSnapshot.writeStagedToken)
         if (graft.sink.JdbcSnapshot.lastToken(url, table, opts).exists(_ >= batchId))

@@ -69,12 +69,14 @@ object MeasureGT {
       println(s"$name stored recall@5 = ${(brute & got).size.toDouble / brute.size}")
     }
     val tmpIdx = java.nio.file.Files.createTempDirectory("measuregt-idx").toString
-    graft.queries.VectorIndex.buildIvf(spark, dir, s"$tmpIdx/ivf")
-    storedRecall("ivf", graft.queries.VectorIndex.searchIvf(spark, s"$tmpIdx/ivf", qs, kNN = 6))
-    graft.queries.VectorIndex.buildPq(spark, dir, s"$tmpIdx/pq")
-    storedRecall("pq", graft.queries.VectorIndex.searchPq(spark, dir, s"$tmpIdx/pq", qs, kNN = 6))
-    graft.queries.VectorIndex.buildIvfPq(spark, dir, s"$tmpIdx/ivfpq")
-    storedRecall("ivfpq", graft.queries.VectorIndex.searchIvfPq(spark, dir, s"$tmpIdx/ivfpq", qs, kNN = 6))
+    try {
+      graft.queries.VectorIndex.buildIvf(spark, dir, s"$tmpIdx/ivf")
+      storedRecall("ivf", graft.queries.VectorIndex.searchIvf(spark, s"$tmpIdx/ivf", qs, kNN = 6))
+      graft.queries.VectorIndex.buildPq(spark, dir, s"$tmpIdx/pq")
+      storedRecall("pq", graft.queries.VectorIndex.searchPq(spark, dir, s"$tmpIdx/pq", qs, kNN = 6))
+      graft.queries.VectorIndex.buildIvfPq(spark, dir, s"$tmpIdx/ivfpq")
+      storedRecall("ivfpq", graft.queries.VectorIndex.searchIvfPq(spark, dir, s"$tmpIdx/ivfpq", qs, kNN = 6))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpIdx))
 
     // lang-id accuracy
     val li = TextQueries.tLangId(spark, dir)

@@ -50,4 +50,31 @@ class CompactSpec extends SparkSpec {
     assert(back.count() == 5100)
     assert(back.filter(col("vendor") === "a").count() == 5000)
   }
+
+  test("partitioned table: staging and aside copies sit beside the root; a partition left only aside is restored") {
+    val dir = Files.createTempDirectory("compacth").toString + "/t"
+    spark.range(5000).select(lit("a").as("vendor"), col("id"))
+      .repartition(16).write.partitionBy("vendor").parquet(dir)
+    spark.range(100).select(lit("b").as("vendor"), (col("id") + 10000).as("id"))
+      .coalesce(1).write.mode("append").partitionBy("vendor").parquet(dir)
+    def vendors = spark.read.parquet(dir).select("vendor").distinct().as[String].collect().toSet
+
+    // neither the compacted copy nor the restore can move in: vendor=a
+    // is left only in its aside copy, which readers must not see
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.refuse.impl", classOf[RefusingRenameFs].getName)
+    RefusingRenameFs.refused = Set("t/vendor=a")
+    try intercept[Exception](Compact.compactTable(spark, "refuse://" + dir, 1L << 30))
+    finally RefusingRenameFs.refused = Set.empty
+    assert(vendors == Set("b"))
+
+    val res = Compact.compactTable(spark, dir, targetBytes = 1L << 30)
+      .map(r => r.partition -> r).toMap
+    assert(res.keySet == Set("vendor=a", "vendor=b"))
+    assert(res("vendor=a").rewritten && res("vendor=a").filesAfter == 1)
+    assert(vendors == Set("a", "b"))
+    assert(spark.read.parquet(dir).count() == 5100)
+    val residue = new java.io.File(dir).getParentFile.list().toSet - "t"
+    assert(residue.isEmpty, s"left beside the table: $residue")
+  }
 }

@@ -278,8 +278,9 @@ class EventQueriesSpec extends SparkSpec {
       .map { case (u, t, e, tp, v) =>
         (u, java.sql.Timestamp.valueOf(t), e, tp, v) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    df.write.mode("overwrite").parquet("/tmp/graft_scd2_fixture/events.parquet")
-    val got = EventQueries.k7Scd2(spark, "/tmp/graft_scd2_fixture")
+    val fixture = s"${sys.props("java.io.tmpdir")}/graft_scd2_fixture"
+    df.write.mode("overwrite").parquet(s"$fixture/events.parquet")
+    val got = EventQueries.k7Scd2(spark, fixture)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
         Option(r.getString(3)).orNull, r.getBoolean(4))).toSet

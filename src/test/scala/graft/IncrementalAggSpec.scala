@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.IncrementalAgg
@@ -52,6 +52,23 @@ class IncrementalAggSpec extends SparkSpec {
     assert(asMap(out) == expected)
     // state on disk is the refreshed one (re-read, not the returned plan)
     assert(asMap(spark.read.parquet(store)) == expected)
+  }
+
+  test("state left only in __old by a crashed commit heals: refresh and replay gate") {
+    val dir = Files.createTempDirectory("graft-incragg-heal").toString
+    val store = s"$dir/agg_state"
+    assert(IncrementalAgg.refreshOnce(spark, store, d1, spec, 1L))
+    assert(IncrementalAgg.refreshOnce(spark, store, d2, spec, 2L))
+    // the crash window between the commit's two renames
+    def crash(): Unit = Files.move(Paths.get(store), Paths.get(store + "__old"))
+    crash()
+    val expected = asMap(IncrementalAgg.partial(full, spec))
+    assert(asMap(IncrementalAgg.refresh(spark, store, d3, spec)) == expected)
+    crash()
+    // the token came back with the state: a replay stays a no-op
+    assert(!IncrementalAgg.refreshOnce(spark, store, d2, spec, 2L))
+    assert(asMap(spark.read.parquet(store)) == expected)
+    assert(!Files.exists(Paths.get(store + "__old")))
   }
 
   test("HLL distinct state: mergeable across refreshes, estimate exact at small card") {

@@ -9,8 +9,8 @@ import graft.plans.RecursiveSqlBridge
   * Fixpoint semantics pinned against hand-computed fixtures on a
   * CYCLIC graph (the case UNION ALL recursion cannot terminate on),
   * shape-detection guards pinned at the unit level. The six oracle
-  * texts themselves are covered by SqlGatewaySpec's inventory (now
-  * the whole set) and by PortableScan. */
+  * texts themselves are covered by SqlGatewaySpec's inventory, which
+  * runs every oracle text through `spark.sql`. */
 class RecursiveSqlBridgeSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =

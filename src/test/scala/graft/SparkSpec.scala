@@ -9,6 +9,16 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  // SqlGateway.open's parser mode is session-wide, and Spark warns
+  // that the conf is deprecated on every copy of the session conf
+  // (each streaming micro-batch makes one): a suite that opened the
+  // gateway hands the shared session on without it
+  override def afterAll(): Unit = {
+    val escaped = "spark.sql.parser.escapedStringLiterals"
+    if (spark.conf.getOption(escaped).contains("true")) spark.conf.unset(escaped)
+    super.afterAll()
+  }
+
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 

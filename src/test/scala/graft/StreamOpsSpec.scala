@@ -141,10 +141,11 @@ class StreamOpsSpec extends SparkSpec {
       (2L, t("2026-01-01 12:30:00"), 4L, "click", 999.0),
       (1L, t("2026-01-01 15:00:00"), 5L, "purchase", 120.0),
       (2L, t("2026-01-01 16:00:00"), 6L, "purchase", 80.0))
+    val fixture = s"${sys.props("java.io.tmpdir")}/graft_scd2s_fixture"
     all.toDF("user_id", "ts", "event_id", "event_type", "value")
-      .write.mode("overwrite").parquet("/tmp/graft_scd2s_fixture/events.parquet")
+      .write.mode("overwrite").parquet(s"$fixture/events.parquet")
     val batchClosed = graft.queries.EventQueries
-      .k7Scd2(spark, "/tmp/graft_scd2s_fixture")
+      .k7Scd2(spark, fixture)
       .filter(!col("is_current"))
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
@@ -175,7 +176,7 @@ class StreamOpsSpec extends SparkSpec {
     val streamed = spark.table("scd2us").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
         r.getString(3), r.getBoolean(4))).toSet
-    val dir = "/tmp/graft_scd2us_fixture"
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_scd2us_fixture"
     rows.toDF("user_id", "ts", "event_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val batchClosed = graft.queries.EventQueries.k7Scd2(spark, dir)
@@ -189,7 +190,7 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("k7_scd2 renders UTC intervals under a non-UTC session timezone") {
-    val dir = "/tmp/graft_scd2tz_fixture"
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_scd2tz_fixture"
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     Seq(
       (1L, t("2026-01-01 10:00:00"), 1L, "purchase", 150.0),
@@ -1405,7 +1406,7 @@ class StreamOpsSpec extends SparkSpec {
 
     def batchClosed(events: Seq[(Long, java.sql.Timestamp, Long, String, Double)],
         sealedBelow: java.sql.Timestamp) = {
-      val dir = "/tmp/graft_scd2late_fixture"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft_scd2late_fixture"
       events.toDF("user_id", "ts", "event_id", "event_type", "value")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       graft.queries.EventQueries.k7Scd2(spark, dir)

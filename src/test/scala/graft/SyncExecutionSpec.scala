@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import scala.util.Success
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
@@ -16,7 +17,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.{Schemas, VendorApi}
 import graft.ops.CacheScope
 import graft.pipeline.SyncJob
-import graft.sink.MergeWriter
+import graft.sink.{DirSwap, MergeWriter}
 import graft.streaming.StreamOps
 
 /** A sync runs its relational core ONCE: the stats action and the
@@ -138,19 +139,29 @@ class SyncExecutionSpec extends SparkSpec {
     assert(CacheScope.sqlCacheEmpty(spark), "cache left after a failed write")
   }
 
-  test("a refused snapshot rename fails the write loudly") {
+  /** A directory under the `refuse:` scheme (RefusingRenameFs). */
+  private def refuseDir(prefix: String): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.refuse.impl", classOf[RefusingRenameFs].getName)
-    val sink = "refuse://" + Files.createTempDirectory("graft-rename").toString + "/vp"
-    val df = Seq(("v-1", "p-1", "c", "wholecell"))
-      .toDF("vendorId", "product", "condition", "database")
-      .withColumn("selectedOptions", array().cast(ArrayType(Schemas.selectedOption)))
-      .withColumn("createdAt", lit(now)).withColumn("updatedAt", lit(now))
-    def refusing(names: String*)(body: => Unit): String = {
-      RefusingRenameFs.refused = names.toSet
-      try intercept[java.io.IOException](body).getMessage
-      finally RefusingRenameFs.refused = Set.empty
-    }
+    "refuse://" + Files.createTempDirectory(prefix).toString
+  }
+
+  /** The message of the IOException `body` throws while renames onto
+    * `names` are refused. */
+  private def refusing(names: String*)(body: => Unit): String = {
+    RefusingRenameFs.refused = names.toSet
+    try intercept[java.io.IOException](body).getMessage
+    finally RefusingRenameFs.refused = Set.empty
+  }
+
+  private def oneRow = Seq(("v-1", "p-1", "c", "wholecell"))
+    .toDF("vendorId", "product", "condition", "database")
+    .withColumn("selectedOptions", array().cast(ArrayType(Schemas.selectedOption)))
+    .withColumn("createdAt", lit(now)).withColumn("updatedAt", lit(now))
+
+  test("a refused snapshot rename fails the write loudly") {
+    val sink = refuseDir("graft-rename") + "/vp"
+    val df = oneRow
     // the staged snapshot cannot move in: nothing was written
     assert(refusing("vp")(MergeWriter.writeSnapshot(spark, df, sink))
       .startsWith("could not move new snapshot"))
@@ -160,16 +171,60 @@ class SyncExecutionSpec extends SparkSpec {
       .contains("aside"))
     assert(MergeWriter.readSnapshot(spark, sink).count() == 1)
   }
+
+  test("DirSwap: each refused rename throws, and the data is readable after the heal") {
+    val root = refuseDir("graft-dirswap")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (live, aside) = (new Path(s"$root/s"), new Path(s"$root/s__old"))
+    def staged(n: Long): Path = {
+      val p = new Path(s"$root/s__tmp")
+      spark.range(n).write.mode("overwrite").parquet(p.toString)
+      p
+    }
+    def rows = spark.read.parquet(live.toString).count()
+    DirSwap.commit(fs, staged(1), live, aside)
+    assert(rows == 1 && !fs.exists(aside))
+    // the live copy cannot move aside: it stays live
+    assert(refusing("s__old")(DirSwap.commit(fs, staged(2), live, aside)).contains("aside"))
+    assert(rows == 1)
+    // neither the new copy nor the restore can move in: the state is
+    // left only aside, and the heal (refused once) brings it back
+    assert(refusing("s")(DirSwap.commit(fs, staged(3), live, aside)).contains("nor restore"))
+    assert(!fs.exists(live) && fs.exists(aside))
+    assert(refusing("s")(DirSwap.heal(fs, live, aside)).startsWith("could not restore"))
+    DirSwap.heal(fs, live, aside)
+    assert(rows == 1 && !fs.exists(aside))
+    DirSwap.commit(fs, staged(4), live, aside)
+    assert(rows == 4 && !fs.exists(aside))
+
+    // per-vendor swaps keep their backups beside the table, and the
+    // snapshot read heals them
+    val sink = s"$root/vp"
+    MergeWriter.writeSnapshot(spark, oneRow, sink)
+    // (the Spark write's own task commits move a `vendorId=v-1` too,
+    // into the staging dir; only the move into the table is refused)
+    val vendorDir = "vendorId=v-1"
+    assert(refusing(s"vp/$vendorDir")(
+      MergeWriter.writeSnapshotVendors(spark, oneRow, sink, Seq("v-1"))).contains("nor restore"))
+    assert(fs.exists(new Path(s"${sink}__vold_$vendorDir")))
+    assert(refusing(s"vp/$vendorDir")(MergeWriter.readSnapshot(spark, sink))
+      .startsWith("could not restore"))
+    assert(MergeWriter.readSnapshot(spark, sink).count() == 1)
+    assert(!fs.exists(new Path(s"${sink}__vold_$vendorDir")))
+  }
 }
 
 /** The local filesystem under the `refuse:` scheme, whose rename
-  * answers `false` without moving anything when the target's name is
-  * in `refused` — the way Hadoop reports most rename failures. */
+  * answers `false` without moving anything when the target's name (or
+  * `<parent name>/<name>`) is in `refused` — the way Hadoop reports
+  * most rename failures. */
 class RefusingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("refuse:///")
   override def getScheme: String = "refuse"
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    !RefusingRenameFs.refused.contains(dst.getName) && super.rename(src, dst)
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    val names = Set(dst.getName, s"${dst.getParent.getName}/${dst.getName}")
+    (names & RefusingRenameFs.refused).isEmpty && super.rename(src, dst)
+  }
 }
 
 object RefusingRenameFs {
