@@ -12,9 +12,18 @@ import graft.model.Schemas
   * The reference does this in two in-memory Maps
   * (groupItemsByProductAndCondition at products.js:58-79,
   * createSelectedOptionsForWholecell at 83-191); here it is two
-  * hash aggregations with map-side partial combine — the group keys
-  * are real multi-column keys, not the reference's collision-prone
+  * aggregations over ONE exchange — the group keys are real
+  * multi-column keys, not the reference's collision-prone
   * `"{m}_{model}_{grade}"` string (SURVEY §7.4#5).
+  *
+  * The items are hash-partitioned on (vendorId, admin_id) once, up
+  * front. That one exchange satisfies the option-level group-by, the
+  * product-level group-by and the incoming side of the merge's
+  * full-outer join on (vendorId, product = admin_id)
+  * (`graft.sink.MergeWriter.merge`), which would otherwise each shuffle
+  * again. The map-side partial aggregate this gives up saved little:
+  * `collect_list` keeps every serial, so the partials shrink nothing
+  * but the counts.
   *
   * Deterministic choices pinned per SURVEY §7.4#1: option price is
   * min(dollars) (the reference takes first-seen under Map insertion
@@ -57,6 +66,7 @@ object OptionAgg {
       .filter(col("admin_id").isNotNull)
       .withColumn("variant",
         SyncExprs.resolveVariant(col("admin_storage"), col("capacity")))
+      .repartition(col("vendorId"), col("admin_id"))
       .groupBy(col("vendorId"), col("admin_id"), col("color"), col("variant"))
       .agg(
         count(lit(1)).cast("int").as("stock"),

@@ -89,6 +89,30 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), "theta-join fell to a cartesian")
   }
 
+  test("catalog match: one broadcast nested-loop join, no window, union or anti join") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.{col, struct}
+    import spark.implicits._
+    val admin = Seq(("ap-1", "Apple iPhone 12", "64GB"), ("ap-2", "Galaxy S21", "128GB"))
+      .toDF("_id", "name", "storage")
+      .select(col("_id"), col("name"), struct(col("storage")).as("specifications"))
+    val names = Seq("apple iphone 12", "S21", "Galaxy").toDF("vendorName").distinct()
+    val df = graft.ops.CatalogMatch.matchCatalog(names, admin)
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.size == 1, p.toString)
+    assert(p.collect { case w: WindowExec => w }.isEmpty, p.toString)
+    assert(p.collect { case u: UnionExec => u }.isEmpty, p.toString)
+    assert(p.collect { case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty,
+      p.toString)
+    assert(df.count() == 3)
+  }
+
   test("ann brute force: query side broadcast; dot product is the native expression") {
     val df = VectorQueries.annBruteTopk(spark, dir)
     val plan = planString(df)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.{Schemas, VendorApi}
@@ -63,26 +64,14 @@ class SyncExecutionSpec extends SparkSpec {
     here ++ inner.flatMap(fullOuterJoins)
   }
 
-  /** Number of SQL executions inside `body` that RAN a full-outer
-    * join: executions whose plan holds such a join whose output-row
-    * metric grew since the previous execution that held it. A plan
-    * that only reads the join's cached output does not count. */
-  private def joinExecutions(body: => Unit): Int = {
-    val seen = new java.util.IdentityHashMap[SparkPlan, java.lang.Long]()
-    var ran = 0
+  /** Run `body`, calling `seen` on every SQL execution it finishes,
+    * in order, as each finishes. */
+  private def onExecutions(seen: QueryExecution => Unit)(body: => Unit): Unit = {
     val done = new java.util.concurrent.CountDownLatch(1)
     val sentinel = spark.range(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe eq sentinel.queryExecution) done.countDown()
-        else {
-          val grew = fullOuterJoins(qe.executedPlan).map { j =>
-            val rows = j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
-            val before = Option(seen.put(j, rows)).map(_.longValue).getOrElse(0L)
-            rows > before
-          }
-          if (grew.contains(true)) ran += 1
-        }
+        if (qe eq sentinel.queryExecution) done.countDown() else seen(qe)
       override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -93,7 +82,35 @@ class SyncExecutionSpec extends SparkSpec {
       sentinel.collect()
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Number of SQL executions inside `body` that RAN a full-outer
+    * join: executions whose plan holds such a join whose output-row
+    * metric grew since the previous execution that held it. A plan
+    * that only reads the join's cached output does not count. */
+  private def joinExecutions(body: => Unit): Int = {
+    val seen = new java.util.IdentityHashMap[SparkPlan, java.lang.Long]()
+    var ran = 0
+    onExecutions { qe =>
+      val grew = fullOuterJoins(qe.executedPlan).map { j =>
+        val rows = j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+        val before = Option(seen.put(j, rows)).map(_.longValue).getOrElse(0L)
+        rows > before
+      }
+      if (grew.contains(true)) ran += 1
+    }(body)
     ran
+  }
+
+  // shuffle exchanges from `p` down to the first join below it,
+  // looking through AQE stages, reads and cached relations
+  private def exchangesAboveJoin(p: SparkPlan): Int = p match {
+    case _: BaseJoinExec => 0
+    case a: AdaptiveSparkPlanExec => exchangesAboveJoin(a.executedPlan)
+    case q: QueryStageExec => exchangesAboveJoin(q.plan)
+    case m: InMemoryTableScanExec => exchangesAboveJoin(m.relation.cachedPlan)
+    case s: ShuffleExchangeLike => 1 + exchangesAboveJoin(s.child)
+    case o => o.children.map(exchangesAboveJoin).sum
   }
 
   test("one SyncJob.sync runs the merge's full-outer join in exactly one execution") {
@@ -112,6 +129,25 @@ class SyncExecutionSpec extends SparkSpec {
     }
     assert(runs == 1, s"the merge join ran in $runs executions")
     assert(MergeWriter.readBatchToken(spark, sink).contains(0L))
+  }
+
+  test("one StreamOps.syncBatch: one exchange from the item join to the merge's join") {
+    // the items are hash-partitioned on (vendorId, admin_id) once; both
+    // aggregates and the incoming side of the full-outer join on
+    // (vendorId, product = admin_id) reuse that partitioning
+    val sink = Files.createTempDirectory("graft-one-exchange").toString + "/vp"
+    sync(sink)
+    val batch = apis.map(a => a.vendorId -> payload(a.vendorId)).toDF("vendorId", "payload")
+    val joins = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    onExecutions(qe => fullOuterJoins(qe.executedPlan).foreach(joins.put(_, ()))) {
+      StreamOps.syncBatch(MergeWriter.ParquetStore(sink), clock = _ => now)(batch, 0L)
+    }
+    import scala.jdk.CollectionConverters._
+    val incoming = joins.keySet.asScala.toSeq.collect {
+      case j: BaseJoinExec => exchangesAboveJoin(j.right)
+    }
+    assert(incoming.nonEmpty, "no full-outer join ran")
+    assert(incoming.forall(_ == 1), s"exchanges on the incoming side: $incoming")
   }
 
   test("no cache outlives a sync: success, dry-run, failed write") {
