@@ -245,24 +245,27 @@ object SyncJob {
   }
 
   /** The relational core of ONE sync against a store: enrich → match
-    * → aggregate → MERGE → one-action A5 stats → snapshot write.
+    * → aggregate → MERGE → one-action A5 stats → k-vendor write.
     * Shared verbatim by the batch path (`syncStore`) and the
     * incremental path (`graft.streaming.StreamOps.syncBatch`):
     * SURVEY §7.4#7 — incremental sync IS the same MERGE writer fed
     * by micro-batches, so batch and streamed syncs can never drift
-    * semantically. Returns the per-vendor counters and the merged
+    * semantically. `token` commits with the written rows (a streamed
+    * sync's batch id). Returns the per-vendor counters and the merged
     * (unwritten) snapshot view for dry-run callers. */
   private[graft] def mergeItems(spark: SparkSession, allItems: DataFrame,
       okIds: Seq[String], store: MergeWriter.SnapshotStore,
       mode: MergeWriter.MergeMode, now: Timestamp,
-      dryRun: Boolean): (Map[String, VendorCounters], DataFrame) = {
+      dryRun: Boolean, token: Option[Long] = None): (Map[String, VendorCounters], DataFrame) = {
 
     // ONE execution of the relational core: the stats action fills the
     // caches, the write reads `merged` from them. They only accelerate:
     // a lost block recomputes from the OLD snapshot, which every store
-    // keeps until its write job ends (parquet tmp+rename, JDBC staged
-    // swap). Released blocking, merged first (no dependent recache), on
-    // success and failure, so nothing leaks into a SyncServer session.
+    // keeps until its write commits (parquet `__vtmp` + commit rename,
+    // JDBC staging table + transaction). Released blocking, merged
+    // first (no dependent recache), on success and failure, so nothing
+    // leaks into a SyncServer session. `matched` is one row per name,
+    // but two joins read it: uncached, each recomputes the match.
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cache(df: DataFrame) = { cached += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
     try {
@@ -281,29 +284,27 @@ object SyncJob {
         .select(col("vendorId"), col("vendorName"), col("grade")).distinct()
         .join(matched.select(col("vendorName"), col("admin_id")), Seq("vendorName"), "left")
 
-      // MERGE into the sink snapshot. When the store supports partial
-      // writes (parquet partitioned by vendorId), the snapshot READ is
-      // pre-filtered to this sync's vendors — partition pruning skips
-      // every other vendor's files — and the WRITE below swaps only
-      // those vendors' partition directories. A sync touching k of N
-      // vendors then scans and rewrites k partitions, not N (at 100 TB
-      // of sink the difference between a bounded incremental sync and a
-      // full-table rewrite per sync). Untouched vendors never enter the
-      // merge: their rows would all be action=keep, which the stats job
-      // ignores, so the summary is identical on both paths.
-      val partial = store.supportsPartialWrite && !dryRun
+      // MERGE into the sink snapshot. The snapshot READ is pre-filtered
+      // to this sync's vendors — partition pruning skips every other
+      // vendor's files — and the WRITE replaces only those vendors. A
+      // sync touching k of N vendors then scans and rewrites k
+      // partitions, not N (at 100 TB of sink, a bounded incremental sync
+      // instead of a full-table rewrite per sync). Untouched vendors
+      // never enter the merge: their rows would all be action=keep,
+      // which the stats job ignores. A dry run reads every vendor: the
+      // view it returns is the whole would-be snapshot.
       val existingAll = store.read(spark)
       val existing =
-        if (partial) existingAll.filter(col("vendorId").isin(okIds: _*))
-        else existingAll
+        if (dryRun) existingAll
+        else existingAll.filter(col("vendorId").isin(okIds: _*))
       val merged = cache(MergeWriter.merge(existing, incoming, mode, now))
 
       // ALL per-vendor A5 counters in ONE action: the three stat
       // families (fetch totals, valid/skipped groups, merge actions +
       // written stock) are tagged into one union and aggregated in a
       // single job — one driver round-trip per sync instead of three.
-      // Collected BEFORE the snapshot swap: the merge leg lazily reads
-      // the OLD snapshot files, which writeSnapshot deletes.
+      // Collected BEFORE the write: the merge leg lazily reads the OLD
+      // vendor files, which the write's commit deletes.
       val zero = lit(0L)
       val fetchLeg = enriched.groupBy(col("vendorId"))
         .agg(count(lit(1)).as("fetched"))
@@ -334,10 +335,7 @@ object SyncJob {
             r.getLong(1), r.getLong(2), r.getLong(3),
             r.getLong(4), r.getLong(5), r.getLong(6))).toMap
 
-      if (!dryRun) {
-        if (partial) store.writeVendors(spark, merged.drop("action"), okIds)
-        else store.write(spark, merged.drop("action"))
-      }
+      if (!dryRun) store.writeVendors(spark, merged.drop("action"), okIds, token)
 
       (stats, merged.drop("action"))
     } finally cached.reverseIterator.foreach(_.unpersist(blocking = true))

@@ -30,8 +30,7 @@ object JdbcSnapshot {
   private val optionsJsonCol = "selectedOptions_json"
 
   /** Write a vendorProduct-shaped frame to a JDBC table (full
-    * snapshot overwrite — the same semantics as MergeWriter's
-    * parquet swap). Strings keep the dialect's default mapping
+    * overwrite; writeVendors stages its rows through it). Strings keep the dialect's default mapping
     * (CLOB on Derby): forcing VARCHAR via createTableColumnTypes
     * breaks the writer's setNull (the dialect still declares CLOB
     * parameters) and caps values at 32k; instead the READ side
@@ -73,7 +72,7 @@ object JdbcSnapshot {
     try f(conn) finally conn.close()
   }
 
-  private def exec(conn: java.sql.Connection, sql: String): Unit = {
+  private def exec(conn: java.sql.Connection, sql: String): Int = {
     val st = conn.createStatement()
     try st.executeUpdate(sql) finally st.close()
   }
@@ -81,21 +80,10 @@ object JdbcSnapshot {
   private def tryExec(conn: java.sql.Connection, sql: String): Boolean =
     try { exec(conn, sql); true } catch { case _: java.sql.SQLException => false }
 
-  /** `RENAME TABLE a TO b` (Derby/MySQL) with an `ALTER TABLE a
-    * RENAME TO b` fallback (Postgres et al) — the ONE definition both
-    * staged-write paths share, so a dialect fix lands everywhere.
-    * NOT safe inside an explicit transaction on engines with
-    * transaction-level statement aborts (Postgres): the failed probe
-    * statement poisons the transaction — writeStagedToken probes the
-    * dialect with [[renameSyntax]] BEFORE opening its transaction. */
-  private def renameTable(conn: java.sql.Connection,
-      from: String, to: String): Boolean =
-    tryExec(conn, s"RENAME TABLE $from TO $to") ||
-      tryExec(conn, s"ALTER TABLE $from RENAME TO $to")
-
-  /** Determine the dialect's working rename statement OUTSIDE any
-    * transaction (a throwaway probe table under a clearly RESERVED
-    * name), so the tokened swap's transaction body issues only
+  /** Determine the dialect's working rename statement — `RENAME TABLE
+    * a TO b` (Derby/MySQL) or `ALTER TABLE a RENAME TO b` (Postgres et
+    * al) — OUTSIDE any transaction (a throwaway probe table under a
+    * clearly RESERVED name), so a transaction body issues only
     * statements that succeed — on Postgres a failed `RENAME TABLE`
     * aborts the whole transaction, which would make the
     * try-then-fallback pattern unusable there. Probed ONCE per URL
@@ -110,7 +98,7 @@ object JdbcSnapshot {
       // per-probe random suffix: two writers sharing one database can
       // never race on the probe table (a fixed name would let writer
       // B's DROP delete writer A's in-flight probe and fail A's first
-      // tokened write), and a pre-existing user table can never be
+      // write), and a pre-existing user table can never be
       // silently dropped. CREATE is retried on a fresh name rather
       // than hard-failed, for the same shared-database reason.
       var attempts = 0
@@ -137,15 +125,16 @@ object JdbcSnapshot {
       finally st.close()
     } catch { case _: java.sql.SQLException => false }
 
-  /** Repair an interrupted staged swap. `_stg` is only promoted when
+  /** Repair an interrupted staged swap of the full-table writer older
+    * versions used (this object no longer writes `_stg`; the table a
+    * crash left there is still healed). `_stg` is only promoted when
     * `_old` ALSO exists: the old-table rename happens strictly after
     * the staging write completes, so table-missing + _old-present
     * proves the crash hit the swap window and `_stg` is a COMPLETE
     * new snapshot. Without `_old` (a first-ever sync whose staging
     * write itself crashed) `_stg` may be PARTIAL — promoting it would
     * turn half-written rows into accumulated state — so it is left
-    * for the next write to overwrite and the read correctly sees
-    * first-sync-empty. Called before every staged write AND before
+    * alone and the read correctly sees first-sync-empty. Called before every write AND before
     * JdbcStore.read, so a crashed sync self-heals instead of reading
     * table-missing as an empty snapshot and erasing the accumulated
     * state on the next write. */
@@ -154,41 +143,14 @@ object JdbcSnapshot {
     withConnection(url, options) { conn =>
       if (!tableExists(conn, table) && tableExists(conn, table + "_stg") &&
           tableExists(conn, table + "_old")) {
-        require(renameTable(conn, table + "_stg", table),
-          s"crashed swap recovery: could not rename ${table}_stg to $table")
+        exec(conn, renameSyntax(conn, url)(table + "_stg", table))
         tryExec(conn, s"DROP TABLE ${table}_old")
       }
     }
 
-  /** Write via STAGING TABLE + RENAME swap: the overwrite of `table`
-    * itself would TRUNCATE the table a lazy merge plan is still
-    * reading — on a cluster, an executor losing its cached blocks
-    * after the truncate would silently recompute partitions from the
-    * now-empty source and corrupt the accumulated sink state. Staging
-    * first means the live table stays readable (and is the recompute
-    * source) until every row is durably written; the swap is then
-    * metadata-only renames. A crash inside the swap window leaves the
-    * complete new snapshot in `_stg`; recoverStagedSwap (run before
-    * every staged write and every JdbcStore.read) completes the
-    * interrupted swap. */
-  def writeStaged(df: DataFrame, url: String, table: String,
-      options: Map[String, String] = Map.empty): Unit = {
-    recoverStagedSwap(url, table, options)
-    val staging = table + "_stg"
-    val old = table + "_old"
-    write(df, url, staging, options)
-    withConnection(url, options) { conn =>
-      tryExec(conn, s"DROP TABLE $old")
-      renameTable(conn, table, old) // fails harmlessly on the first sync
-      require(renameTable(conn, staging, table),
-        s"could not rename staging table $staging to $table")
-      tryExec(conn, s"DROP TABLE $old")
-    }
-  }
-
   private def tokenTable(table: String) = table + "_token"
 
-  /** Last batch token committed with the snapshot swap (None before
+  /** Last batch token committed with the vendor rows (None before
     * the first tokened write) — the JDBC twin of
     * MergeWriter.readBatchToken. */
   def lastToken(url: String, table: String,
@@ -205,44 +167,59 @@ object JdbcSnapshot {
       }
     }
 
-  /** Staged write that commits `token` IN THE SAME TRANSACTION as the
-    * swap renames — the TokenParquetStore pattern (token and data
-    * become visible together) carried to the JDBC sink. The staging
-    * write itself runs executor-parallel OUTSIDE the transaction (the
-    * live table stays the readable merge source until every row is
-    * durable); the commit point is then one driver transaction of
-    * metadata renames + the one-row token upsert. Exactly-once holds
-    * on engines with TRANSACTIONAL DDL (Derby — the verification
-    * harness — and Postgres); an engine that autocommits DDL (MySQL)
-    * degrades to at-least-once with the same crash windows as the
-    * untokened path, which recoverStagedSwap already heals. */
-  def writeStagedToken(df: DataFrame, url: String, table: String,
-      token: Long, options: Map[String, String] = Map.empty): Unit = {
+  /** The one sink write: replace ONLY `vendors`' rows, leaving every
+    * other vendor's stored rows untouched — the JDBC analog of the
+    * parquet vendor-directory write. The touched rows stage
+    * executor-parallel into `<table>_vstg` (the live table stays the
+    * readable merge source until every row is durable), then ONE
+    * driver-side transaction deletes the old vendor rows,
+    * INSERT..SELECTs the staged ones server-side and upserts `token`
+    * (when set) — other vendors are never read, written, or locked
+    * beyond the row deletes, and a crash before commit rolls back to
+    * the pre-sync rows and token. On the first sync (no table yet) the
+    * transaction renames the staged table into place instead. The
+    * token table is created and the rename dialect probed OUTSIDE the
+    * transaction: a failed statement inside it aborts the whole
+    * transaction on Postgres. Exactly-once for the first sync's rename
+    * assumes transactional DDL (Derby — the verification harness — and
+    * Postgres); the DML commit is transactional everywhere. */
+  def writeVendors(df: DataFrame, url: String, table: String,
+      vendors: Seq[String], token: Option[Long] = None,
+      options: Map[String, String] = Map.empty): Unit = {
     recoverStagedSwap(url, table, options)
-    val staging = table + "_stg"
-    val old = table + "_old"
-    write(df, url, staging, options)
+    val staging = table + "_vstg"
+    // the DELETE below touches only `vendors`' rows, so a frame
+    // smuggling an extra vendor would INSERT duplicates for keys that
+    // were never deleted — filter staging to the declared vendors
+    write(df.filter(col("vendorId").isin(vendors: _*)), url, staging, options)
     withConnection(url, options) { conn =>
-      tryExec(conn, s"DROP TABLE $old")
-      // the token table exists OUTSIDE the swap transaction (CREATE
-      // once, first tokened write) so the transaction body is pure
-      // rename + one-row DML; the rename dialect is probed outside
-      // too — a failed probe statement inside would abort the whole
-      // transaction on Postgres
-      if (!tableExists(conn, tokenTable(table)))
+      if (token.nonEmpty && !tableExists(conn, tokenTable(table)))
         exec(conn, s"CREATE TABLE ${tokenTable(table)} (tok BIGINT)")
+      val first = !tableExists(conn, table)
       val rename = renameSyntax(conn, url)
-      val haveLive = tableExists(conn, table)
       conn.setAutoCommit(false)
       try {
-        if (haveLive) exec(conn, rename(table, old)) // absent on the first sync
-        exec(conn, rename(staging, table))
-        val up = conn.createStatement()
-        try {
-          if (up.executeUpdate(
-              s"UPDATE ${tokenTable(table)} SET tok = $token") == 0)
-            up.executeUpdate(s"INSERT INTO ${tokenTable(table)} VALUES ($token)")
-        } finally up.close()
+        if (first) exec(conn, rename(staging, table)) // the staged rows ARE the snapshot
+        else {
+          // column list from the JSON-projected frame, quoted exactly as
+          // the Spark JDBC writer created them (case-preserving quotes)
+          val cols = df.withColumn(optionsJsonCol, to_json(col("selectedOptions")))
+            .drop("selectedOptions")
+            .schema.fieldNames.map(n => "\"" + n + "\"").mkString(", ")
+          // Derby stores Spark-written strings as CLOB, and CLOB
+          // equality is unsupported — the CAST forces a comparable
+          // VARCHAR (Derby's documented workaround; harmless on
+          // engines that store plain VARCHAR)
+          val del = conn.prepareStatement(
+            s"""DELETE FROM $table WHERE CAST("vendorId" AS VARCHAR(512)) = ?""")
+          try vendors.foreach { v => del.setString(1, v); del.executeUpdate() }
+          finally del.close()
+          exec(conn, s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
+        }
+        token.foreach { t =>
+          if (exec(conn, s"UPDATE ${tokenTable(table)} SET tok = $t") == 0)
+            exec(conn, s"INSERT INTO ${tokenTable(table)} VALUES ($t)")
+        }
         conn.commit()
       } catch {
         case e: Throwable =>
@@ -250,59 +227,7 @@ object JdbcSnapshot {
           throw e
       }
       conn.setAutoCommit(true)
-      tryExec(conn, s"DROP TABLE $old")
-    }
-  }
-
-  /** Partial write: replace ONLY `vendors`' rows, leaving every other
-    * vendor's stored rows untouched — the JDBC analog of the parquet
-    * partition-directory swap. The touched rows stage
-    * executor-parallel into `<table>_vstg`, then ONE driver-side
-    * transaction deletes the old vendor rows and INSERT..SELECTs the
-    * staged ones server-side — other vendors are never read, written,
-    * or locked beyond the row deletes, and a crash before commit
-    * rolls back to the pre-sync state (strictly better than the
-    * parquet path's per-vendor window). Falls back to a fresh full
-    * write when the table doesn't exist yet (first sync: every vendor
-    * is a touched vendor). */
-  def writeVendors(df: DataFrame, url: String, table: String,
-      vendors: Seq[String], options: Map[String, String] = Map.empty): Unit = {
-    recoverStagedSwap(url, table, options)
-    val staging = table + "_vstg"
-    // Defensive contract guard, mirroring the parquet twin
-    // (MergeWriter.writeSnapshotVendors): the DELETE below touches
-    // only `vendors`' rows, so a frame smuggling an extra vendor
-    // would INSERT duplicates for keys that were never deleted —
-    // filter staging to the declared vendors instead.
-    write(df.filter(col("vendorId").isin(vendors: _*)), url, staging, options)
-    withConnection(url, options) { conn =>
-      if (!tableExists(conn, table)) {
-        // first sync: the staged rows ARE the whole snapshot
-        require(renameTable(conn, staging, table),
-          s"could not rename staging table $staging to $table")
-      } else {
-        // column list from the JSON-projected frame, quoted exactly as
-        // the Spark JDBC writer created them (case-preserving quotes)
-        val cols = df.withColumn(optionsJsonCol, to_json(col("selectedOptions")))
-          .drop("selectedOptions")
-          .schema.fieldNames.map(n => "\"" + n + "\"").mkString(", ")
-        conn.setAutoCommit(false)
-        // Derby stores Spark-written strings as CLOB, and CLOB
-        // equality is unsupported — the CAST forces a comparable
-        // VARCHAR (Derby's documented workaround; harmless on
-        // engines that store plain VARCHAR)
-        val del = conn.prepareStatement(
-          s"""DELETE FROM $table WHERE CAST("vendorId" AS VARCHAR(512)) = ?""")
-        try vendors.foreach { v => del.setString(1, v); del.executeUpdate() }
-        finally del.close()
-        val ins = conn.createStatement()
-        try ins.executeUpdate(
-          s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
-        finally ins.close()
-        conn.commit()
-        conn.setAutoCommit(true)
-        exec(conn, s"DROP TABLE $staging")
-      }
+      if (!first) exec(conn, s"DROP TABLE $staging")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
@@ -10,54 +11,45 @@ import graft.ops.OptionMerge
   * upsert to parquet, so the reference's per-group
   * `findOne`-then-`bulkWrite` (products.js:285-341 — an N+1 probe
   * followed by a batch) becomes ONE outer join against the current
-  * sink snapshot, one projection, and a snapshot rewrite:
+  * sink snapshot, one projection, and a k-vendor write:
   *
   *   incoming FULL OUTER JOIN existing ON (vendorId, product,
   *   condition) → matched rows merge options (A4), right-only rows
   *   keep, left-only rows insert.
   *
-  * Scale design: the snapshot is parquet partitioned by vendorId, so
-  * a 1000-executor rewrite is partition-parallel. A sync that touches
-  * k of N vendors goes through writeSnapshotVendors — only those k
-  * vendors' partition directories are rewritten and (via SyncJob's
-  * pre-filtered snapshot read) only their files scanned; the
-  * full-table swap remains for full-sync semantics and
-  * non-partitionable stores. The join shuffles on the 3-column key
-  * with AQE handling skew.
+  * Scale design: the snapshot is parquet partitioned by vendorId, and
+  * every write goes through writeSnapshotVendors. A sync that touches
+  * k of N vendors reads (SyncJob pre-filters the snapshot read) and
+  * rewrites only those k vendors' partition directories, like the
+  * reference's one unordered bulkWrite that touches only the
+  * documents a sync changed (products.js:339-341). The join shuffles
+  * on the 3-column key with AQE handling skew.
   */
 object MergeWriter {
 
   /** Pluggable snapshot backend: the merge logic is identical whether
     * the sink state lives in a keyed parquet table or a JDBC table
     * (the reference's sink is a live database — JdbcStore is the
-    * closer analog; ParquetStore is the lakehouse form). */
+    * closer analog; ParquetStore is the lakehouse form). Both write k
+    * of N vendors and commit the optional batch token at the same
+    * point as the data, so a replayed streamed batch is a no-op. */
   trait SnapshotStore {
     def read(spark: SparkSession): DataFrame
-    def write(spark: SparkSession, df: DataFrame): Unit
-    /** Whether writeVendors is implemented. When true, a sync that
-      * touches k of N vendors can hand this store a frame holding
-      * ONLY those k vendors' merged rows — the other N-k vendors'
-      * stored rows must survive untouched. When false, callers must
-      * always write the FULL snapshot through `write` (handing a
-      * partial frame to `write` would erase the missing vendors). */
-    def supportsPartialWrite: Boolean = false
     /** Replace only `vendors`' rows with `df` (which holds exactly
       * those vendors' rows); every other vendor is left untouched.
-      * Only callable when supportsPartialWrite. */
+      * `token`, when set, becomes visible together with the rows. */
     def writeVendors(spark: SparkSession, df: DataFrame,
-        vendors: Seq[String]): Unit =
-      throw new UnsupportedOperationException(
-        s"$this does not support partial writes")
+        vendors: Seq[String], token: Option[Long] = None): Unit
+    /** The last batch token committed with the data, if any. */
+    def lastToken(spark: SparkSession): Option[Long]
   }
 
   final case class ParquetStore(path: String) extends SnapshotStore {
     def read(spark: SparkSession): DataFrame = readSnapshot(spark, path)
-    def write(spark: SparkSession, df: DataFrame): Unit =
-      writeSnapshot(spark, df, path)
-    override def supportsPartialWrite: Boolean = true
-    override def writeVendors(spark: SparkSession, df: DataFrame,
-        vendors: Seq[String]): Unit =
-      writeSnapshotVendors(spark, df, path, vendors)
+    def writeVendors(spark: SparkSession, df: DataFrame,
+        vendors: Seq[String], token: Option[Long]): Unit =
+      writeSnapshotVendors(spark, df, path, vendors, token)
+    def lastToken(spark: SparkSession): Option[Long] = readBatchToken(spark, path)
   }
 
   /** JDBC-backed snapshot (see JdbcSnapshot for type mapping). */
@@ -93,31 +85,11 @@ object MergeWriter {
         case _ => false
       }
     }
-    def write(spark: SparkSession, df: DataFrame): Unit =
-      // Staging-table + rename swap: the lazy merge plan reads `table`,
-      // and overwriting it in place would truncate its own source (a
-      // persist()+count() barrier only protects until an executor
-      // loses cached blocks and recomputes from the truncated table —
-      // safe in local mode only). The staged write leaves the live
-      // table untouched until every merged row is durable.
-      JdbcSnapshot.writeStaged(df, url, table, options)
-    override def supportsPartialWrite: Boolean = true
-    override def writeVendors(spark: SparkSession, df: DataFrame,
-        vendors: Seq[String]): Unit =
-      JdbcSnapshot.writeVendors(df, url, table, vendors, options)
-  }
-
-  /** JdbcStore variant whose every write commits `token` inside the
-    * staged swap's transaction (JdbcSnapshot.writeStagedToken) — the
-    * TokenParquetStore twin for live-DB sinks, with the same
-    * no-partial-write trade: one commit point needs ONE transaction,
-    * so streamed exactly-once syncs write the full snapshot. */
-  final case class TokenJdbcStore(url: String, table: String, token: Long,
-      options: Map[String, String] = Map.empty) extends SnapshotStore {
-    private val inner = JdbcStore(url, table, options)
-    def read(spark: SparkSession): DataFrame = inner.read(spark)
-    def write(spark: SparkSession, df: DataFrame): Unit =
-      JdbcSnapshot.writeStagedToken(df, url, table, token, options)
+    def writeVendors(spark: SparkSession, df: DataFrame,
+        vendors: Seq[String], token: Option[Long]): Unit =
+      JdbcSnapshot.writeVendors(df, url, table, vendors, token, options)
+    def lastToken(spark: SparkSession): Option[Long] =
+      JdbcSnapshot.lastToken(url, table, options)
   }
 
   sealed trait MergeMode
@@ -130,16 +102,14 @@ object MergeWriter {
   private val keyCols = Seq("vendorId", "product", "condition")
 
   /** Read the current sink snapshot, or an empty frame with the sink
-    * schema when the table doesn't exist yet. Heals any interrupted
-    * swap FIRST: a crashed write leaves a vendor only in its `__vold_`
-    * backup (or the whole snapshot only in `__old`), and reading
-    * without restoring it would hand the merge a snapshot missing that
-    * state — the next write would then reset it to `insert`. */
+    * schema when the table doesn't exist yet. Heals FIRST (see
+    * `heal`): reading past an interrupted write would hand the merge a
+    * snapshot missing a vendor, and the next write would reset that
+    * vendor's rows to `insert`. */
   def readSnapshot(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.healBeside(fs, p, VendorAside)
-    DirSwap.heal(fs, p, DirSwap.old(p))
+    heal(fs, p)
     if (fs.exists(p))
       spark.read.schema(Schemas.vendorProduct).parquet(path)
     else
@@ -192,91 +162,79 @@ object MergeWriter {
       col("action"))
   }
 
-  /** Atomically replace the snapshot at `path` (write to a temp dir,
-    * then swap) — parquet partitioned by vendorId. The frame is
-    * repartitioned on vendorId first: without it every upstream task
-    * writes a file into every vendor directory it has rows for
-    * (tasks × vendors small files — the classic partitionBy
-    * explosion); with it each vendor's rows land in one task → one
-    * file per partition directory. AQE coalescing keeps the shuffle
-    * cheap when vendors are few. */
-  def writeSnapshot(spark: SparkSession, df: DataFrame, path: String): Unit =
-    writeSnapshot(spark, df, path, None)
-
-  /** As writeSnapshot, optionally committing a batch TOKEN atomically
-    * with the data: the token file is written INTO the staged
-    * directory before the swap, so token and snapshot become visible
-    * in the same rename — a replayed micro-batch whose token is
-    * already committed can be detected and skipped (exactly-once for
-    * foreachBatch sinks; see StreamOps.syncBatch). The `_`-prefixed
-    * file is invisible to parquet readers. */
-  def writeSnapshot(spark: SparkSession, df: DataFrame, path: String,
-      token: Option[Long]): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "__tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    df.select(Schemas.vendorProduct.fieldNames.map(col).toSeq: _*)
-      .repartition(col("vendorId"))
-      // sorted by (vendorId, product): the dynamic-partition write
-      // REQUIRES ordering by the partition column — matching that
-      // prefix means the planner injects no extra sort, and the
-      // product suffix gives each vendor file row-group min/max
-      // stats so point lookups (J4's existence probes, S7) skip row
-      // groups instead of scanning the vendor
-      .sortWithinPartitions(col("vendorId"), col("product"))
-      .write.mode("overwrite").partitionBy("vendorId").parquet(tmp.toString)
-    token.foreach(DirSwap.writeToken(fs, tmp, TokenFile, _))
-    DirSwap.commit(fs, tmp, p, DirSwap.old(p))
-  }
-
   private val TokenFile = "_graft_batch"
-  // where a per-vendor swap keeps the previous copy, beside the table
+  // where a vendor move keeps the previous copy, beside the table
   private val VendorAside = "__vold_"
+  // a complete staged write; its existence is the commit point
+  private def committed(p: Path) = new Path(p.toString + "__vcommit")
 
   /** Last batch token committed with the snapshot (None before the
-    * first tokened write, or for untokened snapshots). */
+    * first tokened write). Heals first, like every read. */
   def readBatchToken(spark: SparkSession, path: String): Option[Long] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.heal(fs, p, DirSwap.old(p))
+    heal(fs, p)
     DirSwap.readToken(fs, p, TokenFile)
   }
 
-  /** ParquetStore variant whose every write commits `token` in the
-    * same rename as the data — the exactly-once sink for streamed
-    * syncs. Deliberately NO partial-vendor writes: the token must
-    * ride ONE atomic swap, and k independent partition renames
-    * cannot carry one commit point (a transactional table format is
-    * the at-scale answer; batch syncs keep the k-partition path via
-    * plain ParquetStore). */
-  final case class TokenParquetStore(path: String, token: Long) extends SnapshotStore {
-    def read(spark: SparkSession): DataFrame = readSnapshot(spark, path)
-    def write(spark: SparkSession, df: DataFrame): Unit =
-      writeSnapshot(spark, df, path, Some(token))
+  /** Crash recovery, run by every read and write of the sink: restore
+    * a snapshot left only in `<path>__old` (by the full-table swap
+    * older writers used), restore each vendor left only in its
+    * `__vold_` copy, then roll a committed write forward. Recovery,
+    * not concurrency control: the sink has a single writer. */
+  private def heal(fs: FileSystem, p: Path): Unit = {
+    DirSwap.heal(fs, p, DirSwap.old(p))
+    DirSwap.healBeside(fs, p, VendorAside)
+    rollForward(fs, p)
   }
 
-  /** Partition-overwrite variant of writeSnapshot: rewrites ONLY the
-    * given vendors' `vendorId=` partition directories and leaves every
-    * other vendor's files byte-identical — the optimal write path when
-    * a sync touches k of N vendors (the reference's bulkWrite likewise
-    * only touches changed documents, products.js:339-341). `df` must
-    * hold exactly `vendors`' rows (the caller pre-filters; at 100 TB
-    * the caller also pre-filters the snapshot READ to those vendors,
-    * so a k-vendor sync scans and writes k partitions, not N).
+  /** Move every vendor directory staged in `<path>__vcommit` into the
+    * table (DirSwap.commit, previous copy at `__vold_<dir>`), then the
+    * token, then drop `__vcommit`. Each step consumes its source, so
+    * rerunning after a crash redoes exactly what was left undone. */
+  private def rollForward(fs: FileSystem, p: Path): Unit = {
+    val done = committed(p)
+    if (!fs.exists(done)) return
+    if (!fs.exists(p)) fs.mkdirs(p)
+    val staged = fs.listStatus(done).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("vendorId=")).sortBy(_.getName)
+    for (d <- staged)
+      DirSwap.commit(fs, d, new Path(p, d.getName), new Path(p.toString + VendorAside + d.getName))
+    val token = new Path(done, TokenFile)
+    if (fs.exists(token)) {
+      val live = new Path(p, TokenFile)
+      fs.delete(live, false)
+      if (!fs.rename(token, live))
+        throw new IOException(s"could not move batch token $token into $p")
+    }
+    fs.delete(done, true)
+  }
+
+  /** The one sink write: replace ONLY `vendors`' `vendorId=`
+    * partition directories with `df`'s rows for them, leaving every
+    * other vendor's files byte-identical, and commit `token` (when
+    * set) with them. `df` should hold exactly `vendors`' rows; others
+    * are filtered out. At 100 TB the caller also pre-filters the
+    * snapshot READ to those vendors, so a k-vendor sync scans and
+    * writes k partitions, not N.
     *
-    * Each vendor directory swaps through DirSwap.commit, like the
-    * full-snapshot path, with its backup beside the table. The swap
-    * is atomic per vendor but not across vendors: a crash mid-loop
-    * leaves some vendors new and some old — each still a consistent
-    * snapshot of SOME sync, which is the same guarantee class as the
-    * reference's non-transactional bulkWrite batches. Single-writer,
-    * like every sink path here. */
+    * The rows are written into `<path>__vtmp` — repartitioned on
+    * vendorId (one task → one file per vendor directory, not tasks ×
+    * vendors small files) and sorted by (vendorId, product): the
+    * dynamic-partition write needs the vendorId order anyway, and the
+    * product suffix gives each file row-group min/max stats that point
+    * lookups skip on. The token goes into `__vtmp` too. ONE checked
+    * rename of `__vtmp` to `<path>__vcommit` is the commit point;
+    * `rollForward` then moves each vendor and the token into the
+    * table. A crash before the rename leaves the old snapshot and
+    * token (the next write drops the stale `__vtmp`); a crash after it
+    * is finished by the next `heal`, which every reader runs first, so
+    * the k vendors and the token become visible together. */
   def writeSnapshotVendors(spark: SparkSession, df: DataFrame, path: String,
-      vendors: Seq[String]): Unit = {
+      vendors: Seq[String], token: Option[Long] = None): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.healBeside(fs, p, VendorAside)
+    heal(fs, p)
     val tmp = new Path(path + "__vtmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     df.select(Schemas.vendorProduct.fieldNames.map(col).toSeq: _*)
@@ -284,16 +242,9 @@ object MergeWriter {
       .repartition(col("vendorId"))
       .sortWithinPartitions(col("vendorId"), col("product"))
       .write.mode("overwrite").partitionBy("vendorId").parquet(tmp.toString)
-    if (!fs.exists(p)) fs.mkdirs(p)
-    // swap the partition dirs the write actually produced (listing tmp
-    // rather than constructing names keeps Spark's partition-value
-    // escaping out of our hands); each backup sits beside the table
-    val written = fs.listStatus(tmp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("vendorId="))
-    for (st <- written) {
-      val name = st.getPath.getName
-      DirSwap.commit(fs, st.getPath, new Path(p, name), new Path(path + VendorAside + name))
-    }
-    fs.delete(tmp, true)
+    token.foreach(DirSwap.writeToken(fs, tmp, TokenFile, _))
+    if (!fs.rename(tmp, committed(p)))
+      throw new IOException(s"could not commit $tmp as ${committed(p)}")
+    rollForward(fs, p)
   }
 }

@@ -4130,18 +4130,24 @@ object StreamOps {
     * `writeStream.foreachBatch(mergeBatch(...))`: each micro-batch of
     * sink-shaped records (vendorId, product, condition,
     * selectedOptions, database) runs the same J4/A4/K1 merge as the
-    * batch pipeline. State lives in the sink table itself, exactly
-    * like the reference — no Spark state store needed. */
+    * batch pipeline against its own vendors' rows, and writes only
+    * those vendors. State lives in the sink table itself, exactly like
+    * the reference — no Spark state store needed. At-least-once: no
+    * token, so a replayed batch merges again (see syncBatch). */
   def mergeBatch(sinkPath: String,
       mode: graft.sink.MergeWriter.MergeMode = graft.sink.MergeWriter.Accumulate)(
       batch: DataFrame, batchId: Long): Unit = {
+    import graft.sink.MergeWriter
     val spark = batch.sparkSession
-    val existing = graft.sink.MergeWriter.readSnapshot(spark, sinkPath)
-    val merged = graft.sink.MergeWriter.merge(existing, batch, mode,
+    val vendors = batch.select(col("vendorId")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    val existing = MergeWriter.readSnapshot(spark, sinkPath)
+      .filter(col("vendorId").isin(vendors: _*))
+    val merged = MergeWriter.merge(existing, batch, mode,
       new java.sql.Timestamp(System.currentTimeMillis()))
-    // one execution: the lazy plan reads the old snapshot files, which
-    // writeSnapshot's tmp+rename swap keeps until the write job is done
-    graft.sink.MergeWriter.writeSnapshot(spark, merged.drop("action"), sinkPath)
+    // one execution: the lazy plan reads the old vendor files, which
+    // the write keeps until its commit
+    MergeWriter.writeSnapshotVendors(spark, merged.drop("action"), sinkPath, vendors)
   }
 
   /** Incremental END-TO-END sync — SURVEY §7.4#7 made concrete: each
@@ -4165,50 +4171,30 @@ object StreamOps {
     * specs); `onSummary` receives the per-vendor A5 summaries the
     * batch route returns from its HTTP response.
     *
-    * Replay (foreachBatch's documented failure mode): on a
-    * ParquetStore OR a JdbcStore, each batch's id is committed as a
-    * token INSIDE the snapshot swap — token and data become visible in
-    * the same rename / the same DB transaction (mvMaintainBatch's
-    * token-with-state pattern applied to the sink), so a replayed
-    * batch is detected and becomes a no-op (no re-merge, no summary).
-    * Streamed syncs therefore trade away partial-vendor writes: one
-    * commit point needs ONE atomic swap (k independent partition
-    * renames can't carry it — a transactional table format is the
-    * at-scale answer). JDBC exactly-once additionally assumes
-    * transactional DDL (Derby, Postgres; see
-    * JdbcSnapshot.writeStagedToken). Another store keeps its own write
-    * path and at-least-once replay: Replace mode is naturally
-    * idempotent, Accumulate can double-fold a replayed batch. */
+    * Exactly-once under foreachBatch's replay: the batch id is the
+    * store's token, committed at the same point as the batch's
+    * vendor rows (the parquet commit rename, the JDBC transaction), so
+    * a replayed batch whose token is already committed is a no-op (no
+    * re-merge, no summary). Like a batch sync, it reads and writes
+    * only the k vendors in the batch. */
   def syncBatch(store: graft.sink.MergeWriter.SnapshotStore,
       mode: graft.sink.MergeWriter.MergeMode = graft.sink.MergeWriter.Accumulate,
       clock: Long => java.sql.Timestamp =
         _ => new java.sql.Timestamp(System.currentTimeMillis()),
       onSummary: Seq[graft.model.VendorSummary] => Unit = _ => ())(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.sink.MergeWriter
     val spark = batch.sparkSession
-    val effStore = store match {
-      case MergeWriter.ParquetStore(path) =>
-        if (MergeWriter.readBatchToken(spark, path).exists(_ >= batchId))
-          return  // replayed batch: already committed, whole-batch no-op
-        MergeWriter.TokenParquetStore(path, batchId)
-      case MergeWriter.JdbcStore(url, table, opts) =>
-        // same token-in-swap pattern through the DB: the token commits
-        // in the swap's transaction (JdbcSnapshot.writeStagedToken)
-        if (graft.sink.JdbcSnapshot.lastToken(url, table, opts).exists(_ >= batchId))
-          return  // replayed batch: already committed, whole-batch no-op
-        MergeWriter.TokenJdbcStore(url, table, batchId, opts)
-      case s => s
-    }
-    // vendor set of THIS batch: bounded by vendor count, the same
-    // k-of-N partial-write path as a filtered batch sync
+    if (store.lastToken(spark).exists(_ >= batchId))
+      return  // replayed batch: already committed, whole-batch no-op
+    // vendor set of THIS batch: bounded by vendor count
     val okIds = batch.select(col("vendorId")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (okIds.nonEmpty) {
       val items = graft.sources.HttpSource.parseItemsDistributed(
         batch.select(col("vendorId"), col("payload")))
       val (stats, _) = graft.pipeline.SyncJob.mergeItems(
-        spark, items, okIds, effStore, mode, clock(batchId), dryRun = false)
+        spark, items, okIds, store, mode, clock(batchId), dryRun = false,
+        token = Some(batchId))
       onSummary(okIds.map { id =>
         val c = stats.getOrElse(id,
           graft.pipeline.SyncJob.VendorCounters(0, 0, 0, 0, 0, 0))

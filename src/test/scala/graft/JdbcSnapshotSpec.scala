@@ -60,20 +60,20 @@ class JdbcSnapshotSpec extends SparkSpec {
       Seq(Row("o", "Black", "128GB", 1, 10L, 10L, Seq("ESN"))), t0, t0)
     val url = derbyUrl
     val store = JdbcStore(url, "vendor_products")
-    store.write(spark, spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(vp("v-1"))), Schemas.vendorProduct))
+    store.writeVendors(spark, spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(vp("v-1"))), Schemas.vendorProduct), Seq("v-1"))
     // merged-snapshot shape: a LAZY union of the live table with new
     // rows, handed straight to write with NO materialization barrier.
     // An in-place overwrite would truncate the table this plan reads
-    // (silently losing v-1 on recompute); the staging swap must not.
+    // (silently losing v-1 on recompute); the staged write must not.
     val merged = store.read(spark).unionByName(spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(vp("v-2"))), Schemas.vendorProduct))
-    store.write(spark, merged)
+    store.writeVendors(spark, merged, Seq("v-1", "v-2"))
     val after = store.read(spark).collect().map(_.getString(0)).toSet
     assert(after == Set("v-1", "v-2"))
     // and the staging/backup tables are gone
     intercept[Exception] { JdbcSnapshot.readTable(spark, url,
-      "vendor_products_stg").collect() }
+      "vendor_products_vstg").collect() }
     intercept[Exception] { JdbcSnapshot.readTable(spark, url,
       "vendor_products_old").collect() }
   }
@@ -88,7 +88,6 @@ class JdbcSnapshotSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows), Schemas.vendorProduct)
     val url = derbyUrl
     val store = JdbcStore(url, "vendor_products")
-    assert(store.supportsPartialWrite)
     // first sync through the partial path: creates the table
     store.writeVendors(spark, df(vp("v-1", 1, t0), vp("v-2", 1, t0)), Seq("v-1", "v-2"))
     // second sync touches only v-2 (new stock, new timestamp)

@@ -234,8 +234,8 @@ class PlanSpec extends SparkSpec {
     val t0 = java.sql.Timestamp.valueOf("2026-08-12 00:00:00")
     val rows = Seq("v-1", "v-2", "v-3").map(v => Row(v, s"ap-$v", "c", "wholecell",
       Seq(Row("o", "Black", "128GB", 1, 10L, 10L, Seq("E"))), t0, t0))
-    MergeWriter.writeSnapshot(spark, spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), Schemas.vendorProduct), sink)
+    MergeWriter.writeSnapshotVendors(spark, spark.createDataFrame(
+      spark.sparkContext.parallelize(rows), Schemas.vendorProduct), sink, Seq("v-1", "v-2", "v-3"))
     // the k-of-N sync pre-filters the snapshot read on vendorId —
     // that filter must reach the scan as a PartitionFilter, so a
     // one-vendor sync lists one vendor directory, not N. The string

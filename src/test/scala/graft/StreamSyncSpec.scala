@@ -158,10 +158,37 @@ class StreamSyncSpec extends SparkSpec {
     // leaves live snapshot and token untouched (the transaction is
     // the commit point — nothing became visible)
     val committed = canon(store.read(spark))
-    graft.sink.JdbcSnapshot.write(store.read(spark).limit(0), url, "vp_stg")
+    graft.sink.JdbcSnapshot.write(store.read(spark).limit(0), url, "vp_vstg")
     assert(canon(store.read(spark)) == committed,
       "an uncommitted staging table leaked into the live snapshot")
     assert(graft.sink.JdbcSnapshot.lastToken(url, "vp").contains(1L))
+  }
+
+  test("a streamed sync writes k of N: the untouched vendor's partition files stay byte-identical") {
+    import spark.implicits._
+    spark.conf.set("graft.sync.admin.path", resourcePath("admin_products.json"))
+    val sink = Files.createTempDirectory("graft-stream-partial").toString + "/vp"
+    def run(bid: Int, payload: Int): Unit = StreamOps.syncBatch(
+      MergeWriter.ParquetStore(sink), MergeWriter.Accumulate, now)(
+      payloads(payload).toDF("vendorId", "payload"), bid.toLong)
+    def fingerprint(sub: String): Map[String, String] = {
+      val dir = new java.io.File(s"$sink/$sub")
+      assert(dir.isDirectory, s"$sub missing")
+      dir.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        f.getName -> md.digest(Files.readAllBytes(f.toPath))
+          .map("%02x".format(_)).mkString
+      }.toMap
+    }
+    run(0, payload = 2) // both vendors land
+    val v100Before = fingerprint("vendorId=v-100")
+    val v200Before = fingerprint("vendorId=v-200")
+    assert(v100Before.nonEmpty)
+    run(1, payload = 1) // touches only v-200
+    assert(fingerprint("vendorId=v-100") == v100Before,
+      "untouched vendor's files were rewritten")
+    assert(fingerprint("vendorId=v-200") != v200Before)
+    assert(MergeWriter.readBatchToken(spark, sink).contains(1L))
   }
 
   test("full-swap crash window recovers: snapshot only in __old") {

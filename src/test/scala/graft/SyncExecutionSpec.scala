@@ -164,8 +164,10 @@ class SyncExecutionSpec extends SparkSpec {
 
     val refusing = new MergeWriter.SnapshotStore {
       def read(spark: SparkSession): DataFrame = MergeWriter.readSnapshot(spark, sink)
-      def write(spark: SparkSession, df: DataFrame): Unit =
+      def writeVendors(spark: SparkSession, df: DataFrame, vendors: Seq[String],
+          token: Option[Long]): Unit =
         throw new java.io.IOException("store refused the write")
+      def lastToken(spark: SparkSession): Option[Long] = None
     }
     spark.conf.set("graft.sync.admin.path", resourcePath("admin_products.json"))
     val e = intercept[java.io.IOException] {
@@ -198,13 +200,13 @@ class SyncExecutionSpec extends SparkSpec {
   test("a refused snapshot rename fails the write loudly") {
     val sink = refuseDir("graft-rename") + "/vp"
     val df = oneRow
-    // the staged snapshot cannot move in: nothing was written
-    assert(refusing("vp")(MergeWriter.writeSnapshot(spark, df, sink))
-      .startsWith("could not move new snapshot"))
-    MergeWriter.writeSnapshot(spark, df, sink)
-    // the live snapshot cannot move aside: it stays live and readable
-    assert(refusing("vp__old")(MergeWriter.writeSnapshot(spark, df, sink))
-      .contains("aside"))
+    def write() = MergeWriter.writeSnapshotVendors(spark, df, sink, Seq("v-1"))
+    // the staged write cannot be committed: nothing was written
+    assert(refusing("vp__vcommit")(write()).startsWith("could not commit"))
+    assert(MergeWriter.readSnapshot(spark, sink).count() == 0)
+    write()
+    // the live vendor cannot move aside: it stays live and readable
+    assert(refusing("vp__vold_vendorId=v-1")(write()).contains("aside"))
     assert(MergeWriter.readSnapshot(spark, sink).count() == 1)
   }
 
@@ -236,7 +238,7 @@ class SyncExecutionSpec extends SparkSpec {
     // per-vendor swaps keep their backups beside the table, and the
     // snapshot read heals them
     val sink = s"$root/vp"
-    MergeWriter.writeSnapshot(spark, oneRow, sink)
+    MergeWriter.writeSnapshotVendors(spark, oneRow, sink, Seq("v-1"))
     // (the Spark write's own task commits move a `vendorId=v-1` too,
     // into the staging dir; only the move into the table is refused)
     val vendorDir = "vendorId=v-1"
@@ -247,6 +249,61 @@ class SyncExecutionSpec extends SparkSpec {
       .startsWith("could not restore"))
     assert(MergeWriter.readSnapshot(spark, sink).count() == 1)
     assert(!fs.exists(new Path(s"${sink}__vold_$vendorDir")))
+  }
+
+  // a tokened 2-vendor streamed sync of both fixture vendors
+  private def envelopes = apis.map(a => a.vendorId -> payload(a.vendorId))
+    .toDF("vendorId", "payload")
+  private def syncBatch(sink: String, id: Long): Unit =
+    StreamOps.syncBatch(MergeWriter.ParquetStore(sink), clock = _ => now)(envelopes, id)
+  private def canon(sink: String): Seq[String] =
+    MergeWriter.readSnapshot(spark, sink).collect().map(_.toString).toSeq.sorted
+  // every file under the sink, with its bytes' hash
+  private def files(sink: String): Map[String, Int] = {
+    val root = new java.io.File(new java.net.URI(sink).getPath)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(root).map(f => root.toPath.relativize(f.toPath).toString ->
+      java.util.Arrays.hashCode(Files.readAllBytes(f.toPath))).toMap
+  }
+
+  test("commit window: a refused commit rename leaves files and token, and the replay merges once") {
+    val root = refuseDir("graft-commit-pre")
+    val sink = s"$root/vp"
+    val clean = Files.createTempDirectory("graft-commit-pre-ref").toString + "/vp"
+    Seq(sink, clean).foreach(syncBatch(_, 0L))
+    syncBatch(clean, 1L)
+    val before = files(sink)
+    assert(refusing("vp__vcommit")(syncBatch(sink, 1L)).startsWith("could not commit"))
+    assert(files(sink) == before, "a write that never committed changed the live files")
+    assert(MergeWriter.readBatchToken(spark, sink).contains(0L))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"${sink}__vtmp")))
+    // the replay drops the stale staged write and merges the batch once
+    syncBatch(sink, 1L)
+    assert(!fs.exists(new Path(s"${sink}__vtmp")))
+    assert(MergeWriter.readBatchToken(spark, sink).contains(1L))
+    assert(canon(sink) == canon(clean), "the replayed batch did not merge exactly once")
+  }
+
+  test("commit window: a crash after the commit rename is rolled forward by the next read") {
+    val root = refuseDir("graft-commit-post")
+    val sink = s"$root/vp"
+    val clean = Files.createTempDirectory("graft-commit-post-ref").toString + "/vp"
+    Seq(sink, clean).foreach(syncBatch(_, 0L))
+    syncBatch(clean, 1L)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // v-100 moves in, v-200 (and its restore) is refused: the state a
+    // crash between the two vendor moves leaves
+    assert(refusing("vp/vendorId=v-200")(syncBatch(sink, 1L)).contains("nor restore"))
+    assert(fs.exists(new Path(s"${sink}__vcommit")))
+    // the next read heals: both vendors new, the token with them
+    assert(canon(sink) == canon(clean), "the committed write was not rolled forward")
+    assert(MergeWriter.readBatchToken(spark, sink).contains(1L))
+    assert(!fs.exists(new Path(s"${sink}__vcommit")))
+    // and the replay is a no-op: Accumulate stock is not doubled
+    syncBatch(sink, 1L)
+    assert(canon(sink) == canon(clean), "the replay merged a committed batch again")
   }
 }
 
