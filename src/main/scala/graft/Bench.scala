@@ -14,6 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `queries_warm` re-runs the same plan immediately after (its own
   * persists still live), separating steady-state plan cost from
   * first-touch warmup. `value` totals the cold runs.
+  * `BENCH_SELF.json` also carries each query's `routes`: the route
+  * gates' decisions in its cold run (see [[Route]]).
   */
 object Bench {
 
@@ -103,11 +105,13 @@ object Bench {
     * under-report them. A run that throws still yields its
     * time-to-failure, so every map keeps one row per query, and the
     * query's name is returned beside the measurements so the record
-    * can say that its time is not a measurement. */
+    * can say that its time is not a measurement. Each query's route
+    * decisions in its cold run come back keyed by name. */
   private[graft] def measurePass(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      runsPerQuery: Int): (Measured, Set[String]) = {
+      runsPerQuery: Int): (Measured, Set[String], Map[String, Map[String, Route.Decision]]) = {
     var failed = Set.empty[String]
+    var routes = Map.empty[String, Map[String, Route.Decision]]
     val measured = queries.map { case (name, fn) =>
       def timed(run: String): Double = {
         val t0 = System.nanoTime()
@@ -117,14 +121,16 @@ object Bench {
           System.err.println(s"[bench] $name ($run) failed: ${e.getMessage}") }
         (System.nanoTime() - t0) / 1e9
       }
+      Route.take()
       val cold = timed("cold")
+      routes += name -> Route.take()
       val warms = (1 until runsPerQuery).map(i => timed(s"warm$i"))
       spark.catalog.clearCache()
       System.err.println(f"[bench] $name%-24s cold $cold%8.2fs  warm " +
         warms.map(w => f"$w%.2fs").mkString(" "))
       (name, cold, warms)
     }
-    (measured, failed)
+    (measured, failed, routes)
   }
 
   def main(args: Array[String]): Unit = {
@@ -164,10 +170,12 @@ object Bench {
     val runsPerQuery = math.max(2, runsRequested)
     // a query that threw in any pass is listed in `failed`
     var failed = Set.empty[String]
+    var routes = Map.empty[String, Map[String, Route.Decision]]
     def measureAll(): Measured = {
-      val (m, f) = measurePass(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+      val (m, f, r) = measurePass(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
         runsPerQuery)
       failed ++= f
+      routes ++= r
       m
     }
     // AUTO-RETRY on load pollution: multiple recorded rounds shipped
@@ -212,9 +220,11 @@ object Bench {
     // capture path once truncated its tail and silently dropped the
     // first 7 queries from the recorded artifact — the file is the
     // complete record regardless of any pipe buffer length.
+    // The file alone also carries each query's route decisions.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SELF.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (json + "\n").getBytes("UTF-8"))
+      (json.dropRight(1) + ",\"routes\":" + Verify.routesJson(routes) + "}\n")
+        .getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     // The full line above is ~8k chars at 96 queries, and the driver

@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * routes.json — each query's route-gate decisions (see [[Route]]).
+  * `-Dspark.graft.route.dist=*` runs every query on its at-scale
+  * routes against the same oracle. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -9,7 +12,9 @@ object Verify {
     val spark = Session.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    var routes = Map.empty[String, Map[String, Route.Decision]]
     val failures = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      Route.take()
       val r = try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -20,6 +25,7 @@ object Verify {
         println(s"[verify] FAILED $name: ${e.getMessage}")
         Some(name -> String.valueOf(e.getMessage))
       }
+      routes += name -> Route.take()
       // several pipelines persist() intermediates; without clearing,
       // every prior query's cache stays resident for the next one
       // (same isolation rule Bench applies)
@@ -33,8 +39,15 @@ object Verify {
     // queries that threw (no output dir) instead of silently
     // skipping them
     Verify.writeDumpManifests(outDir, SparkEntry.queries.keys.toSeq)
+    Files.writeString(Paths.get(s"$outDir/routes.json"), routesJson(routes))
     spark.stop()
   }
+
+  /** query → that query's route decisions, as one JSON object. */
+  private[graft] def routesJson(byQuery: Map[String, Map[String, Route.Decision]]): String =
+    byQuery.toSeq.sortBy(_._1)
+      .map { case (q, ds) => jsonStr(q) + ":" + Route.json(ds) }
+      .mkString("{", ",", "}")
 
   /** JSON string escape: backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL would otherwise

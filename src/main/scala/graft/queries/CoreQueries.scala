@@ -334,8 +334,10 @@ object CoreQueries {
       .transform(graft.ops.CacheScope.owned(_, o))
   }
 
-  /** Hot-key ratio above which the auto-routed window queries pick
-    * their two-phase decomposition: the hottest key owning ≥ 8× the
+  /** Budget of the six skew gates (running_total, quantiles, topk,
+    * funnel, asof, sessionize — see [[twoPhase]]): the hot-key ratio
+    * at which the auto-routed window queries pick their two-phase
+    * decomposition: the hottest key owning ≥ 8× the
     * mean key's rows means the one-pass window's biggest sort task is
     * ≥ 8× the average — the point where per-key ordered windows stop
     * scaling with executors and the bucketed/salted form wins. Below
@@ -453,12 +455,12 @@ object CoreQueries {
     ratio
   }
 
-  /** Route taken by the most recent auto-dispatched queries, for the
-    * spec and for operators reading the decision (query name →
-    * "one-pass" | "two-phase"). */
-  @volatile private[graft] var lastAutoRoutes: Map[String, String] = Map.empty
-  private[graft] def recordRoute(q: String, twoPhase: Boolean): Unit =
-    lastAutoRoutes += q -> (if (twoPhase) "two-phase" else "one-pass")
+  /** A skew gate: local (one-pass) while `df`'s [[keySkewRatio]] on
+    * `key` stays below AutoSkewThreshold, dist (two-phase) from it
+    * on. A forced gate runs no probe scan. */
+  private[graft] def twoPhase(gate: String, df: DataFrame, key: Column): Boolean =
+    !graft.Route.local(df.sparkSession, gate, AutoSkewThreshold, strict = true)(
+      keySkewRatio(df, key))
 
   /** W6: the running total with AUTOMATIC one-pass vs two-phase
     * selection — the stats-driven dispatch the two-phase family was
@@ -474,10 +476,8 @@ object CoreQueries {
     runningTotalAutoOf(Tables.orders(spark, dir))
 
   private[graft] def runningTotalAutoOf(orders: DataFrame): DataFrame = {
-    val twoPhase =
-      keySkewRatio(orders, col("o_custkey")) >= AutoSkewThreshold
-    recordRoute("running_total", twoPhase)
-    if (twoPhase) runningTotalTwoPhaseOf(orders)
+    if (twoPhase("running_total", orders, col("o_custkey")))
+      runningTotalTwoPhaseOf(orders)
     else {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -600,10 +600,8 @@ object CoreQueries {
     quantilesAutoOf(Tables.orders(spark, dir))
 
   private[graft] def quantilesAutoOf(orders: DataFrame): DataFrame = {
-    val twoPhase =
-      keySkewRatio(orders, col("o_orderstatus")) >= AutoSkewThreshold
-    recordRoute("quantiles", twoPhase)
-    if (twoPhase) quantilesTwoPhaseOf(orders)
+    if (twoPhase("quantiles", orders, col("o_orderstatus")))
+      quantilesTwoPhaseOf(orders)
     else quantilesOnePassOf(orders)
   }
 
@@ -911,10 +909,8 @@ object CoreQueries {
 
   private[graft] def topkAutoOf(customer: DataFrame,
       k: Int = 3, salts: Int = 16): DataFrame = {
-    val twoPhase =
-      keySkewRatio(customer, col("c_mktsegment")) >= AutoSkewThreshold
-    recordRoute("topk", twoPhase)
-    if (twoPhase) topkTwoPhaseOf(customer, k, salts)
+    if (twoPhase("topk", customer, col("c_mktsegment")))
+      topkTwoPhaseOf(customer, k, salts)
     else {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("c_acctbal").desc, col("c_custkey").asc)

@@ -408,9 +408,10 @@ object EventQueries {
 
   /** E14/E15/E16: the three event-family two-phase decompositions
     * with AUTOMATIC route selection — w6/w7's stats-driven dispatch
-    * (CoreQueries.keySkewRatio ≥ AutoSkewThreshold → the bucketed
-    * two-phase form; uniform keys → the one-pass window, whose single
-    * ordered scan per key is optimal). The probe is the same exact
+    * (the skew gate, CoreQueries.twoPhase: keySkewRatio ≥
+    * AutoSkewThreshold → the bucketed two-phase form; uniform keys →
+    * the one-pass window, whose single ordered scan per key is
+    * optimal). The probe is the same exact
     * per-key count (one narrow map-side-combinable agg — a rounding
     * error next to the window it sizes). All three decompositions are
     * proven result-identical to their one-pass forms (the e11/e12/e13
@@ -420,10 +421,8 @@ object EventQueries {
     funnelAutoOf(Tables.events(spark, dir))
 
   private[graft] def funnelAutoOf(events: DataFrame): DataFrame = {
-    val twoPhase = CoreQueries.keySkewRatio(events, col("user_id")) >=
-      CoreQueries.AutoSkewThreshold
-    CoreQueries.recordRoute("funnel", twoPhase)
-    if (twoPhase) funnelTwoPhaseOf(events) else funnelOf(events)
+    if (CoreQueries.twoPhase("funnel", events, col("user_id"))) funnelTwoPhaseOf(events)
+    else funnelOf(events)
   }
 
   /** See [[e14FunnelAuto]]. */
@@ -431,10 +430,8 @@ object EventQueries {
     asofAutoOf(Tables.events(spark, dir))
 
   private[graft] def asofAutoOf(events: DataFrame): DataFrame = {
-    val twoPhase = CoreQueries.keySkewRatio(events, col("user_id")) >=
-      CoreQueries.AutoSkewThreshold
-    CoreQueries.recordRoute("asof", twoPhase)
-    if (twoPhase) asofTwoPhaseOf(events) else e3AsofJoinOf(events)
+    if (CoreQueries.twoPhase("asof", events, col("user_id"))) asofTwoPhaseOf(events)
+    else e3AsofJoinOf(events)
   }
 
   /** See [[e14FunnelAuto]]. */
@@ -442,10 +439,8 @@ object EventQueries {
     sessionizeAutoOf(Tables.events(spark, dir))
 
   private[graft] def sessionizeAutoOf(events: DataFrame): DataFrame = {
-    val twoPhase = CoreQueries.keySkewRatio(events, col("user_id")) >=
-      CoreQueries.AutoSkewThreshold
-    CoreQueries.recordRoute("sessionize", twoPhase)
-    if (twoPhase) sessionizeTwoPhaseOf(events) else sessionizeOf(events)
+    if (CoreQueries.twoPhase("sessionize", events, col("user_id"))) sessionizeTwoPhaseOf(events)
+    else sessionizeOf(events)
   }
 
   /** E8: traffic-burst anomaly detection. An (event_type, hour)

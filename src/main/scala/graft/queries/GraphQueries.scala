@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Route
 import graft.sources.Tables
 
 /** Iterative graph dataflow over the star schema — the remaining
@@ -18,13 +19,13 @@ import graft.sources.Tables
   */
 object GraphQueries {
 
-  /** Nodes above this bound switch the superstep loop from the
-    * driver-merged partial-map form to the fully distributed
-    * join+agg form — the clustersOf `LocalFinishEdges` pattern: the
-    * bounded structure (here the rank/degree MODEL, graph vocabulary
-    * × one long — ~16 MB at a million nodes) lives locally while it
-    * fits, and the computation degrades to the shuffle form, never
-    * breaks, when it doesn't. */
+  /** Budget of the `model_nodes` gate: nodes above it switch the
+    * superstep loop from the driver-merged partial-map form to the
+    * fully distributed join+agg form — the clustersOf `local_finish`
+    * pattern: the bounded structure (here the rank/degree MODEL,
+    * graph vocabulary × one long — ~16 MB at a million nodes) lives
+    * locally while it fits, and the computation degrades to the
+    * shuffle form, never breaks, when it doesn't. */
   val LocalModelNodes: Long = 1000000L
 
   /** Driver-kernel worker count: the SESSION's declared core budget
@@ -73,32 +74,39 @@ object GraphQueries {
 
   private def orderPairs(li: DataFrame): DataFrame = pairsOf(orderSets(li))
 
-  /** Element budget for the collected basket model (round-17): the
+  /** Element budget of the `basket_model` gate (round-17): the
     * per-order part sets total ≤ 8M longs ≈ 64 MB — the same
-    * driver-object envelope as [[BroadcastClosingEdges]]. Under it
-    * (AND under the caller's pair budget) the pair explode, dedup
-    * exchange, and downstream kernel all run as driver loops; past
-    * it the distributed builds run unchanged. */
+    * driver-object envelope as [[BroadcastClosingEdges]], which is the
+    * gate's pair budget. Under both the pair explode, dedup exchange,
+    * and downstream kernel all run as driver loops; past either the
+    * distributed builds run unchanged. */
   private[graft] val BasketModelMaxElems: Long = 8000000L
 
-  /** Collect the per-order part sets when both budgets hold —
-    * decided by ONE tiny agg over the persisted sets frame (element
-    * count and exact canonical-pair-occurrence count), so the
-    * decision itself never collects. None past either budget. */
-  private def basketModelOf(sets: DataFrame, maxPairs: Long,
-      maxElems: Long = BasketModelMaxElems): Option[Array[Array[Long]]] = {
-    if (maxPairs <= 0) return None
-    val st = sets.agg(
-      coalesce(sum(size(col("ps")).cast("long")), lit(0L)),
-      coalesce(sum(expr(
-        "CAST(size(ps) AS BIGINT) * (size(ps) - 1) div 2")), lit(0L))).head
-    if (st.getLong(0) > maxElems || st.getLong(1) > maxPairs) None
-    else Some(sets.select(col("ps")).collect()
+  /** Collect the per-order part sets when the `basket_model` gate
+    * holds — its estimate is ONE tiny agg over the persisted sets
+    * frame (element count and exact canonical-pair-occurrence count),
+    * so the decision itself never collects. None past either budget. */
+  private def basketModelOf(sets: DataFrame): Option[Array[Array[Long]]] = {
+    val fits = basketGate(sets.sparkSession) {
+      val st = sets.agg(
+        coalesce(sum(size(col("ps")).cast("long")), lit(0L)),
+        coalesce(sum(expr(
+          "CAST(size(ps) AS BIGINT) * (size(ps) - 1) div 2")), lit(0L))).head
+      Seq(st.getLong(0).toDouble, st.getLong(1).toDouble)
+    }
+    if (fits) Some(sets.select(col("ps")).collect()
       .map(_.getSeq[Long](0).toArray))
+    else None
   }
 
-  /** Raw-row budget for the no-exchange basket collect: when the
-    * (orderkey, partkey) input itself is ≤ this many rows, the
+  /** The `basket_model` gate: (elements, canonical pairs) within
+    * (BasketModelMaxElems, BroadcastClosingEdges). */
+  private def basketGate(spark: SparkSession)(sizes: => Seq[Double]): Boolean =
+    Route.localAll(spark, "basket_model",
+      Seq(BasketModelMaxElems.toDouble, BroadcastClosingEdges.toDouble))(sizes)
+
+  /** Budget of the `raw_collect` gate, the no-exchange basket collect:
+    * when the (orderkey, partkey) input itself is ≤ this many rows, the
     * per-order sets are grouped on the driver from ONE scan-collect —
     * no order-sets exchange, no budget agg, no second collect (the
     * three jobs the sets-first decision costs). 8M narrow rows is the
@@ -109,10 +117,10 @@ object GraphQueries {
   private[graft] val RawCollectMaxRows: Long = 8000000L
 
   /** Generous upper bound on the bytes one input row can occupy —
-    * the short-circuit constant of the raw-collect gate. A TPC-H
+    * the cheap-bound constant of the `raw_collect` gate. A TPC-H
     * lineitem row is ~120 B raw / ~20 B in compressed parquet; 512 B
-    * is far above either, so `planBytes > maxRows * 512` PROVES the
-    * row count exceeds the budget (rows ≥ bytes / maxBytesPerRow)
+    * is far above either, so `planBytes > RawCollectMaxRows * 512`
+    * PROVES the row count exceeds the budget (rows ≥ bytes / 512)
     * and the exact count() gate job can be skipped. At 100 TB every
     * g-query's gate resolves from plan statistics (file lengths the
     * scan's file index already holds — zero jobs, zero extra RPCs);
@@ -125,17 +133,25 @@ object GraphQueries {
   /** Group raw (orderkey, partkey) rows into per-order DISTINCT,
     * sorted part sets — `collect_set`'s semantics (null parts
     * skipped, a null order key is its own group) replayed on the
-    * driver. Plan statistics, then one cheap count, gate the
-    * collect; the collected model is re-checked against the same
-    * elems/pairs budgets as [[basketModelOf]]. None past any budget —
-    * callers fall through to the distributed sets build unchanged. */
-  private def basketSetsRaw(li: DataFrame, maxPairs: Long,
-      maxElems: Long = BasketModelMaxElems,
-      maxRows: Long = RawCollectMaxRows): Option[Array[Array[Long]]] = {
-    if (maxPairs <= 0 || maxRows <= 0) return None
-    val planBytes = li.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (planBytes > BigInt(maxRows) * RawGateMaxBytesPerRow) return None
-    if (li.count() > maxRows) return None
+    * driver. The `raw_collect` gate (plan statistics, then one cheap
+    * count) guards the collect; the collected model then passes the
+    * same `basket_model` gate as [[basketModelOf]]. None past any
+    * budget — callers fall through to the distributed sets build
+    * unchanged. */
+  private[graft] def basketSetsRaw(li: DataFrame): Option[Array[Array[Long]]] = {
+    val spark = li.sparkSession
+    if (!Route.local(spark, "raw_collect", RawCollectMaxRows.toDouble,
+        bound = Route.statsBound(li, RawGateMaxBytesPerRow))(li.count().toDouble))
+      return None
+    // a forced basket_model gate never collects
+    lazy val sets = groupRaw(li)
+    if (basketGate(spark)(Seq(sets.map(_.length.toLong).sum.toDouble,
+        sets.map(s => s.length.toLong * (s.length - 1) / 2).sum.toDouble)))
+      Some(sets)
+    else None
+  }
+
+  private def groupRaw(li: DataFrame): Array[Array[Long]] = {
     // executor-parallel packing: each scan partition ships primitive
     // long arrays instead of boxed Rows (the driver's single-threaded
     // Row decode was most of this path's cost — the scan itself is
@@ -171,11 +187,9 @@ object GraphQueries {
         byOrder.getOrElseUpdate(o, mutable.ArrayBuffer.empty[Long]))
       if (nullOrderRows > 0) { nullOrderGroup = true; nullOrderSet ++= nullOrderParts }
     }
-    var elems = 0L
-    var pairs = 0L
     val groups = byOrder.valuesIterator ++
       (if (nullOrderGroup) Iterator.single(nullOrderSet) else Iterator.empty)
-    val sets = groups.map { b =>
+    groups.map { b =>
       val a = b.toArray
       java.util.Arrays.sort(a)
       var w = 0
@@ -184,20 +198,17 @@ object GraphQueries {
         if (i == 0 || a(i) != a(i - 1)) { a(w) = a(i); w += 1 }
         i += 1
       }
-      elems += w
-      pairs += w.toLong * (w - 1) / 2
       java.util.Arrays.copyOf(a, w)
     }.toArray
-    if (elems > maxElems || pairs > maxPairs) None else Some(sets)
   }
 
-  /** Canonical (a < b) support-thresholded edges of a collected
-    * basket model: pair OCCURRENCES packed and sorted, then
-    * run-length counted — the driver twin of
-    * `orderPairs.groupBy.count.filter(sup >= minSup)`. None when an
-    * id is outside the packed range (the distributed regime). */
-  private def supportEdgesLocal(sets: Array[Array[Long]],
-      minSup: Int): Option[Array[(Long, Long)]] = {
+  /** Every canonical (a < b) pair OCCURRENCE of a collected basket
+    * model, PACKED as (a << 31 | b) in one sorted primitive array —
+    * the boxing-free base of the driver kernels, which then iterate at
+    * memory speed. None when any id is outside [0, 2^31): that
+    * vocabulary scale is the distributed regime anyway (the
+    * basket-local paths decline and fall through). */
+  private def packedPairs(sets: Array[Array[Long]]): Option[Array[Long]] = {
     if (!sets.forall(_.forall(id => id >= 0 && id < (1L << 31)))) return None
     var n = 0
     sets.foreach { ps => n += ps.length * (ps.length - 1) / 2 }
@@ -216,51 +227,44 @@ object GraphQueries {
       }
     }
     java.util.Arrays.sort(packed)
+    Some(packed)
+  }
+
+  /** (a, b, occurrences) of each distinct pair in sorted packed
+    * occurrences with at least `minSup` of them — the run-length twin
+    * of `orderPairs.groupBy.count.filter(sup >= minSup)`. */
+  private def supportRuns(packed: Array[Long], minSup: Int): Array[(Long, Long, Long)] = {
     val mask = (1L << 31) - 1
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var i = 0
     while (i < packed.length) {
       var j = i
       while (j < packed.length && packed(j) == packed(i)) j += 1
-      if (j - i >= minSup) out += ((packed(i) >>> 31, packed(i) & mask))
+      if (j - i >= minSup) out += ((packed(i) >>> 31, packed(i) & mask, (j - i).toLong))
       i = j
     }
-    Some(out.toArray)
+    out.toArray
   }
 
+  /** Canonical (a < b) support-thresholded edges of a collected basket
+    * model. None when an id is outside the packed range. */
+  private def supportEdgesLocal(sets: Array[Array[Long]],
+      minSup: Int): Option[Array[(Long, Long)]] =
+    packedPairs(sets).map(supportRuns(_, minSup).map(r => (r._1, r._2)))
+
   /** Distinct canonical (a < b) edges of a collected basket model,
-    * PACKED as (a << 31 | b) in one sorted primitive array — the
-    * driver twin of `orderPairs(li).distinct()`, boxing-free so the
-    * graph kernels iterate at memory speed. None when any id is
-    * outside [0, 2^31): that vocabulary scale is the distributed
-    * regime anyway (the basket-local paths decline and fall through). */
-  private def packedCanonEdges(sets: Array[Array[Long]]): Option[Array[Long]] = {
-    if (!sets.forall(_.forall(id => id >= 0 && id < (1L << 31)))) return None
-    var n = 0
-    sets.foreach { ps => n += ps.length * (ps.length - 1) / 2 }
-    val packed = new Array[Long](n)
-    var k = 0
-    sets.foreach { ps =>
+    * packed and sorted — the driver twin of
+    * `orderPairs(li).distinct()`. */
+  private def packedCanonEdges(sets: Array[Array[Long]]): Option[Array[Long]] =
+    packedPairs(sets).map { packed =>
+      var w = 0
       var i = 0
-      while (i < ps.length) {
-        var j = i + 1
-        while (j < ps.length) {
-          val a = math.min(ps(i), ps(j)); val b = math.max(ps(i), ps(j))
-          packed(k) = (a << 31) | b; k += 1
-          j += 1
-        }
+      while (i < packed.length) {
+        if (i == 0 || packed(i) != packed(i - 1)) { packed(w) = packed(i); w += 1 }
         i += 1
       }
+      java.util.Arrays.copyOf(packed, w)
     }
-    java.util.Arrays.sort(packed)
-    var w = 0
-    var i = 0
-    while (i < packed.length) {
-      if (i == 0 || packed(i) != packed(i - 1)) { packed(w) = packed(i); w += 1 }
-      i += 1
-    }
-    Some(java.util.Arrays.copyOf(packed, w))
-  }
 
   /** Integer-exact PageRank over the part co-purchase graph (parts
     * sharing an order are linked — the item-importance signal a
@@ -282,7 +286,8 @@ object GraphQueries {
     * undirected edge ONCE; symmetrization is a narrow union/inline
     * flip after the shuffle.
     *
-    * Supersteps (node count ≤ LocalModelNodes): one job per
+    * Supersteps (node count ≤ LocalModelNodes, the `model_nodes`
+    * gate): one job per
     * iteration — a mapPartitions pass over the persisted primitive
     * pair RDD accumulates contributions into a per-partition
     * node-sized LongMap (both edge directions inline, so the
@@ -304,27 +309,19 @@ object GraphQueries {
     * recurrence; integer addition is order-free), pinned against
     * each other and a driver recompute in GraphQueriesSpec.
     */
-  def g1PageRank(spark: SparkSession, dir: String, iters: Int = 5,
-      localModelMax: Long = LocalModelNodes,
-      localFinishEdges: Int = BroadcastClosingEdges.toInt,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame =
+  def g1PageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
     g1PageRankOf(spark, Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey")), iters, localModelMax,
-      localFinishEdges, rawCollectMax)
+      .select(col("l_orderkey"), col("l_partkey")), iters)
 
   /** Input-injectable form (ProfileScale-style rehearsals feed a
     * replicated basket frame). */
   private[graft] def g1PageRankOf(spark: SparkSession, li: DataFrame,
-      iters: Int, localModelMax: Long,
-      localFinishEdges: Int = BroadcastClosingEdges.toInt,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame = {
+      iters: Int): DataFrame = {
     // RAW-COLLECT PATH (round-17, second pass): under the raw-row
     // budget even the order-sets exchange disappears — one gated
     // count and one no-shuffle scan collect feed the same kernel.
-    val raw = if (localModelMax > 0)
-      basketSetsRaw(li, maxPairs = localFinishEdges.toLong,
-        maxRows = rawCollectMax) else None
-    raw.flatMap(g1Kernel(spark, _, iters, localModelMax)) match {
+    val raw = basketSetsRaw(li)
+    raw.flatMap(g1Kernel(spark, _, iters)) match {
       case Some(out) => return out
       case None => ()
     }
@@ -332,26 +329,25 @@ object GraphQueries {
     // is expanding baskets into deduped pairs — two corpus exchanges
     // (order sets, pair dedup) plus a nodes distinct, all to feed a
     // model that already lives on the driver on the bounded path.
-    // When the collected sets fit the BasketModelMaxElems/pair
-    // budgets AND the node count fits localModelMax, everything after
+    // When the collected sets fit the basket_model budgets AND the
+    // node count fits the model_nodes budget, everything after
     // the one sets shuffle is driver arithmetic — the same integer
     // recurrence over the same deduped edges (order-free addition).
     val sets = orderSets(li).persist(StorageLevel.MEMORY_AND_DISK)
     // a raw model that collected but whose kernel declined (ids past
     // the packed range / nodes past the model bound) would decline
     // identically from basketModelOf — skip the re-collect
-    val model = if (localModelMax > 0 && raw.isEmpty)
-      basketModelOf(sets, maxPairs = localFinishEdges.toLong) else None
-    val localOut = model.flatMap(g1Kernel(spark, _, iters, localModelMax))
+    val model = if (raw.isEmpty) basketModelOf(sets) else None
+    val localOut = model.flatMap(g1Kernel(spark, _, iters))
     if (localOut.isDefined) { sets.unpersist(); return localOut.get }
     val canon = pairsOf(sets).distinct()
     val nodes = li.select(col("l_partkey").as("node")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = nodes.count()
 
     val out =
-      if (nNodes <= localModelMax)
-        localSupersteps(spark, canon, nodes, iters, localFinishEdges)
+      if (Route.local(spark, "model_nodes", LocalModelNodes.toDouble)(
+          nodes.count().toDouble))
+        localSupersteps(spark, canon, nodes, iters)
       else distributedSupersteps(canon, nodes, iters)
     nodes.unpersist(); sets.unpersist()
     out
@@ -359,16 +355,16 @@ object GraphQueries {
 
   /** Driver PageRank kernel over a collected basket model — the
     * identical integer recurrence as the superstep engines (addition
-    * is order-free, so all routes compute the same longs). None when
-    * the node count exceeds `localModelMax` or an id falls outside
-    * the packed range — callers fall through to the distributed
-    * builds. */
+    * is order-free, so all routes compute the same longs). None past
+    * the `model_nodes` gate or when an id falls outside the packed
+    * range — callers fall through to the distributed builds. */
   private def g1Kernel(spark: SparkSession, psArr: Array[Array[Long]],
-      iters: Int, localModelMax: Long): Option[DataFrame] = {
+      iters: Int): Option[DataFrame] = {
     import scala.collection.mutable
     val nodeSet = mutable.LongMap.empty[Unit]
     psArr.foreach(_.foreach(nodeSet(_) = ()))
-    if (nodeSet.size > localModelMax) None
+    if (!Route.local(spark, "model_nodes", LocalModelNodes.toDouble)(
+        nodeSet.size.toDouble)) None
     else packedCanonEdges(psArr).map { edges =>
       val mask = (1L << 31) - 1
       val allNodes = nodeSet.keys.toArray
@@ -421,8 +417,7 @@ object GraphQueries {
     * the rank/degree model broadcast, merged by addition on the
     * driver. */
   private def localSupersteps(spark: SparkSession, canon: DataFrame,
-      nodes: DataFrame, iters: Int,
-      localFinishEdges: Int = BroadcastClosingEdges.toInt): DataFrame = {
+      nodes: DataFrame, iters: Int): DataFrame = {
     import scala.collection.mutable
     val sc = spark.sparkContext
     // materialize the edge build through the DataFrame path (AQE
@@ -433,15 +428,16 @@ object GraphQueries {
     val nEdges = canonDf.count()
     val allNodes = nodes.collect().map(_.getLong(0))
 
-    // FULL-LOCAL FINISH (round-17): the model (ranks/degrees) already
-    // lives on the driver on this path — when the EDGE list also fits
-    // the BroadcastClosingEdges envelope (4M edges ≈ 64 MB, the same
-    // driver-object budget g3's broadcast adjacency rides), the per-
-    // iteration cluster round-trip (broadcast + one job + partial-map
-    // collect, ×iters) costs more than iterating over the collected
-    // pairs directly — iters × 2 integer ops per edge, ≤ 40M ops at
-    // the bound. Bit-identical: the same integer recurrence over the
-    // same pairs — addition order is immaterial. Past the bound, the
+    // FULL-LOCAL FINISH (round-17, the broadcast_edges gate): the
+    // model (ranks/degrees) already lives on the driver on this path —
+    // when the EDGE list also fits the BroadcastClosingEdges envelope
+    // (4M edges ≈ 64 MB, the same driver-object budget g3's broadcast
+    // adjacency rides), the per-iteration cluster round-trip
+    // (broadcast + one job + partial-map collect, ×iters) costs more
+    // than iterating over the collected pairs directly — iters × 2
+    // integer ops per edge, ≤ 40M ops at the bound. Bit-identical:
+    // the same integer recurrence over the same pairs — addition
+    // order is immaterial. Past the bound, the
     // RDD superstep loop below runs unchanged (and past
     // LocalModelNodes the fully distributed form, as before).
     def merged(partials: Array[mutable.LongMap[Long]]): mutable.LongMap[Long] = {
@@ -477,7 +473,8 @@ object GraphQueries {
 
     var rank = mutable.LongMap.empty[Long]
     for (n <- allNodes) rank(n) = 1000000L
-    if (nEdges <= localFinishEdges) {
+    if (Route.local(spark, "broadcast_edges", BroadcastClosingEdges.toDouble)(
+        nEdges.toDouble)) {
       val pairsA = canonDf.collect().map(r => (r.getLong(0), r.getLong(1)))
       canonDf.unpersist()
       val deg = degOf(pairsA.iterator)
@@ -544,12 +541,15 @@ object GraphQueries {
     g3TrianglesOf(spark, Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey")))
 
-  /** Edge-count bound under which the oriented edge list (two longs
-    * a row) is broadcast for the closing-edge probe — 4M edges ≈
-    * 64 MB, the same order as g2's item-support broadcast. */
+  /** Budget of the `broadcast_edges` gate: the edge count under which
+    * the oriented edge list (two longs a row) is broadcast for the
+    * closing-edge probe — 4M edges ≈ 64 MB, the same order as g2's
+    * item-support broadcast. g1's superstep finish and the
+    * `basket_model` pair budget share this driver-object envelope. */
   val BroadcastClosingEdges: Long = 4000000L
 
-  /** Intersection-work ceiling for the driver triangle kernel:
+  /** Intersection-work ceiling for the driver triangle kernel (the
+    * `wedge_work` gate):
     * Σ over oriented edges of (outdeg(u) + outdeg(v)) — the EXACT
     * two-pointer comparison count, computed from the already-built
     * degree table before any intersection runs. ~2e9 long compares
@@ -562,7 +562,7 @@ object GraphQueries {
     * degree-ordered orientation as the distributed routes, walked
     * over contiguous primitive adjacency runs. None when an id falls
     * outside the packed range or the EXACT intersection-work count
-    * exceeds [[LocalWedgeWorkMax]] — callers fall through to the
+    * fails the `wedge_work` gate — callers fall through to the
     * distributed intersection. */
   private def g3Kernel(spark: SparkSession,
       psArr: Array[Array[Long]]): Option[DataFrame] = {
@@ -601,14 +601,17 @@ object GraphQueries {
         startOf(u) = i; lenOf(u) = j - i
         i = j
       }
-      var work = 0L
-      i = 0
-      while (i < packed.length) {
-        work += lenOf.getOrElse(packed(i) >>> 31, 0) +
-          lenOf.getOrElse(packed(i) & mask, 0)
-        i += 1
+      val fits = Route.local(spark, "wedge_work", LocalWedgeWorkMax.toDouble) {
+        var work = 0L
+        var e = 0
+        while (e < packed.length) {
+          work += lenOf.getOrElse(packed(e) >>> 31, 0) +
+            lenOf.getOrElse(packed(e) & mask, 0)
+          e += 1
+        }
+        work.toDouble
       }
-      if (work > LocalWedgeWorkMax) None
+      if (!fits) None
       else {
         val cnt = mutable.LongMap.empty[Long]
         psArr.foreach(_.foreach(n => cnt.getOrElseUpdate(n, 0L)))
@@ -651,16 +654,11 @@ object GraphQueries {
     }
   }
 
-  private[graft] def g3TrianglesOf(spark: SparkSession, li: DataFrame,
-      broadcastEdgeMax: Long = BroadcastClosingEdges,
-      localFinish: Int = BroadcastClosingEdges.toInt,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame = {
+  private[graft] def g3TrianglesOf(spark: SparkSession, li: DataFrame): DataFrame = {
     // RAW-COLLECT PATH (round-17, second pass): under the raw-row
     // budget even the order-sets exchange disappears — one gated
     // count and one no-shuffle scan collect feed the same kernel.
-    val raw = if (localFinish > 0)
-      basketSetsRaw(li, maxPairs = localFinish.toLong,
-        maxRows = rawCollectMax) else None
+    val raw = basketSetsRaw(li)
     raw.flatMap(g3Kernel(spark, _)) match {
       case Some(out) => return out
       case None => ()
@@ -679,8 +677,7 @@ object GraphQueries {
     // a raw model that collected but whose kernel declined would
     // decline identically from basketModelOf — skip the re-collect
     val localOut: Option[DataFrame] = if (raw.isDefined) None
-      else basketModelOf(sets, maxPairs = localFinish.toLong)
-        .flatMap(g3Kernel(spark, _))
+      else basketModelOf(sets).flatMap(g3Kernel(spark, _))
     if (localOut.isDefined) { sets.unpersist(); return localOut.get }
     val canon = pairsOf(sets).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -700,7 +697,8 @@ object GraphQueries {
         when(fwd, col("dst")).otherwise(col("src")).as("v"),
         when(fwd, col("dd")).otherwise(col("ds")).as("dv"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val perNode = if (nEdges <= broadcastEdgeMax) {
+    val perNode = if (Route.local(spark, "broadcast_edges",
+        BroadcastClosingEdges.toDouble)(nEdges.toDouble)) {
       // broadcast-adjacency intersection: N⁺ arrays keyed by node
       // (vocabulary rows, O(m) total payload) ride one broadcast,
       // re-used for both endpoints; each edge row computes its
@@ -765,9 +763,7 @@ object GraphQueries {
     * divisions — one IEEE division each, rounded, so the oracle
     * hashes bit-identically (the e8_spike argument). */
   def g2CopurchaseLift(spark: SparkSession, dir: String,
-      minSup: Int = 2,
-      localFinish: Int = BroadcastClosingEdges.toInt,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame = {
+      minSup: Int = 2): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
     // RAW-COLLECT PATH (round-17, second pass): support counts, item
@@ -777,13 +773,9 @@ object GraphQueries {
     // columns are computed on the driver; the confidence/lift
     // divisions stay the SAME Spark projection (below) over those
     // integers, so the scored rows are bit-identical by construction.
-    if (localFinish > 0) {
-      basketSetsRaw(li, maxPairs = localFinish.toLong,
-          maxRows = rawCollectMax)
-        .flatMap(g2Kernel(spark, _, minSup)) match {
-        case Some(ints) => return g2Score(ints._1, ints._2)
-        case None => ()
-      }
+    basketSetsRaw(li).flatMap(g2Kernel(spark, _, minSup)) match {
+      case Some(ints) => return g2Score(ints._1, ints._2)
+      case None => ()
     }
     // ONE corpus shuffle total: the per-order set build. The order
     // count, item supports (explode of the already-order-distinct
@@ -823,46 +815,17 @@ object GraphQueries {
     * minSup, plus the order total. None when an id falls outside the
     * packed range. */
   private def g2Kernel(spark: SparkSession, psArr: Array[Array[Long]],
-      minSup: Int): Option[(DataFrame, Long)] = {
-    if (!psArr.forall(_.forall(id => id >= 0 && id < (1L << 31)))) return None
+      minSup: Int): Option[(DataFrame, Long)] = packedPairs(psArr).map { packed =>
     import scala.collection.mutable
-    val nOrders = psArr.length.toLong
     // item supports: set elements are order-distinct, so each set
     // contributes one count per element — exactly the explode+groupBy
     val nItem = mutable.LongMap.empty[Long]
     psArr.foreach(_.foreach(p => nItem(p) = nItem.getOrElse(p, 0L) + 1L))
-    var n = 0
-    psArr.foreach { ps => n += ps.length * (ps.length - 1) / 2 }
-    val packed = new Array[Long](n)
-    var k = 0
-    psArr.foreach { ps =>
-      var i = 0
-      while (i < ps.length) {
-        var j = i + 1
-        while (j < ps.length) {
-          val a = math.min(ps(i), ps(j)); val b = math.max(ps(i), ps(j))
-          packed(k) = (a << 31) | b; k += 1
-          j += 1
-        }
-        i += 1
-      }
-    }
-    java.util.Arrays.sort(packed)
-    val mask = (1L << 31) - 1
-    val rows = mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
-    var i = 0
-    while (i < packed.length) {
-      var j = i
-      while (j < packed.length && packed(j) == packed(i)) j += 1
-      if (j - i >= minSup) {
-        val a = packed(i) >>> 31; val b = packed(i) & mask
-        rows += ((a, b, (j - i).toLong, nItem(a), nItem(b)))
-      }
-      i = j
-    }
+    val rows = supportRuns(packed, minSup).map { case (a, b, n) =>
+      (a, b, n, nItem(a), nItem(b)) }
     import spark.implicits._
-    Some((spark.createDataset(rows.toSeq)
-      .toDF("part_a", "part_b", "n_ab", "n_a", "n_b"), nOrders))
+    (spark.createDataset(rows.toSeq)
+      .toDF("part_a", "part_b", "n_ab", "n_a", "n_b"), psArr.length.toLong)
   }
 
   /** Distributed path: degree-attached symmetric edge frame
@@ -923,7 +886,7 @@ object GraphQueries {
     *
     * The clustering itself is the pair-source-agnostic clustersOf
     * engine (clique contraction → bounded driver union-find or
-    * distributed label propagation past `LocalFinishEdges`) — the
+    * distributed label propagation past the `local_finish` gate) — the
     * third modality on that engine after token near-dup
     * (dedup_clusters) and embedding near-dup (emb_dedup_clusters).
     * Support counting is one map-side-combinable groupBy over the
@@ -932,9 +895,7 @@ object GraphQueries {
     * (component id = min member id) — full oracle row via DuckDB's
     * recursive reachability CTE. */
   def g4Components(spark: SparkSession, dir: String,
-      minSup: Int = 2,
-      localFinish: Int = TextQueries.LocalFinishEdges,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame = {
+      minSup: Int = 2): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
     // RAW-COLLECT PATH (round-17, second pass): the support-filtered
@@ -943,24 +904,17 @@ object GraphQueries {
     // clustering itself stays the SAME clustersOf engine (its label
     // fixpoint is a function of the edge SET alone — route-pinned in
     // its spec), fed a driver-local pair frame.
-    basketSetsRaw(li, maxPairs = BroadcastClosingEdges,
-        maxRows = rawCollectMax)
-      .flatMap(supportEdgesLocal(_, minSup)) match {
-      case Some(edges) =>
+    val edges = basketSetsRaw(li).flatMap(supportEdgesLocal(_, minSup)) match {
+      case Some(local) =>
         import spark.implicits._
-        return TextQueries.clustersOf(
-            spark.createDataset(edges.toSeq).toDF("a_id", "b_id"),
-            localFinish = localFinish)
-          .select(col("doc_id").as("part_key"),
-            col("cluster_id").as("component_id"))
-      case None => ()
+        spark.createDataset(local.toSeq).toDF("a_id", "b_id")
+      case None =>
+        orderPairs(li)
+          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("sup"))
+          .filter(col("sup") >= minSup)
+          .select(col("src").as("a_id"), col("dst").as("b_id"))
     }
-    val sup = orderPairs(li)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("sup"))
-      .filter(col("sup") >= minSup)
-    TextQueries.clustersOf(
-        sup.select(col("src").as("a_id"), col("dst").as("b_id")),
-        localFinish = localFinish)
+    TextQueries.clustersOf(edges)
       .select(col("doc_id").as("part_key"),
         col("cluster_id").as("component_id"))
   }
@@ -985,22 +939,19 @@ object GraphQueries {
     * the oracle's depth cap. Unreachable nodes are absent from the
     * output, exactly like the oracle's walk. */
   def g6BfsDists(spark: SparkSession, dir: String,
-      minSup: Int = 2, maxHops: Int = 20,
-      localFinish: Int = TextQueries.LocalFinishEdges,
-      rawCollectMax: Long = RawCollectMaxRows): DataFrame = {
+      minSup: Int = 2, maxHops: Int = 20): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
     // RAW-COLLECT PATH (round-17, second pass): support edges from
     // one run-length pass over the collected basket model, then the
     // identical driver BFS — no pair-explode exchange, no support
-    // persist/count/collect jobs. Engages only inside the SAME
-    // (0, localFinish] window as the collect below, so the empty and
-    // past-the-bound behaviors stay byte-for-byte the existing
-    // routes'.
-    basketSetsRaw(li, maxPairs = BroadcastClosingEdges,
-        maxRows = rawCollectMax)
-      .flatMap(supportEdgesLocal(_, minSup)) match {
-      case Some(canon) if canon.nonEmpty && canon.length <= localFinish =>
+    // persist/count/collect jobs. Engages only for a non-empty edge
+    // set within the SAME local_finish gate as the collect below, so
+    // the empty and past-the-bound behaviors stay byte-for-byte the
+    // existing routes'.
+    basketSetsRaw(li).flatMap(supportEdgesLocal(_, minSup)) match {
+      case Some(canon)
+          if canon.nonEmpty && TextQueries.localFinish(spark, canon.length) =>
         return bfsLocal(spark, canon, maxHops)
       case _ => ()
     }
@@ -1013,7 +964,7 @@ object GraphQueries {
       .filter(col("sup") >= minSup)
       .select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // LOCAL FINISH (the unionFindLocal/LocalFinishEdges pattern): the
+    // LOCAL FINISH (clustersOf's local_finish gate): the
     // support-thresholded graph is vocabulary-sized, and the frontier
     // loop below costs ~4 driver-synchronized actions (join, distinct,
     // anti-join, checkpoint) PER HOP — diameter × 4 job launches to
@@ -1023,7 +974,7 @@ object GraphQueries {
     // same maxHops cap — spec-pinned equal to the loop); past it, the
     // distributed loop runs unchanged.
     val nCanon = sup.count()
-    if (nCanon > 0 && nCanon <= localFinish) {
+    if (nCanon > 0 && TextQueries.localFinish(spark, nCanon)) {
       val canon = sup.collect().map(r => (r.getLong(0), r.getLong(1)))
       sup.unpersist()
       return bfsLocal(spark, canon, maxHops)

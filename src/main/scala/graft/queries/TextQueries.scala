@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Route
 import graft.ops.{Bpe, CacheScope}
 import graft.sources.Tables
 
@@ -330,15 +331,14 @@ object TextQueries {
     * non-trivial component; keep-rule = "doc_id == cluster_id".
     * Deterministic (the fixpoint is unique), and SQL-expressible, so
     * the DuckDB oracle checks it with a recursive CTE. */
-  def dedupClusters(spark: SparkSession, dir: String,
-      localFinish: Int = LocalFinishEdges): DataFrame =
-    clustersOf(dedupNgramJaccard(spark, dir).select(col("a_id"), col("b_id")),
-      localFinish = localFinish)
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clustersOf(dedupNgramJaccard(spark, dir).select(col("a_id"), col("b_id")))
 
   /** Connected components: one CONTRACTION pass (dense near-dup
     * cliques collapse to single super-nodes), then the contracted
     * remainder is clustered by whichever engine its size warrants:
-    * ≤ LocalFinishEdges edges finish as a driver union-find (one
+    * under the `local_finish` gate (≤ LocalFinishEdges edges) it
+    * finishes as a driver union-find (one
     * collect — the broadcast-join argument; near-dup graphs are
     * clique-heavy, so the remainder is tiny even when the pair set
     * is not), larger remainders run min-label propagation — each
@@ -350,10 +350,11 @@ object TextQueries {
     * would need one round per hop; past the round cap the loop hands
     * off to clustersOfStar, the large-star/small-star algorithm that
     * converges in O(log² n) rounds on any graph shape. */
-  /** Contracted-remainder size (edges) below which clustering
-    * finishes driver-side — the broadcast-join argument: 1M edges is
-    * ~16 MB of longs, the same driver-object envelope as the graph
-    * family's BroadcastClosingEdges (4M edges / 64 MB), and one
+  /** Budget of the `local_finish` gate: the contracted-remainder size
+    * (edges) below which clustering finishes driver-side — the
+    * broadcast-join argument: 1M edges is ~16 MB of longs, the same
+    * driver-object envelope as the graph family's
+    * BroadcastClosingEdges (4M edges / 64 MB), and one
     * collect + union-find replaces O(log n) distributed rounds of
     * shuffle+action each. (Round-17: raised from 100k — the exact
     * ngram pair graph at bench scale is ~246k pairs, which paid the
@@ -365,8 +366,7 @@ object TextQueries {
     * unchanged. */
   private[graft] val LocalFinishEdges = 1000000
 
-  private[graft] def clustersOf(pairs: DataFrame, maxRounds: Int = 64,
-      localFinish: Int = LocalFinishEdges): DataFrame = {
+  private[graft] def clustersOf(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
     // materialize the pair set ONCE before the symmetrizing
     // self-union: its two branches run concurrently on first action,
     // so without this the (possibly expensive — LSH banding +
@@ -383,9 +383,9 @@ object TextQueries {
     // Same labeling by the unionFindLocal invariant (root = component
     // min); the contraction path is unchanged past the bound — it
     // exists exactly so web-scale clique-heavy graphs shrink BEFORE
-    // any collect, and a ≤ localFinish pair set is within the same
+    // any collect, and a pair set within the gate is within the same
     // driver envelope the contracted remainder was always allowed.
-    if (nPairs <= localFinish) {
+    if (localFinish(pairs.sparkSession, nPairs)) {
       val out = unionFindLocal(p)
       p.unpersist()
       return out
@@ -428,7 +428,7 @@ object TextQueries {
         l0.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
       else {
         val superLabels =
-          if (nSuper <= localFinish) unionFindLocal(superEdges)
+          if (localFinish(pairs.sparkSession, nSuper)) unionFindLocal(superEdges)
           else propagateOrStar(superEdges, maxRounds)
         l0.join(superLabels.select(col("doc_id").as("lbl"), col("cluster_id")),
             Seq("lbl"), "left")
@@ -437,6 +437,10 @@ object TextQueries {
       }
     CacheScope.owned(out, l0)
   }
+
+  /** The `local_finish` gate over an edge count. */
+  private[graft] def localFinish(spark: SparkSession, edges: Long): Boolean =
+    Route.local(spark, "local_finish", LocalFinishEdges.toDouble)(edges.toDouble)
 
   /** Driver-side union-find over a collected (bounded — see
     * LocalFinishEdges) edge list. Union always roots at the smaller
@@ -1915,10 +1919,8 @@ object TextQueries {
     * is the one that survives 100 TB. Spec-verified set-equal to
     * clustering the exact shingle-Jaccard pairs (no SQL oracle: the
     * pair source is hash-defined). */
-  def dedupClustersLsh(spark: SparkSession, dir: String,
-      localFinish: Int = LocalFinishEdges): DataFrame =
-    clustersOf(dedupMinhash(spark, dir).select(col("a_id"), col("b_id")),
-      localFinish = localFinish)
+  def dedupClustersLsh(spark: SparkSession, dir: String): DataFrame =
+    clustersOf(dedupMinhash(spark, dir).select(col("a_id"), col("b_id")))
 
   /** Leakage-safe train/val/test split assignment — the split step a
     * pretraining pipeline must run AFTER near-dedup, not before: two

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Route
 import graft.sources.Tables
 
 /** PERSISTED PQ index — the production ANN serving shape. The
@@ -167,7 +168,8 @@ object VectorIndex {
   private val entriesCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Map[Int, Long])]()
 
-  /** Tombstone-count bound for the driver-cached tombstone set (4M
+  /** Budget of the `tombstone_set` gate: the tombstone count under
+    * which the tombstone set is cached on the driver (4M
     * longs ≈ 32 MB — the BroadcastClosingEdges envelope class). Under
     * it the walk's per-hop fetches pre-filter their WANTED ids against
     * a sorted driver array instead of paying a tombstone-parquet read
@@ -177,36 +179,48 @@ object VectorIndex {
     * anti-join runs unchanged. */
   private[graft] val TombstoneLocalMax: Int = 4000000
 
+  /** Per index path: (log signature, tombstone count read up to the
+    * cap, the sorted ids — empty once the count reached the cap). */
   private val tombstoneSetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Option[Array[Long]])]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Array[Long])]()
 
-  /** The tombstone log as a SORTED driver array when it fits
-    * `maxIds` — keyed by the log's file listing (names + lengths), so
-    * a delete (new file) or a fold (file removal) moves the key, the
-    * cachedEntries discipline. Some(ids) ⇒ exact pre-filtering is
+  /** The tombstone log as a SORTED driver array when the
+    * `tombstone_set` gate holds. Some(ids) ⇒ exact pre-filtering is
     * safe (a tombstoned id's row never serves — dropping it from the
     * fetch set is the same statement); None ⇒ the log outgrew the
-    * bound, keep the distributed anti-join. */
-  private[graft] def cachedTombstoneSet(spark: SparkSession, indexPath: String,
-      maxIds: Int = TombstoneLocalMax): Option[Array[Long]] = {
-    if (maxIds <= 0) return None
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexPath/${graft.streaming.StreamOps.TombstonesDir}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Some(Array.emptyLongArray)
-    val sig = fs.listStatus(p).map(s => s"${s.getPath.getName}:${s.getLen}")
-      .sorted.mkString(",")
-    // the bound is part of the key: a spec-forced small bound must
-    // not park a None over the default bound's slot (or vice versa)
-    tombstoneSetCache.compute(s"$indexPath#$maxIds", (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, graft.streaming.StreamOps.loadTombstones(spark, indexPath) match {
-        case None => Some(Array.emptyLongArray)
-        case Some(ts) =>
-          val ids = ts.limit(maxIds + 1).collect().map(_.getLong(0))
-          if (ids.length > maxIds) None
-          else { java.util.Arrays.sort(ids); Some(ids) }
-      }))._2
+    * budget (or the gate is forced), keep the distributed anti-join.
+    * The gate decides before the cache is read, so a forced call
+    * never serves a set an earlier `auto` call cached. */
+  private[graft] def cachedTombstoneSet(spark: SparkSession,
+      indexPath: String): Option[Array[Long]] = {
+    var ids = Array.emptyLongArray
+    val local = Route.local(spark, "tombstone_set", TombstoneLocalMax.toDouble) {
+      val p = new org.apache.hadoop.fs.Path(
+        s"$indexPath/${graft.streaming.StreamOps.TombstonesDir}")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) 0.0
+      else {
+        // keyed by the log's file listing (names + lengths), so a
+        // delete (new file) or a fold (file removal) moves the key, the
+        // cachedEntries discipline; the log is read to one id past
+        // the budget
+        val sig = fs.listStatus(p).map(s => s"${s.getPath.getName}:${s.getLen}")
+          .sorted.mkString(",")
+        val cap = TombstoneLocalMax + 1
+        val (_, n, sorted) = tombstoneSetCache.compute(indexPath, (_, cur) =>
+          if (cur != null && cur._1 == sig) cur
+          else graft.streaming.StreamOps.loadTombstones(spark, indexPath) match {
+            case None => (sig, 0, Array.emptyLongArray)
+            case Some(ts) =>
+              val got = ts.limit(cap).collect().map(_.getLong(0))
+              if (got.length >= cap) (sig, got.length, Array.emptyLongArray)
+              else { java.util.Arrays.sort(got); (sig, got.length, got) }
+          })
+        ids = sorted
+        n.toDouble
+      }
+    }
+    if (local) Some(ids) else None
   }
 
   /** Marker ledger of the graph index's streaming maintainer — also
@@ -1407,14 +1421,13 @@ object VectorIndex {
     * old node whose neighborhood an ingest rewrote, serves its latest
     * adjacency). */
   private def readGraphRows(spark: SparkSession, indexPath: String,
-      wanted: Map[Long, Int],
-      tombstoneLocalMax: Int = TombstoneLocalMax): Map[Long, (Array[Double], Array[(Long, Int)])] = {
+      wanted: Map[Long, Int]): Map[Long, (Array[Double], Array[(Long, Int)])] = {
     if (wanted.isEmpty) return Map.empty
     // pre-filter tombstoned ids on the driver when the log fits the
-    // cached-set bound: a tombstoned row never serves, so dropping
+    // tombstone_set gate: a tombstoned row never serves, so dropping
     // its id from the walk-sized fetch set is the same statement as
     // the per-fetch anti-join it replaces (route-pinned in the spec)
-    val ts = cachedTombstoneSet(spark, indexPath, tombstoneLocalMax)
+    val ts = cachedTombstoneSet(spark, indexPath)
     val live = ts match {
       case Some(ids) if ids.nonEmpty => wanted.filterNot { case (id, _) =>
         java.util.Arrays.binarySearch(ids, id) >= 0 }
@@ -1440,9 +1453,7 @@ object VectorIndex {
     * included, sim = 4dp-rounded cosine, ties by nid. */
   def searchGraph(spark: SparkSession, indexPath: String, queries: DataFrame,
       beam: Int = GraphBeam, hops: Int = GraphHops, k: Int = 5,
-      maxQueryBatch: Int = 8192,
-      tombstoneLocalMax: Int = TombstoneLocalMax,
-      localGraphMaxBytes: Long = -1L): DataFrame = {
+      maxQueryBatch: Int = 8192): DataFrame = {
     val qs: Array[(Long, Array[Double])] = queries
       .select(col("qid"), col("qemb").cast("array<double>"))
       .limit(maxQueryBatch + 1).collect()
@@ -1471,27 +1482,24 @@ object VectorIndex {
     lastFetchCells = Nil
     lastFetchNodes = Nil
     // LOCAL-MODEL PRELOAD (round-18, the ann_graph_batch treatment
-    // applied to the serve): when the resolved graph index — the
-    // MODEL, embeddings + adjacency — provably fits the batch route's
-    // broadcast budget, collect it ONCE and every hop's fetch becomes
-    // a map lookup, replacing hops+1 pruned parquet-read jobs with one
-    // read. The gate is a FILE-LENGTH bound (one recursive listing,
-    // zero jobs — the basketSetsRaw stats-gate discipline): in-memory
+    // applied to the serve — the `graph_preload` gate): when the
+    // resolved graph index — the MODEL, embeddings + adjacency —
+    // provably fits the batch route's broadcast budget, collect it
+    // ONCE and every hop's fetch becomes a map lookup, replacing
+    // hops+1 pruned parquet-read jobs with one read. The estimate is
+    // a FILE-LENGTH bound (one recursive listing, zero jobs): in-memory
     // rows of this table run well under 8× their parquet bytes, so
     // `fileBytes * 8 ≤ budget` proves the collect fits. Past the bound
     // the per-hop selective fetch below runs unchanged — at 100 TB
     // index sizes the serve never reads more than walk-sized slices
-    // (spec-pinned: the forced `localGraphMaxBytes = 0` route and the
-    // preloaded route are row-identical; preloading cannot change the
-    // walk because `fetched` holds exactly the live rows either way —
-    // resolvedGraph applies the same tombstone/delta resolution the
-    // per-hop fetch does).
-    val localBudget =
-      if (localGraphMaxBytes >= 0) localGraphMaxBytes
-      else spark.conf.getOption("spark.graft.graphServeLocalMaxBytes")
-        .map(_.toLong).getOrElse(GraphBatchBroadcastMaxBytes)
-    val preloaded = localBudget > 0 &&
-      graphFileBytes(spark, indexPath) * 8 <= localBudget
+    // (spec-pinned: the forced-dist route and the preloaded route are
+    // row-identical; preloading cannot change the walk because
+    // `fetched` holds exactly the live rows either way — resolvedGraph
+    // applies the same tombstone/delta resolution the per-hop fetch
+    // does).
+    val preloaded = Route.local(spark, "graph_preload",
+        GraphBatchBroadcastMaxBytes.toDouble)(
+      (graphFileBytes(spark, indexPath) * 8).toDouble)
     if (preloaded) {
       resolvedGraph(spark, indexPath)
         .select(col("vec_id"), col("emb"), col("nbrs"))
@@ -1507,7 +1515,7 @@ object VectorIndex {
         lastFetchCells = lastFetchCells :+ missing.values.toSet
         lastFetchNodes = lastFetchNodes :+ missing.size
       }
-      fetched ++= readGraphRows(spark, indexPath, missing, tombstoneLocalMax)
+      fetched ++= readGraphRows(spark, indexPath, missing)
     }
 
     // seed each query from its GraphSeedCells nearest cells' entry
@@ -1625,36 +1633,34 @@ object VectorIndex {
     * loop, graft_vec_div ≡ the driver normalize, round(.,4) ≡
     * BigDecimal HALF_UP. */
   def searchGraphBatch(spark: SparkSession, indexPath: String, queries: DataFrame,
-      beam: Int = GraphBeam, hops: Int = GraphHops, k: Int = 5,
-      broadcastMaxBytes: Long = -1L): DataFrame = {
-    val budget =
-      if (broadcastMaxBytes >= 0) broadcastMaxBytes
-      else spark.conf.getOption("spark.graft.graphBatchBroadcastMaxBytes")
-        .map(_.toLong).getOrElse(GraphBatchBroadcastMaxBytes)
-    // Size probe on the RESOLVED graph (tombstones/deltas applied):
-    // one metadata-cheap agg over the persisted index frame decides
-    // the route. The estimate is the broadcast payload itself
-    // (embedding doubles + neighbor ids + per-node map overhead), so
-    // it scales with the INDEX, never the query batch.
+      beam: Int = GraphBeam, hops: Int = GraphHops, k: Int = 5): DataFrame = {
+    // The `graph_batch_broadcast` gate, sized on the RESOLVED graph
+    // (tombstones/deltas applied): one metadata-cheap agg over the
+    // persisted index frame. The estimate is the broadcast payload
+    // itself (embedding doubles + neighbor ids + per-node map
+    // overhead), so it scales with the INDEX, never the query batch.
     val lvl0 = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val g0 = resolvedGraph(spark, indexPath)
       .select(col("vec_id").as("nid"), col("emb"), col("nbrs"))
       .persist(lvl0)
-    val st = g0.agg(count(lit(1)),
-      coalesce(sum(size(col("emb"))), lit(0L)),
-      coalesce(sum(size(col("nbrs"))), lit(0L))).head
-    val (n, embDoubles, nbrIds) = (st.getLong(0), st.getLong(1), st.getLong(2))
-    val estBytes = embDoubles * 8L + nbrIds * 16L + n * 64L
+    val broadcastFits = Route.local(spark, "graph_batch_broadcast",
+        GraphBatchBroadcastMaxBytes.toDouble) {
+      val st = g0.agg(count(lit(1)),
+        coalesce(sum(size(col("emb"))), lit(0L)),
+        coalesce(sum(size(col("nbrs"))), lit(0L))).head
+      (st.getLong(1) * 8L + st.getLong(2) * 16L + st.getLong(0) * 64L).toDouble
+    }
     val out =
-      if (estBytes <= budget)
+      if (broadcastFits)
         searchGraphBatchBroadcast(spark, indexPath, queries, g0, beam, hops, k)
       else searchGraphBatchJoins(spark, indexPath, queries, g0, beam, hops, k)
     g0.unpersist(false)
     out
   }
 
-  /** Broadcast ceiling for the one-shot batch walk (overridable via
-    * `spark.graft.graphBatchBroadcastMaxBytes`): when the resolved
+  /** Budget of the `graph_batch_broadcast` gate (and of the serve's
+    * `graph_preload` gate), the broadcast ceiling for the one-shot
+    * batch walk: when the resolved
     * graph index — embeddings + adjacency, the MODEL, never the query
     * batch — fits this budget, the whole fixed-round walk runs as ONE
     * narrow pass over the query frame against a broadcast of the

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Route
 import graft.sources.Tables
 import graft.ops.CacheScope
 
@@ -940,7 +941,8 @@ object VectorQueries {
     array_position(scores, array_min(scores)).cast("int")
   }
 
-  /** Element budget (rows × dim) under which Lloyd training collects
+  /** Budget of the `kmeans_local` gate: the element count (rows ×
+    * dim) under which Lloyd training collects
     * the corpus once and iterates on the driver — 8M doubles ≈ 64 MB,
     * the BasketModelMaxElems driver-object envelope. Past it the
     * distributed per-iteration agg runs unchanged. */
@@ -958,8 +960,8 @@ object VectorQueries {
     * (the g1 integer-micros argument applied to Lloyd; the former
     * IEEE-double vec-sum depended on partial-merge arrival order):
     *
-    *  - LOCAL KERNEL (elems ≤ localMaxElems, stats-gated like
-    *    basketSetsRaw): ONE corpus collect, then every iteration is
+    *  - LOCAL KERNEL (the `kmeans_local` gate — stats bound, then
+    *    rows × dim within KmeansLocalMaxElems): ONE corpus collect, then every iteration is
     *    driver arithmetic — no per-iteration job, no per-iteration
     *    codegen recompile of the k×dim literal assignment expression
     *    (each iteration's new centroid literals forced a fresh
@@ -975,9 +977,9 @@ object VectorQueries {
     * tie-break — the kernel's Scala loop replicates graft_dot's
     * sequential i-order exactly. An emptied cluster keeps its
     * previous centroid. Route equality is spec-pinned
-    * (VectorQueriesSpec, forced localMaxElems = 0). */
+    * (VectorQueriesSpec, with `kmeans_local` forced dist). */
   private[graft] def kmeansCentroids(emb: DataFrame, k: Int,
-      iters: Int, localMaxElems: Long = KmeansLocalMaxElems): Seq[Seq[Double]] = {
+      iters: Int): Seq[Seq[Double]] = {
     var cents: Seq[Seq[Double]] = emb.filter(col("vec_id") < k)
       .orderBy(col("vec_id"))
       .select(col("emb")).collect().map(_.getSeq[Double](0).toVector).toSeq
@@ -989,15 +991,10 @@ object VectorQueries {
       (1 to k).map(c => if (n(c) == 0L) prev(c - 1)
         else sums(c).map(ms => ms.toDouble / n(c) / 1e6).toVector)
 
-    // LOCAL KERNEL: cheap stats bound first (zero jobs), exact count
-    // second — the basketSetsRaw gate discipline
-    val planBytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
-    val local = localMaxElems > 0 &&
-      planBytes <= BigInt(localMaxElems) * 16L && {
-        val rows = emb.count()
-        rows * dim <= localMaxElems
-      }
-    if (local) {
+    // LOCAL KERNEL: cheap stats bound first (zero jobs, ≥ 16 plan
+    // bytes per element), exact count second
+    if (Route.local(emb.sparkSession, "kmeans_local", KmeansLocalMaxElems.toDouble,
+        bound = Route.statsBound(emb, 16L))((emb.count() * dim).toDouble)) {
       val pts = emb.select(col("emb")).collect()
         .map(_.getSeq[Double](0).toArray)
       for (_ <- 0 until iters) {

@@ -4125,31 +4125,6 @@ object StreamOps {
         .coalesce(1).write.mode("overwrite").parquet(tmp)): Unit
   }
 
-  /** Streaming ingestion of vendor-item micro-batches into the keyed
-    * MERGE sink — the reference's on-demand re-sync becomes
-    * `writeStream.foreachBatch(mergeBatch(...))`: each micro-batch of
-    * sink-shaped records (vendorId, product, condition,
-    * selectedOptions, database) runs the same J4/A4/K1 merge as the
-    * batch pipeline against its own vendors' rows, and writes only
-    * those vendors. State lives in the sink table itself, exactly like
-    * the reference — no Spark state store needed. At-least-once: no
-    * token, so a replayed batch merges again (see syncBatch). */
-  def mergeBatch(sinkPath: String,
-      mode: graft.sink.MergeWriter.MergeMode = graft.sink.MergeWriter.Accumulate)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import graft.sink.MergeWriter
-    val spark = batch.sparkSession
-    val vendors = batch.select(col("vendorId")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val existing = MergeWriter.readSnapshot(spark, sinkPath)
-      .filter(col("vendorId").isin(vendors: _*))
-    val merged = MergeWriter.merge(existing, batch, mode,
-      new java.sql.Timestamp(System.currentTimeMillis()))
-    // one execution: the lazy plan reads the old vendor files, which
-    // the write keeps until its commit
-    MergeWriter.writeSnapshotVendors(spark, merged.drop("action"), sinkPath, vendors)
-  }
-
   /** Incremental END-TO-END sync — SURVEY §7.4#7 made concrete: each
     * micro-batch of raw vendor payload envelopes
     * (`vendorId`, `payload` JSON — the same envelope the HTTP source

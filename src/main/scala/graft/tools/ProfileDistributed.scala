@@ -6,14 +6,15 @@ import graft.Session
 /** Volume rehearsal for the PAST-THE-BOUND distributed legs of the
   * graph/cluster family — the one set of 100 TB paths the ×40
   * ProfileSuite10x pass never measured: at the rehearsal volumes the
-  * degrade-don't-break thresholds (`GraphQueries.LocalModelNodes`,
-  * `BroadcastClosingEdges`, `TextQueries.LocalFinishEdges`) keep the
-  * suite on the bounded local-model paths, so the distributed twins
+  * degrade-don't-break route gates (`model_nodes`, `broadcast_edges`,
+  * `local_finish` — see graft.Route) keep the suite on the bounded
+  * local-model paths, so the distributed twins
   * (broadcast-rank superstep join + map-side sum with localCheckpoint;
   * wedge-explode + shuffle closing join; min-label propagation with
   * the large-star/small-star handoff) were equality-pinned at 1× but
-  * never timed at volume. This tool FORCES the bounds to zero and runs
-  * each leg at 1× and `reps`×:
+  * never timed at volume. This tool FORCES each leg's gates to their
+  * dist route (`spark.graft.route.dist`) and runs each leg at 1× and
+  * `reps`×:
   *
   *   1. 1× canonical-equality gate: the forced-distributed output must
   *      be row-identical (sorted-row MD5) to the default-path output —
@@ -38,7 +39,9 @@ object ProfileDistributed {
   import graft.sources.Tables
   import org.apache.spark.sql.functions.col
 
-  /** (name, forced-distributed form, per-10× ratio bound).
+  /** (name, forced-distributed form, per-10× ratio bound). g3's wedge
+    * leg forces the basket gates too, so it times the wedge join at
+    * 1× as well, not the driver kernel the 1× basket fits.
     * NaN bound = equality-gate only, no volume leg: dedup_clusters'
     * PAIR SOURCE is the exact n-gram-Jaccard quadratic (the fenced
     * verification-scale ground truth — absent from ProfileSuite10x's
@@ -50,35 +53,36 @@ object ProfileDistributed {
     * pair source, report-only output-quadratic by contract). */
   val Plan: Seq[(String, (SparkSession, String) => DataFrame, Double)] = Seq(
     ("g1_pagerank[dist]",
-      (s: SparkSession, d: String) => GraphQueries.g1PageRank(s, d, localModelMax = 0),
+      forced("raw_collect", "basket_model", "model_nodes")(GraphQueries.g1PageRank(_, _)),
       30.0),
     ("g3_triangles[wedge]",
-      (s: SparkSession, d: String) => GraphQueries.g3TrianglesOf(s,
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
-        broadcastEdgeMax = 0),
+      forced("raw_collect", "basket_model", "broadcast_edges")((s, d) =>
+        GraphQueries.g3TrianglesOf(s,
+          Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))),
       30.0),
     ("g4_components[prop]",
-      (s: SparkSession, d: String) => GraphQueries.g4Components(s, d, localFinish = 0),
+      forced("local_finish")(GraphQueries.g4Components(_, _)),
       ProfileSuite10x.LinearBound),
     ("dedup_clusters[prop]",
-      (s: SparkSession, d: String) => TextQueries.dedupClusters(s, d, localFinish = 0),
+      forced("local_finish")(TextQueries.dedupClusters),
       Double.NaN),
     ("dedup_clusters_lsh[prop]",
-      (s: SparkSession, d: String) => TextQueries.dedupClustersLsh(s, d, localFinish = 0),
+      forced("local_finish")(TextQueries.dedupClustersLsh),
       // output-quadratic under replication by the same contract as the
       // suite pass (near-dup families grow reps×, pair output reps²×) —
       // report-only there, report-only here
       0.0))
 
-  /** The default-path twin for the 1× equality gate. */
-  val Default: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g1_pagerank[dist]" -> ((s, d) => graft.SparkEntry.queries("g1_pagerank")(s, d)),
-    "g3_triangles[wedge]" -> ((s, d) => graft.SparkEntry.queries("g3_triangles")(s, d)),
-    "g4_components[prop]" -> ((s, d) => graft.SparkEntry.queries("g4_components")(s, d)),
-    "dedup_clusters[prop]" -> ((s, d) => graft.SparkEntry.queries("dedup_clusters")(s, d)),
-    "dedup_clusters_lsh[prop]" -> ((s, d) => graft.SparkEntry.queries("dedup_clusters_lsh")(s, d)))
+  /** The default-path twin for the 1× equality gate: the declared
+    * query the leg is named after. */
+  def Default(leg: String): (SparkSession, String) => DataFrame =
+    graft.SparkEntry.queries(leg.takeWhile(_ != '['))
 
-  private def canon(df: DataFrame): (Long, String) = Canon.of(df)
+  /** `fn` with `gates` forced to their dist route. The gates decide
+    * when the query is built, so the lazy frame may run after. */
+  private def forced(gates: String*)(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, d) => graft.Route.forcingDist(s, gates: _*)(fn(s, d))
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -95,9 +99,9 @@ object ProfileDistributed {
     // 1× equality gate first (and JIT warmup as a side effect)
     Plan.foreach { case (name, forced, _) =>
       spark.catalog.clearCache(); graft.ops.CacheScope.releaseAll(spark)
-      val want = canon(Default(name)(spark, dir))
+      val want = Canon.of(Default(name)(spark, dir))
       spark.catalog.clearCache(); graft.ops.CacheScope.releaseAll(spark)
-      val got = canon(forced(spark, dir))
+      val got = Canon.of(forced(spark, dir))
       val ok = want == got
       if (!ok) failures ::= s"$name equality"
       println(s"[dist] $name 1x equality vs default path: " +

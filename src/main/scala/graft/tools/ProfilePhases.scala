@@ -65,36 +65,6 @@ object ProfilePhases {
         graft.queries.GraphQueries.g2CopurchaseLift(spark, dir)))
     }
 
-    // round-17b probe: what would the raw-collect basket path cost?
-    // (one count gate + one no-exchange scan collect + driver grouping
-    // vs the order-sets exchange + budget agg + sets collect)
-    if (fams("raw")) {
-      timed("raw: li.count gate") { li.count(); () }
-      val t0 = System.nanoTime()
-      val rows = li.collect()
-      val t1 = System.nanoTime()
-      val byOrder = scala.collection.mutable.LongMap
-        .empty[scala.collection.mutable.ArrayBuffer[Long]]
-      rows.foreach { r =>
-        byOrder.getOrElseUpdate(r.getLong(0),
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
-      var elems = 0L
-      val sets = byOrder.values.map { b =>
-        val a = b.toArray; java.util.Arrays.sort(a)
-        var w = 0; var i = 0
-        while (i < a.length) {
-          if (i == 0 || a(i) != a(i - 1)) { a(w) = a(i); w += 1 }
-          i += 1
-        }
-        elems += w
-        java.util.Arrays.copyOf(a, w)
-      }.toArray
-      val t2 = System.nanoTime()
-      println(f"[phase] raw: collect ${(t1 - t0) / 1e9}%6.2fs  group+dedupe " +
-        f"${(t2 - t1) / 1e9}%6.2fs  rows ${rows.length} orders ${sets.length} elems $elems")
-    }
-
     if (fams("ngram")) {
       val pairs = graft.queries.TextQueries.dedupNgramJaccard(spark, dir)
       timed("ngram: pair build (full)")(noop(pairs))
@@ -103,9 +73,6 @@ object ProfilePhases {
       spark.catalog.clearCache()
       timed("dedup_clusters full")(noop(
         graft.queries.TextQueries.dedupClusters(spark, dir)))
-      timed("dedup_clusters localFinish=1M")(noop(
-        graft.queries.TextQueries.dedupClusters(spark, dir,
-          localFinish = 1000000)))
     }
 
     if (fams("dedup")) {

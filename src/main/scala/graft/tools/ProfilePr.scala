@@ -33,19 +33,22 @@ object ProfilePr {
       li1.select((col("l_orderkey") + lit(i.toLong * 1000000000L))
         .as("l_orderkey"), col("l_partkey"))).reduce(_ union _)
 
+    // the dist legs force every gate that keeps g1 off the
+    // distributed supersteps; the local legs run `auto`
+    val distGates = Seq("raw_collect", "basket_model", "model_nodes")
     def run(tag: String, li: org.apache.spark.sql.DataFrame,
-        localModelMax: Long): Map[Long, Long] = {
+        gates: Seq[String]): Map[Long, Long] = {
       spark.catalog.clearCache()
-      t(tag)(graft.queries.GraphQueries
-        .g1PageRankOf(spark, li, 5, localModelMax)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      t(tag)(graft.Route.forcingDist(spark, gates: _*)(graft.queries.GraphQueries
+        .g1PageRankOf(spark, li, 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
     }
 
-    val l1 = run("local-1x", li1, Long.MaxValue)
-    val d1 = run("dist-1x", li1, 0L)
+    val l1 = run("local-1x", li1, Nil)
+    val d1 = run("dist-1x", li1, distGates)
     assert(l1 == d1, "1x: paths diverge")
-    val lN = run(s"local-${reps}x", liN, Long.MaxValue)
-    val dN = run(s"dist-${reps}x", liN, 0L)
+    val lN = run(s"local-${reps}x", liN, Nil)
+    val dN = run(s"dist-${reps}x", liN, distGates)
     assert(lN == dN, s"${reps}x: paths diverge")
     println(s"OK nodes=${l1.size} paths identical at 1x and ${reps}x")
     spark.stop()

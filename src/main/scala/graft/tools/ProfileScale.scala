@@ -14,7 +14,8 @@ import graft.Session
   *     collapsed rows, and a forced tiny cap shows the exclusion
   *     machinery engages.
   *  2. Clustering: the default bounded-local-finish run and a FORCED
-  *     distributed finish (localFinish = 0 → propagation/star) must
+  *     distributed finish (the `local_finish` gate forced dist →
+  *     propagation/star) must
   *     produce identical labelings — the handoff is exercised, not
   *     just configured.
   *  3. Streaming ingest: per-batch wall time over the 10× corpus
@@ -94,7 +95,7 @@ object ProfileScale {
     val nNodes = local.count()
     val nClusters = local.select(col("cluster_id")).distinct().count()
     val dist = t("clustersOf (forced distributed)")(
-      TextQueries.clustersOf(ids, localFinish = 0)
+      graft.Route.forcingDist(spark, "local_finish")(TextQueries.clustersOf(ids))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val diverged = local.join(dist.withColumnRenamed("cluster_id", "d_cid"), Seq("doc_id"))
       .filter(col("cluster_id") =!= col("d_cid")).count()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, raise_error}
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 
 /** The bench harness's load-variance / auto-retry decision logic (pure
   * functions) and its measure step. The retry exists because two
@@ -99,10 +99,20 @@ class BenchSpec extends SparkSpec {
     val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(3).toDF("x")
     val boom: (SparkSession, String) => DataFrame = (s, _) =>
       s.range(1).select(raise_error(lit("boom")))
-    val (measured, failed) = Bench.measurePass(spark, "unused",
-      Seq("a_ok" -> ok, "b_boom" -> boom), runsPerQuery = 3)
+    // a query behind a route gate: its cold run's decision is recorded
+    val gated: (SparkSession, String) => DataFrame = (s, _) =>
+      graft.queries.TextQueries.clustersOf(
+        s.range(3).select(col("id").as("a_id"), (col("id") + 1).as("b_id")))
+    val (measured, failed, routes) = Bench.measurePass(spark, "unused",
+      Seq("a_ok" -> ok, "b_boom" -> boom, "c_gated" -> gated), runsPerQuery = 3)
     assert(failed == Set("b_boom"))
-    assert(measured.map(_._1) == Seq("a_ok", "b_boom"))
+    assert(measured.map(_._1) == Seq("a_ok", "b_boom", "c_gated"))
     assert(measured.forall(r => r._2 >= 0 && r._3.size == 2))
+    assert(routes("a_ok").isEmpty)
+    val d = routes("c_gated")("local_finish")
+    assert(d.local && !d.forced && d.estimate == Seq(3.0), d)
+    assert(Verify.routesJson(routes).contains(
+      "\"c_gated\":{\"local_finish\":{\"estimate\":3,\"budget\":1000000," +
+        "\"route\":\"local\",\"forced\":false}}"), Verify.routesJson(routes))
   }
 }

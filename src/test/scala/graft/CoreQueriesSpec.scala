@@ -285,7 +285,7 @@ class CoreQueriesSpec extends SparkSpec {
     // ---- running total ----
     val orders = graft.sources.Tables.orders(spark, "/root/testdata/sf0.001")
     val uni = CoreQueries.runningTotalAutoOf(orders)
-    assert(CoreQueries.lastAutoRoutes("running_total") == "one-pass",
+    assert(routeOf("running_total") == "local",
       "uniform orders should route one-pass")
     assert(windows(uni) == 1, "one-pass route should plan exactly one Window")
     assert(canon(uni) == canon(CoreQueries.runningTotalTwoPhaseOf(orders)),
@@ -296,7 +296,7 @@ class CoreQueriesSpec extends SparkSpec {
         (2 to 100).map(c => (c.toLong, 1000L + c, d(1), 50.0)))
       .toDF("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
     val auto = CoreQueries.runningTotalAutoOf(hot)
-    assert(CoreQueries.lastAutoRoutes("running_total") == "two-phase",
+    assert(routeOf("running_total") == "dist",
       "hot-key orders should route two-phase")
     assert(windows(auto) == 2,
       "two-phase route should plan the offset + within-bucket windows")
@@ -317,7 +317,7 @@ class CoreQueriesSpec extends SparkSpec {
     // ---- top-k per group ----
     val customer = graft.sources.Tables.customer(spark, "/root/testdata/sf0.001")
     val uniK = CoreQueries.topkAutoOf(customer)
-    assert(CoreQueries.lastAutoRoutes("topk") == "one-pass",
+    assert(routeOf("topk") == "local",
       "uniform segments should route one-pass")
     assert(windows(uniK) == 1)
     assert(canon(uniK) == canon(CoreQueries.topkTwoPhaseOf(customer)))
@@ -327,14 +327,14 @@ class CoreQueriesSpec extends SparkSpec {
         (951 to 1000).map(i => (s"S${i % 25}", i.toLong, 500.0 + i)))
       .toDF("c_mktsegment", "c_custkey", "c_acctbal")
     val autoK = CoreQueries.topkAutoOf(hotSeg)
-    assert(CoreQueries.lastAutoRoutes("topk") == "two-phase",
+    assert(routeOf("topk") == "dist",
       "hot segment should route two-phase")
     assert(windows(autoK) == 2)
     assert(canon(autoK) == canon(CoreQueries.topkTwoPhaseOf(hotSeg)))
 
     // ---- exact quantiles (the order-statistic member) ----
     val uniQ = CoreQueries.quantilesAutoOf(orders)
-    assert(CoreQueries.lastAutoRoutes("quantiles") == "one-pass",
+    assert(routeOf("quantiles") == "local",
       "uniform statuses should route one-pass")
     assert(windows(uniQ) == 0,
       "one-pass quantiles is a plain percentile agg — no Window")
@@ -346,7 +346,7 @@ class CoreQueriesSpec extends SparkSpec {
         (1 to 280).map(i => (s"S${i % 56}", 50.0 + i)))
       .toDF("o_orderstatus", "o_totalprice")
     val autoQ = CoreQueries.quantilesAutoOf(hotQ)
-    assert(CoreQueries.lastAutoRoutes("quantiles") == "two-phase",
+    assert(routeOf("quantiles") == "dist",
       "hot status should route two-phase")
     // the dispatch cannot leak: equal to the ONE-PASS exact
     // percentile on the same hot fixture
@@ -360,7 +360,7 @@ class CoreQueriesSpec extends SparkSpec {
     val before = CoreQueries.probeScanCount.get()
     val r1 = CoreQueries.w6RunningTotalAuto(spark, "/root/testdata/sf0.001")
       .collect().map(_.toString).sorted.toSeq
-    val route1 = CoreQueries.lastAutoRoutes("running_total")
+    val route1 = routeOf("running_total")
     val afterFirst = CoreQueries.probeScanCount.get()
     assert(afterFirst == before + 1,
       "first auto call must pay exactly one probe scan")
@@ -368,7 +368,7 @@ class CoreQueriesSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(CoreQueries.probeScanCount.get() == afterFirst,
       "repeat auto call on unchanged files must be a memo hit — zero probe scans")
-    assert(CoreQueries.lastAutoRoutes("running_total") == route1,
+    assert(routeOf("running_total") == route1,
       "memo hit changed the route")
     assert(r1 == r2, "memo hit changed the answer")
     // a frame with NO backing files can't prove input identity — it

@@ -352,13 +352,13 @@ class EventQueriesSpec extends SparkSpec {
     // and the two routes agree there too
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     val fu = EventQueries.funnelAutoOf(ev)
-    assert(CoreQueries.lastAutoRoutes("funnel") == "one-pass")
+    assert(routeOf("funnel") == "local")
     assert(canon(fu) == canon(EventQueries.funnelTwoPhaseOf(ev)))
     val au = EventQueries.asofAutoOf(ev)
-    assert(CoreQueries.lastAutoRoutes("asof") == "one-pass")
+    assert(routeOf("asof") == "local")
     assert(canon(au) == canon(EventQueries.asofTwoPhaseOf(ev)))
     val su = EventQueries.sessionizeAutoOf(ev)
-    assert(CoreQueries.lastAutoRoutes("sessionize") == "one-pass")
+    assert(routeOf("sessionize") == "local")
     assert(canon(su) == canon(EventQueries.sessionizeTwoPhaseOf(ev)))
 
     // hot fixture: user 1 owns 900 of 999 events (hot/mean ≈ 90×),
@@ -379,16 +379,16 @@ class EventQueriesSpec extends SparkSpec {
     val hot = hotRows
       .toDF("user_id", "ts", "event_id", "event_type", "value")
     val fh = EventQueries.funnelAutoOf(hot)
-    assert(CoreQueries.lastAutoRoutes("funnel") == "two-phase",
+    assert(routeOf("funnel") == "dist",
       "hot user should route the funnel two-phase")
     assert(canon(fh) == canon(EventQueries.funnelOf(hot)),
       "two-phase funnel diverged from one-pass on the hot fixture")
     val ah = EventQueries.asofAutoOf(hot)
-    assert(CoreQueries.lastAutoRoutes("asof") == "two-phase")
+    assert(routeOf("asof") == "dist")
     assert(canon(ah) == canon(EventQueries.e3AsofJoinOf(hot)),
       "two-phase asof diverged from one-pass on the hot fixture")
     val sh = EventQueries.sessionizeAutoOf(hot)
-    assert(CoreQueries.lastAutoRoutes("sessionize") == "two-phase")
+    assert(routeOf("sessionize") == "dist")
     assert(canon(sh) == canon(EventQueries.sessionizeOf(hot)),
       "two-phase sessionize diverged from one-pass on the hot fixture")
   }

@@ -15,17 +15,28 @@ class GraphQueriesSpec extends SparkSpec {
 
   private val sf001 = "/root/testdata/sf0.001"
 
+  /** (node, value) pairs as sorted full rows, for [[sortedRows]]. */
+  private def rowsOf(m: Iterable[(Long, Long)]): Seq[Seq[Any]] =
+    m.toSeq.map { case (a, b) => Seq[Any](a, b) }.sortBy(_.mkString("\u0001"))
+
   test("g1PageRank equals a driver-side integer recompute on sf0.001 — both paths") {
-    val out = GraphQueries.g1PageRank(spark, sf001).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // past-the-bound fallbacks: the RDD superstep loop (edges past
-    // LocalFinishEdges, model still local) and the fully distributed
-    // join+agg loop must both compute the identical integers
-    val outRdd = GraphQueries.g1PageRank(spark, sf001, localFinishEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val basket = Seq("raw_collect", "basket_model")
+    val out = withRoutes(local = basket :+ "model_nodes")(
+      sortedRows(GraphQueries.g1PageRank(spark, sf001)))
+    // past-the-bound fallbacks, each forced by its gates: the superstep
+    // engine's full-local finish, the RDD superstep loop (edges past
+    // broadcast_edges, model still local) and the fully distributed
+    // join+agg loop must all compute the identical integers
+    val outFinish = withRoutes(dist = basket,
+        local = Seq("model_nodes", "broadcast_edges"))(
+      sortedRows(GraphQueries.g1PageRank(spark, sf001)))
+    assert(outFinish == out, "superstep full-local finish diverges from the kernel")
+    val outRdd = withRoutes(dist = basket :+ "broadcast_edges",
+        local = Seq("model_nodes"))(
+      sortedRows(GraphQueries.g1PageRank(spark, sf001)))
     assert(outRdd == out, "RDD superstep path diverges from full-local path")
-    val outDist = GraphQueries.g1PageRank(spark, sf001, localModelMax = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val outDist = withRoutes(dist = basket :+ "model_nodes")(
+      sortedRows(GraphQueries.g1PageRank(spark, sf001)))
     assert(outDist == out, "distributed superstep path diverges from bounded-model path")
 
     val li = graft.sources.Tables.lineitem(spark, sf001)
@@ -47,11 +58,9 @@ class GraphQueriesSpec extends SparkSpec {
       r = nodes.map(n => n -> (150000L + 85L * contrib(n) / 100L)).toMap
     }
 
-    assert(out.keySet == r.keySet)
-    for ((n, v) <- r)
-      assert(out(n) == v, s"node $n: spark ${out(n)} != recompute $v")
+    assert(out == rowsOf(r), "spark ranks != driver recompute")
     // non-degenerate: ranks actually spread on this corpus
-    assert(out.values.max > out.values.min)
+    assert(r.values.max > r.values.min)
   }
 
   test("g2CopurchaseLift equals a driver-side recompute on sf0.001") {
@@ -84,8 +93,9 @@ class GraphQueriesSpec extends SparkSpec {
   }
 
   test("g3Triangles equals a naive driver-side a<b<c recompute on sf0.001 — both paths") {
-    val out = GraphQueries.g3Triangles(spark, sf001).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val basket = Seq("raw_collect", "basket_model")
+    val out = withRoutes(local = basket :+ "wedge_work")(
+      sortedRows(GraphQueries.g3Triangles(spark, sf001)))
     // past-the-bound fallback: the shuffle-join closing check must
     // count the identical triangles
     val liDf = graft.sources.Tables.lineitem(spark, sf001)
@@ -93,12 +103,11 @@ class GraphQueriesSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("l_partkey"))
     // broadcast-intersection route (past the local bound, inside the
     // broadcast bound), then the wedge shuffle-join route (past both)
-    val outBcast = GraphQueries.g3TrianglesOf(spark, liDf, localFinish = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val outBcast = withRoutes(dist = basket, local = Seq("broadcast_edges"))(
+      sortedRows(GraphQueries.g3TrianglesOf(spark, liDf)))
     assert(outBcast == out, "broadcast-intersection path diverges from local path")
-    val outShuffle = GraphQueries.g3TrianglesOf(spark, liDf,
-        broadcastEdgeMax = 0, localFinish = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val outShuffle = withRoutes(dist = basket :+ "broadcast_edges")(
+      sortedRows(GraphQueries.g3TrianglesOf(spark, liDf)))
     assert(outShuffle == out, "shuffle-join closing path diverges from broadcast path")
 
     val li = graft.sources.Tables.lineitem(spark, sf001)
@@ -116,12 +125,12 @@ class GraphQueriesSpec extends SparkSpec {
       cnt(a) += 1; cnt(b) += 1; cnt(c) += 1
     }
     val nodes = li.map(_._2).distinct
-    assert(out.keySet == nodes.toSet)
-    for (n <- nodes)
-      assert(out(n) == cnt(n), s"node $n: spark ${out(n)} != recompute ${cnt(n)}")
+    assert(out == rowsOf(nodes.map(n => n -> cnt(n))),
+      "spark triangle counts != driver recompute")
     // non-degenerate on this corpus: baskets create real triangles
-    assert(out.values.max > 0L)
-    assert(out.values.exists(_ == 0L) || out.values.toSet.size > 1)
+    val counts = nodes.map(cnt)
+    assert(counts.max > 0L)
+    assert(counts.contains(0L) || counts.toSet.size > 1)
   }
 
   test("g3Triangles hand-built graph: two triangles sharing an edge, plus an isolated edge") {
@@ -202,15 +211,16 @@ class GraphQueriesSpec extends SparkSpec {
       frontier.foreach(want(_) = d)
       d += 1
     }
-    val got = GraphQueries.g6BfsDists(spark, sf001).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want.toMap, "local-finish path diverged from driver BFS")
-    // the past-the-bound route (forced by a zero local-finish bound)
-    // must walk to the identical distances — the degrade-don't-break
-    // pin for the distributed frontier loop
-    val gotDist = GraphQueries.g6BfsDists(spark, sf001, localFinish = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotDist == want.toMap, "frontier loop diverged from driver BFS")
+    val basket = Seq("raw_collect", "basket_model")
+    val got = withRoutes(local = basket :+ "local_finish")(
+      sortedRows(GraphQueries.g6BfsDists(spark, sf001)))
+    assert(got == rowsOf(want), "local-finish path diverged from driver BFS")
+    // the past-the-bound route (local_finish forced dist) must walk to
+    // the identical distances — the degrade-don't-break pin for the
+    // distributed frontier loop
+    val gotDist = withRoutes(dist = Seq("local_finish"), local = basket)(
+      sortedRows(GraphQueries.g6BfsDists(spark, sf001)))
+    assert(gotDist == rowsOf(want), "frontier loop diverged from driver BFS")
 
     // hand-built: chain 1-2-3-4 (orders repeated twice to pass the
     // support cut), a branch 2-9, and a pair below support (5-6, one
@@ -224,57 +234,48 @@ class GraphQueriesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("g6spec").toString
     orders.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val hand = GraphQueries.g6BfsDists(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hand == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 9L -> 2L))
+    assert(sortedRows(GraphQueries.g6BfsDists(spark, dir)) ==
+      rowsOf(Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 9L -> 2L)))
   }
 
   test("raw-collect basket route equals the sets route on every g-query " +
-      "(forced rawCollectMax = 0)") {
+      "(raw_collect forced dist)") {
     // the raw path groups collect_set's semantics on the driver from
-    // one scan collect; forcing rawCollectMax = 0 re-runs each query
+    // one scan collect; forcing raw_collect dist re-runs each query
     // through the order-sets exchange it replaces — every row must be
-    // identical (same longs, same IEEE doubles)
-    // a multiset, not a Set: a route that duplicates or drops a
-    // repeated row must fail
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+    // identical (same longs, same IEEE doubles), compared as sorted
+    // full-row multisets
     val liDf = graft.sources.Tables.lineitem(spark, sf001)
       .select(org.apache.spark.sql.functions.col("l_orderkey"),
         org.apache.spark.sql.functions.col("l_partkey"))
-    assert(rows(GraphQueries.g1PageRank(spark, sf001)) ==
-      rows(GraphQueries.g1PageRank(spark, sf001, rawCollectMax = 0)),
-      "g1 raw route diverges from sets route")
-    assert(rows(GraphQueries.g2CopurchaseLift(spark, sf001)) ==
-      rows(GraphQueries.g2CopurchaseLift(spark, sf001, rawCollectMax = 0)),
-      "g2 raw route diverges from sets route")
-    assert(rows(GraphQueries.g3TrianglesOf(spark, liDf)) ==
-      rows(GraphQueries.g3TrianglesOf(spark, liDf, rawCollectMax = 0)),
-      "g3 raw route diverges from sets route")
-    assert(rows(GraphQueries.g4Components(spark, sf001)) ==
-      rows(GraphQueries.g4Components(spark, sf001, rawCollectMax = 0)),
-      "g4 raw route diverges from sets route")
-    assert(rows(GraphQueries.g6BfsDists(spark, sf001)) ==
-      rows(GraphQueries.g6BfsDists(spark, sf001, rawCollectMax = 0)),
-      "g6 raw route diverges from sets route")
+    def bothRoutes(q: => org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      (withRoutes(local = Seq("raw_collect"))(sortedRows(q)),
+        withRoutes(dist = Seq("raw_collect"))(sortedRows(q)))
+    Seq("g1" -> (() => GraphQueries.g1PageRank(spark, sf001)),
+        "g2" -> (() => GraphQueries.g2CopurchaseLift(spark, sf001)),
+        "g3" -> (() => GraphQueries.g3TrianglesOf(spark, liDf)),
+        "g4" -> (() => GraphQueries.g4Components(spark, sf001)),
+        "g6" -> (() => GraphQueries.g6BfsDists(spark, sf001))).foreach {
+      case (name, q) =>
+        val (raw, sets) = bothRoutes(q())
+        assert(raw == sets, s"$name raw route diverges from sets route")
+    }
   }
 
   test("g5ComponentsInc equals the one-shot g4 labeling, invariant to the " +
       "batch split, idempotent on re-read") {
-    def labeling(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = labeling(GraphQueries.g4Components(spark, sf001))
+    val batch = sortedRows(GraphQueries.g4Components(spark, sf001))
     // default split (6 slices, compaction after slice 2)
-    val inc6 = labeling(GraphQueries.g5ComponentsInc(spark, sf001))
+    val inc6 = sortedRows(GraphQueries.g5ComponentsInc(spark, sf001))
     assert(inc6 == batch,
       "incremental labeling diverges from one-shot clustersOf")
     // a DIFFERENT deterministic split must land on the same labeling
     // — the maintained state is a function of the accumulated edge
     // SET, not the arrival order (the spec-level twin of the oracle's
     // engine-independence argument)
-    val inc3 = labeling(GraphQueries.g5ComponentsInc(spark, sf001, nBatches = 3))
+    val inc3 = sortedRows(GraphQueries.g5ComponentsInc(spark, sf001, nBatches = 3))
     assert(inc3 == batch, "labeling depends on the batch split")
     // re-serve from the cached index: pure read, same rows
-    assert(labeling(GraphQueries.g5ComponentsInc(spark, sf001)) == batch)
+    assert(sortedRows(GraphQueries.g5ComponentsInc(spark, sf001)) == batch)
   }
 }

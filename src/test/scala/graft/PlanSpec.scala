@@ -629,22 +629,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("g3 triangles: every join rides a broadcast, wedge frame never exchanges") {
-    // the DISTRIBUTED route, forced past the round-17 basket-model
-    // gate (localFinish = 0): degree attach (×2) and adjacency attach
+    // the DISTRIBUTED route, forced past the round-17 raw-collect and
+    // basket-model gates: degree attach (×2) and adjacency attach
     // (×2) are all explicit broadcasts; the only hash exchanges are
     // the edge build, the degree/adjacency aggs, and the final
     // vocabulary-sized count — nothing wedge-sized ever shuffles
     val li = graft.sources.Tables.lineitem(spark, dir)
       .select(org.apache.spark.sql.functions.col("l_orderkey"),
         org.apache.spark.sql.functions.col("l_partkey"))
-    val plan = planString(GraphQueries.g3TrianglesOf(spark, li, localFinish = 0))
+    val plan = withRoutes(dist = Seq("raw_collect", "basket_model"),
+      local = Seq("broadcast_edges"))(planString(GraphQueries.g3TrianglesOf(spark, li)))
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"),
       "a graph join fell off the broadcast path")
     assert(!plan.contains("CartesianProduct"))
     // the default route at this corpus is the basket-model kernel:
     // its final plan is a local result, no join machinery at all
-    val localPlan = planString(GraphQueries.g3Triangles(spark, dir))
+    val localPlan = withRoutes(local = Seq("raw_collect", "basket_model"))(
+      planString(GraphQueries.g3Triangles(spark, dir)))
     assert(localPlan.contains("LocalTableScan"), localPlan.take(2000))
   }
 

@@ -2176,31 +2176,6 @@ class StreamOpsSpec extends SparkSpec {
       s"non-duplicate docs missing from index: ${(singletons -- indexed).take(5)}")
   }
 
-  test("foreachBatch merges micro-batches into the keyed sink") {
-    implicit val sqlCtx = spark.sqlContext
-    val sinkPath = java.nio.file.Files.createTempDirectory("graft-stream").toString + "/vp"
-    import StreamOpsSpec.Rec
-    def toSink(recs: Seq[Rec]) = recs.toDF()
-      .groupBy(col("vendorId"), col("product"), col("condition"), col("database"))
-      .agg(collect_list(struct(
-        col("serial").as("_id"), col("color"), col("variant"), col("stock"),
-        col("price"), col("price").as("discount"),
-        array(col("serial")).as("uniqueNumbers"))).as("selectedOptions"))
-
-    StreamOps.mergeBatch(sinkPath)(toSink(Seq(
-      Rec("v-1", "p-1", "c", "wholecell", "Black", "128GB", 2, 100, "A"))), 0L)
-    StreamOps.mergeBatch(sinkPath)(toSink(Seq(
-      Rec("v-1", "p-1", "c", "wholecell", "Black", "128GB", 3, 90, "B"),
-      Rec("v-2", "p-9", "c", "wholecell", "Red", "64GB", 1, 50, "C"))), 1L)
-
-    val sink = graft.sink.MergeWriter.readSnapshot(spark, sinkPath)
-    val opt = sink.filter(col("vendorId") === "v-1")
-      .select(explode(col("selectedOptions")).as("o"))
-      .select(col("o.stock"), col("o.price")).as[(Int, Long)].head()
-    assert(opt == ((5, 90L))) // accumulated stock, min price
-    assert(sink.count() == 2)
-  }
-
   test("mvMaintainBatch: streaming MV equals full recompute; replayed batch is a no-op") {
     import graft.ops.IncrementalAgg
     import graft.ops.IncrementalAgg.AggSpec
@@ -2815,13 +2790,15 @@ class StreamOpsSpec extends SparkSpec {
       !preFold.exists(r => r._3 == entryVec || r._3 == otherVec),
       "a deleted vector still serves from the graph index")
     // route pin: the driver-cached tombstone pre-filter (the default
-    // serve with a live log) must return the identical rows as the
-    // per-fetch anti-join it replaces (forced by a zero cache bound)
-    val viaAntiJoin = VectorIndex.searchGraph(spark, gIdx, queries,
-        tombstoneLocalMax = 0)
-      .select("qid", "rank", "nid").as[(Long, Long, Long)]
-      .collect().sorted.toSeq
-    assert(viaAntiJoin == preFold,
+    // per-hop fetch with a live log) must return the identical rows as
+    // the per-fetch anti-join it replaces (tombstone_set forced dist).
+    // Both sides skip the whole-index preload, which would otherwise
+    // serve this small index without ever reaching the tombstone gate.
+    val viaCachedSet = withRoutes(dist = Seq("graph_preload"),
+      local = Seq("tombstone_set"))(served())
+    val viaAntiJoin = withRoutes(dist = Seq("graph_preload", "tombstone_set"))(
+      served())
+    assert(viaCachedSet == preFold && viaAntiJoin == preFold,
       "cached-tombstone route diverges from the anti-join route")
     // fold: physical erase, serve identical before/after
     compactGraphIndex(spark, gIdx, targetPartitions = 4)
@@ -3006,10 +2983,4 @@ class StreamOpsSpec extends SparkSpec {
       "compaction changed the grouped profile")
     ev.unpersist()
   }
-}
-
-object StreamOpsSpec {
-  case class Rec(vendorId: String, product: String, condition: String,
-      database: String, color: String, variant: String, stock: Int,
-      price: Long, serial: String)
 }

@@ -653,17 +653,17 @@ class TextQueriesSpec extends SparkSpec {
       } yield (i, j)
       if (pairs.nonEmpty) {
         val df = pairs.toDF("a_id", "b_id")
-        val want = unionFind(pairs)
-        val star = TextQueries.clustersOfStar(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // localFinish = 0 forces the distributed propagation path;
-        // the default path (bounded driver union-find finish) is the
-        // same algorithm as `want` but must agree through the
+        val want = unionFind(pairs).toSeq
+          .map { case (a, b) => Seq[Any](a, b) }.sortBy(_.mkString("\u0001"))
+        val star = sortedRows(TextQueries.clustersOfStar(df))
+        // local_finish forced dist takes the distributed propagation
+        // path; the default path (bounded driver union-find finish) is
+        // the same algorithm as `want` but must agree through the
         // contraction composition too
-        val prop = TextQueries.clustersOf(df, localFinish = 0)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val local = TextQueries.clustersOf(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val prop = withRoutes(dist = Seq("local_finish"))(
+          sortedRows(TextQueries.clustersOf(df)))
+        val local = withRoutes(local = Seq("local_finish"))(
+          sortedRows(TextQueries.clustersOf(df)))
         assert(star == want, s"graph $g: large/small-star != union-find")
         assert(prop == want, s"graph $g: label propagation != union-find")
         assert(local == want, s"graph $g: local-finish != union-find")
@@ -676,18 +676,19 @@ class TextQueriesSpec extends SparkSpec {
     // a pure chain is the worst case for per-hop propagation: the min
     // label travels one hop per round
     val chain = (0L until 120L).map(i => (i, i + 1))
-    val want = (0L to 120L).map(_ -> 0L).toMap
-    val star = TextQueries.clustersOfStar(chain.toDF("a_id", "b_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = (0L to 120L).map(i => Seq[Any](i, 0L)).sortBy(_.mkString("\u0001"))
+    val star = sortedRows(TextQueries.clustersOfStar(chain.toDF("a_id", "b_id")))
     assert(star == want, "star algorithm wrong on the chain")
     // propagation with a tiny round cap must hand off to the star
-    // fallback and still return the exact clustering
-    // (localFinish = 0: the default bounded local finish would absorb
-    // a 120-edge remainder before propagation ever iterated)
-    val viaFallback = TextQueries.clustersOf(chain.toDF("a_id", "b_id"),
-        maxRounds = 3, localFinish = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // fallback and still return the exact clustering (local_finish
+    // forced dist: the default bounded local finish would absorb a
+    // 120-edge remainder before propagation ever iterated)
+    val viaFallback = withRoutes(dist = Seq("local_finish"))(
+      sortedRows(TextQueries.clustersOf(chain.toDF("a_id", "b_id"), maxRounds = 3)))
     assert(viaFallback == want, "fallback handoff returned a wrong clustering")
+    // and the auto route of the same chain takes the local finish
+    assert(withRoutes(local = Seq("local_finish"))(
+      sortedRows(TextQueries.clustersOf(chain.toDF("a_id", "b_id"), maxRounds = 3))) == want)
   }
 
   test("winnowing guarantee: docs sharing an 11+ char substring share a selected hash") {

@@ -252,8 +252,8 @@ class VectorIndexSpec extends SparkSpec {
     // force the selective per-hop fetch route (the round-18 default
     // preloads the whole sub-budget index in one read, which is
     // exactly what this 100 TB pruning claim must NOT rely on)
-    VectorIndex.searchGraph(spark, idx, corpusQueries(1),
-      localGraphMaxBytes = 0L).collect()
+    withRoutes(dist = Seq("graph_preload"))(
+      VectorIndex.searchGraph(spark, idx, corpusQueries(1)).collect())
     val fetches = VectorIndex.lastFetchCells
     assert(fetches.nonEmpty &&
       fetches.head.size <= VectorIndex.GraphSeedCells,
@@ -277,14 +277,15 @@ class VectorIndexSpec extends SparkSpec {
     val all = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
     val driverAll = canon(VectorIndex.searchGraph(spark, idx, all))
-    assert(canon(VectorIndex.searchGraphBatch(spark, idx, all)) == driverAll,
+    assert(withRoutes(local = Seq("graph_batch_broadcast"))(
+        canon(VectorIndex.searchGraphBatch(spark, idx, all))) == driverAll,
       "corpus-sized batch diverges from the driver walk")
     // BOTH routes of the batch walk: the broadcast form (default at
-    // this index size) above, and the join form forced by a zero
-    // broadcast budget — the past-the-budget fallback must stay
-    // row-identical even while the default route no longer runs it
-    assert(canon(VectorIndex.searchGraphBatch(spark, idx, all,
-        broadcastMaxBytes = 0L)) == driverAll,
+    // this index size) above, and the join form forced dist — the
+    // past-the-budget fallback must stay row-identical even while the
+    // default route no longer runs it
+    assert(withRoutes(dist = Seq("graph_batch_broadcast"))(
+        canon(VectorIndex.searchGraphBatch(spark, idx, all))) == driverAll,
       "forced-join batch walk diverges from the driver walk")
     assert(canon(VectorIndex.searchGraphBatch(spark, idx, corpusQueries(10))) ==
       canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10))),
@@ -300,18 +301,21 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.buildGraph(spark, dir, idx)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10))) ==
-      canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10),
-        localGraphMaxBytes = 0L)),
+    def bothRoutes() = (
+      withRoutes(local = Seq("graph_preload"))(
+        canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10)))),
+      withRoutes(dist = Seq("graph_preload"))(
+        canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10)))))
+    val (preloaded, fetched) = bothRoutes()
+    assert(preloaded == fetched,
       "preloaded serve diverges from the selective-fetch serve")
     // delete a few nodes, then re-pin: tombstone resolution must be
     // identical through both routes
     val victims = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id")).orderBy(col("vec_id")).limit(3)
     graft.streaming.StreamOps.deleteDocs(idx, victims)
-    assert(canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10))) ==
-      canon(VectorIndex.searchGraph(spark, idx, corpusQueries(10),
-        localGraphMaxBytes = 0L)),
+    val (preloadedDel, fetchedDel) = bothRoutes()
+    assert(preloadedDel == fetchedDel,
       "preloaded serve diverges from selective fetch with tombstones present")
   }
 

@@ -168,8 +168,10 @@ class VectorQueriesSpec extends SparkSpec {
     for (dir <- Seq("/root/testdata/sf0.001", sf01)) {
       val emb = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val local = VectorQueries.kmeansCentroids(emb, 8, 3)
-      val dist = VectorQueries.kmeansCentroids(emb, 8, 3, localMaxElems = 0L)
+      val local = withRoutes(local = Seq("kmeans_local"))(
+        VectorQueries.kmeansCentroids(emb, 8, 3))
+      val dist = withRoutes(dist = Seq("kmeans_local"))(
+        VectorQueries.kmeansCentroids(emb, 8, 3))
       assert(local == dist,
         s"$dir: local kernel centroids diverge from the distributed route")
     }
