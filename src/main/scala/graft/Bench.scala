@@ -15,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * persists still live), separating steady-state plan cost from
   * first-touch warmup. `value` totals the cold runs.
   * `BENCH_SELF.json` also carries each query's `routes`: the route
-  * gates' decisions in its cold run (see [[Route]]).
+  * gates' decisions in its cold run (see [[Route]]), and its
+  * `derived`: per DerivedCache kind, whether its cold run built the
+  * root or hit it, and the build seconds.
   */
 object Bench {
 
@@ -106,12 +108,15 @@ object Bench {
     * time-to-failure, so every map keeps one row per query, and the
     * query's name is returned beside the measurements so the record
     * can say that its time is not a measurement. Each query's route
-    * decisions in its cold run come back keyed by name. */
+    * decisions and derived-cache records in its cold run come back
+    * keyed by name. */
   private[graft] def measurePass(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      runsPerQuery: Int): (Measured, Set[String], Map[String, Map[String, Route.Decision]]) = {
+      runsPerQuery: Int): (Measured, Set[String], Map[String, Map[String, Route.Decision]],
+      Map[String, Map[String, DerivedCache.Record]]) = {
     var failed = Set.empty[String]
     var routes = Map.empty[String, Map[String, Route.Decision]]
+    var derived = Map.empty[String, Map[String, DerivedCache.Record]]
     val measured = queries.map { case (name, fn) =>
       def timed(run: String): Double = {
         val t0 = System.nanoTime()
@@ -121,16 +126,17 @@ object Bench {
           System.err.println(s"[bench] $name ($run) failed: ${e.getMessage}") }
         (System.nanoTime() - t0) / 1e9
       }
-      Route.take()
+      Route.take(); DerivedCache.take()
       val cold = timed("cold")
       routes += name -> Route.take()
+      derived += name -> DerivedCache.take()
       val warms = (1 until runsPerQuery).map(i => timed(s"warm$i"))
       spark.catalog.clearCache()
       System.err.println(f"[bench] $name%-24s cold $cold%8.2fs  warm " +
         warms.map(w => f"$w%.2fs").mkString(" "))
       (name, cold, warms)
     }
-    (measured, failed, routes)
+    (measured, failed, routes, derived)
   }
 
   def main(args: Array[String]): Unit = {
@@ -171,11 +177,13 @@ object Bench {
     // a query that threw in any pass is listed in `failed`
     var failed = Set.empty[String]
     var routes = Map.empty[String, Map[String, Route.Decision]]
+    var derived = Map.empty[String, Map[String, DerivedCache.Record]]
     def measureAll(): Measured = {
-      val (m, f, r) = measurePass(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+      val (m, f, r, d) = measurePass(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
         runsPerQuery)
       failed ++= f
       routes ++= r
+      derived = d ++ derived // the first pass's cold runs are the builds
       m
     }
     // AUTO-RETRY on load pollution: multiple recorded rounds shipped
@@ -220,11 +228,12 @@ object Bench {
     // capture path once truncated its tail and silently dropped the
     // first 7 queries from the recorded artifact — the file is the
     // complete record regardless of any pipe buffer length.
-    // The file alone also carries each query's route decisions.
+    // The file alone also carries each query's route decisions and
+    // derived-cache records.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SELF.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (json.dropRight(1) + ",\"routes\":" + Verify.routesJson(routes) + "}\n")
-        .getBytes("UTF-8"))
+      (json.dropRight(1) + ",\"routes\":" + Verify.routesJson(routes) +
+        ",\"derived\":" + DerivedCache.json(derived) + "}\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     // The full line above is ~8k chars at 96 queries, and the driver

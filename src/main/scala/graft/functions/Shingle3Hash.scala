@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * string array ever materializes.
   *
   * Bit-identical to the builtin chain on its production domain
-  * (inputs pre-filtered to ≥ 3 tokens, as shingleDocsOf's guard
+  * (inputs pre-filtered to ≥ 3 tokens, as hashedShinglesOf's guard
   * enforces): distinct-strings-then-distinct-hashes keeps exactly
   * the first occurrence of each hash value, which is what one
   * hash-level dedupe keeps; null tokens are skipped by the join

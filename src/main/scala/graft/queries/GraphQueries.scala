@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Route
+import graft.{DerivedCache, Route}
 import graft.sources.Tables
 
 /** Iterative graph dataflow over the star schema — the remaining
@@ -1034,18 +1034,20 @@ object GraphQueries {
     spark.createDataset(dist.toSeq).toDF("part_key", "dist")
   }
 
-  /** MD5 over the classfile bytes of every class the g5 build path
-    * executes — the code half of the derived-index identity (see the
-    * ensure() call below). Lazy: computed once per JVM. */
-  private lazy val ccCodeSig: String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    Seq(GraphQueries.getClass, graft.streaming.StreamOps.getClass,
-        TextQueries.getClass).foreach { c =>
-      val path = "/" + c.getName.replace('.', '/') + ".class"
-      val in = c.getResourceAsStream(path)
-      try digest.update(in.readAllBytes()) finally in.close()
-    }
-    "|code:" + digest.digest().take(8).map("%02x".format(_)).mkString
+  /** g4's support-thresholded co-purchase edges (a_id, b_id), each
+    * tagged with its deterministic `slice` (edge-hash mod `nBatches`)
+    * and persisted — the arrival order of the incremental builds. */
+  private def slicedEdges(spark: SparkSession, dir: String, minSup: Int,
+      nBatches: Int): DataFrame = {
+    val li = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_partkey"))
+    orderPairs(li)
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("sup"))
+      .filter(col("sup") >= minSup)
+      .select(col("src").as("a_id"), col("dst").as("b_id"))
+      .withColumn("slice",
+        pmod(xxhash64(col("a_id"), col("b_id")), lit(nBatches)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** g4's labeling rebuilt INCREMENTALLY: the same support-thresholded
@@ -1066,29 +1068,17 @@ object GraphQueries {
     * Scale shape: each ingest touches batch-proportional state
     * (partition-pruned label lookup + delta-sized clustersOf); the
     * only corpus-scale work is the final corpus-sized read, which is
-    * the output floor. The build amortizes across serves via the
-    * same signature-keyed tmp root as the stored ANN indexes
-    * (derived data keyed on its input's identity). */
+    * the output floor. The build amortizes across serves through
+    * DerivedCache, like the stored ANN indexes: a root keyed on the
+    * lineitem files and the code, so the build the oracle gate proves
+    * is always this code's. */
   def g5ComponentsInc(spark: SparkSession, dir: String,
       minSup: Int = 2, nBatches: Int = 6): DataFrame = {
     // the kind folds in the parameters: a different slicing (or
-    // support cut) is a different derived index, not a cache hit.
-    // codeSig folds in the BUILD IMPLEMENTATION (this class + the
-    // ingest/compaction/clustering engines): unlike the ANN serves,
-    // where the read is the query, g5's build IS the behavior the
-    // oracle gate proves — a cached index must not outlive the code
-    // that wrote it
-    val idx = VectorIndex.ensure(spark, dir, s"cc${minSup}b$nBatches",
-        srcTable = "lineitem.parquet", codeSig = ccCodeSig) { root =>
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = orderPairs(li)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= minSup)
-        .select(col("src").as("a_id"), col("dst").as("b_id"))
-        .withColumn("slice",
-          pmod(xxhash64(col("a_id"), col("b_id")), lit(nBatches)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // support cut) is a different derived index, not a cache hit
+    val idx = DerivedCache.ensure(spark, s"cc${minSup}b$nBatches", dir,
+        Seq("lineitem.parquet")) { root =>
+      val edges = slicedEdges(spark, dir, minSup, nBatches)
       (0 until nBatches).foreach { b =>
         graft.streaming.StreamOps.clustersIngestBatch(root, metricsEvery = 0)(
           edges.filter(col("slice") === b).select(col("a_id"), col("b_id")),
@@ -1120,17 +1110,9 @@ object GraphQueries {
     * compaction; the serve pays one anti-join on the uniform id key. */
   def g7ComponentsDel(spark: SparkSession, dir: String,
       minSup: Int = 2, nBatches: Int = 4): DataFrame = {
-    val idx = VectorIndex.ensure(spark, dir, s"ccdel${minSup}b$nBatches",
-        srcTable = "lineitem.parquet", codeSig = ccCodeSig) { root =>
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = orderPairs(li)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= minSup)
-        .select(col("src").as("a_id"), col("dst").as("b_id"))
-        .withColumn("slice",
-          pmod(xxhash64(col("a_id"), col("b_id")), lit(nBatches)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val idx = DerivedCache.ensure(spark, s"ccdel${minSup}b$nBatches", dir,
+        Seq("lineitem.parquet")) { root =>
+      val edges = slicedEdges(spark, dir, minSup, nBatches)
       (0 until nBatches).foreach { b =>
         graft.streaming.StreamOps.clustersIngestBatch(root, metricsEvery = 0)(
           edges.filter(col("slice") === b).select(col("a_id"), col("b_id")),

@@ -19,7 +19,7 @@ import graft.sources.Tables
   */
 object TextQueries {
 
-  private def tokens(c: Column): Column = split(trim(c), "\\s+")
+  private[graft] def tokens(c: Column): Column = split(trim(c), "\\s+")
 
   /** Low 32 md5 bits as a long — THE cross-engine hash: DuckDB
     * computes the identical value as
@@ -31,7 +31,7 @@ object TextQueries {
     conv(substring(md5(c), 25, 8), 16, 10).cast("long")
 
   /** Whitespace normalization used as the dedup canonical form. */
-  private[queries] def normText(c: Column): Column =
+  private[graft] def normText(c: Column): Column =
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
   /** Token counting: whitespace tokens plus a BPE-ish sub-token
@@ -565,36 +565,6 @@ object TextQueries {
       .unionByName(roots.select(col("id").as("doc_id"), col("id").as("cluster_id")))
   }
 
-  /** 3-word shingle STRING sets of the normalized text (docs with <3
-    * tokens drop out) — the builtin form of the shingle pipeline,
-    * retained as the ground truth hashedShinglesBuiltin feeds (the
-    * production path is the fused native expression in
-    * hashedShinglesOf). Tokens are materialized as their own
-    * projection so `element_at` indexes a bound array column:
-    * CollapseProject declines to inline a non-cheap alias referenced
-    * 5×, keeping the tokenizer split OUT of the shingle lambda.
-    * (Inlined, the split re-ran per element_at per position —
-    * O(tokens²) per doc, interpreted: the original single-expression
-    * form ran 60× slower at sf0.1.) */
-  private def shingleDocsOf(docs: DataFrame): DataFrame = {
-    val toks = col("toks")
-    // The <3-token guard filters on size(toks), NOT size(sh): sh is
-    // nonempty iff tokens >= 3, and a size(sh)>0 filter would be
-    // predicate-pushed below the projections with the whole shingle
-    // expression inlined — re-running the quadratic form, single-core
-    // before the fan-out exchange (observed 21s vs 0.5s at sf0.1).
-    // Pushing size(toks)>=3 to the scan inlines only the linear
-    // tokenizer, which is exactly where that filter belongs.
-    docs
-      .select(col("doc_id"), tokens(normText(col("text"))).as("toks"))
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"),
-        array_distinct(transform(sequence(lit(0), size(toks) - 3),
-          i => concat_ws(" ",
-            element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3))))
-          .as("sh"))
-  }
-
   /** Distinct-hashed 3-shingle sets from any (doc_id, text) frame —
     * no persist (callers manage caching for their own lifecycle).
     * Both the batch dedup queries and the streaming LSH index build
@@ -602,10 +572,12 @@ object TextQueries {
     * family is this projection: the fused native
     * `graft_shingle3_hash` expression (functions/Shingle3Hash.scala)
     * replaces the four interpreted array passes of the builtin
-    * shingle→distinct→hash→distinct chain, which
-    * hashedShinglesBuiltin retains and GraftFunctionsSpec pins
-    * code-for-code. The <3-token guard filters on size(toks) for the
-    * pushdown reason documented in shingleDocsOf. */
+    * shingle→distinct→hash→distinct chain, which GraftFunctionsSpec
+    * keeps as its code-for-code oracle. The <3-token guard filters on
+    * size(toks), NOT on the shingle set: a filter on the set would be
+    * predicate-pushed below the projection with the whole shingle
+    * expression inlined, single-core before the fan-out exchange
+    * (observed 21s vs 0.5s at sf0.1). */
   def hashedShinglesOf(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val toks = col("toks")
@@ -614,13 +586,6 @@ object TextQueries {
       .filter(size(toks) >= 3)
       .select(col("doc_id"), call_function("graft_shingle3_hash", toks).as("sh"))
   }
-
-  /** The builtin-composed chain hashedShinglesOf replaced — the
-    * independent ground truth for the native expression's spec. */
-  private[graft] def hashedShinglesBuiltin(docs: DataFrame): DataFrame =
-    shingleDocsOf(docs)
-      .select(col("doc_id"),
-        array_distinct(transform(col("sh"), s => xxhash64(s))).as("sh"))
 
   /** Cross-source overlap audit: pairwise shingle containment and
     * Jaccard between source slices — the contamination matrix a
@@ -1169,7 +1134,7 @@ object TextQueries {
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > cap)
   // fixed odd multipliers/offsets — any deterministic odd-a family
-  private val minhashAbs: IndexedSeq[(Long, Long)] = {
+  private[graft] val minhashAbs: IndexedSeq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     IndexedSeq.fill(MinhashHashes)((rnd.nextLong() | 1L, rnd.nextLong()))
   }
@@ -1178,20 +1143,11 @@ object TextQueries {
     * native `graft_minhash_sig` expression (functions/MinHashSig
     * .scala). The signature pass is the sole full-corpus scan of
     * both the batch MinHash path and the streaming LSH index build;
-    * the builtin composition it replaces (below) made 32 interpreted
-    * higher-order passes per row. */
+    * the builtin composition it replaces (GraftFunctionsSpec keeps it
+    * as its oracle) made 32 interpreted higher-order passes per row. */
   private[graft] def minhashSigExpr(sh: Column): Column =
     call_function("graft_minhash_sig", sh,
       typedlit(minhashAbs.map(_._1)), typedlit(minhashAbs.map(_._2)))
-
-  /** The builtin-composed signature minhashSigExpr replaced —
-    * retained as the independent ground truth GraftFunctionsSpec
-    * compares the native expression against, code for code. */
-  private[graft] def minhashSigBuiltin(sh: Column): Column =
-    array((0 until MinhashHashes).map { i =>
-      val (a, b) = minhashAbs(i)
-      array_min(transform(sh, h => h * lit(a) + lit(b)))
-    }: _*)
 
   /** (doc_id, band, band_key) from hashed-shingle sets — the LSH
     * index rows. Public so the streaming ingest path can persist the
@@ -1315,30 +1271,6 @@ object TextQueries {
         .as("simhash"))
   }
 
-  /** The explode → 64-conditional-sum groupBy composition
-    * simhashSignatures replaced (a ~100× row blowup plus a
-    * full-corpus shuffle, vs. the native expression's one narrow
-    * map) — retained as the independent ground truth
-    * GraftFunctionsSpec compares the native signature against, code
-    * for code. */
-  private[graft] def simhashSignaturesBuiltin(spark: SparkSession,
-      dir: String): DataFrame = {
-    val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(tokens(normText(col("text")))).as("tok"))
-      .select(col("doc_id"), {
-        val hx = md5(col("tok"))
-        shiftleft(conv(substring(hx, 17, 8), 16, 10).cast("long"), 32)
-          .bitwiseOR(conv(substring(hx, 25, 8), 16, 10).cast("long")).as("h")
-      })
-    val bitSums = (0 until 64).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$b"))
-    val summed = toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-    val simhash = (0 until 64).map(b =>
-      when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    summed.select(col("doc_id"), simhash.as("simhash"))
-  }
-
   /** Document fingerprinting: cross-engine-stable md5 content
     * fingerprint plus its 4-hex-digit prefix as a uniform shard
     * key — the pattern for stable dedup keys + balanced partitioning
@@ -1386,32 +1318,6 @@ object TextQueries {
       .filter(length(t) >= k)
       .select(col("doc_id"),
         call_function("graft_winnow_sel", t, lit(k), lit(w)).as("sel"))
-  }
-
-  /** The builtin-composed selector the native `graft_winnow_sel`
-    * expression (functions/WinnowSelect.scala) replaced — four
-    * interpreted array passes materializing every gram and hash as
-    * strings — retained as the independent ground truth
-    * GraftFunctionsSpec compares the fused pass against. */
-  private[graft] def winnowSelectedBuiltin(spark: SparkSession, dir: String,
-      k: Int = 8, w: Int = 4): DataFrame = {
-    val t = col("t")
-    val grams = col("grams")
-    val hashes = col("hashes")
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), normText(col("text")).as("t"))
-      .filter(length(t) >= k)
-      .select(col("doc_id"),
-        transform(sequence(lit(1), length(t) - (k - 1)),
-          i => t.substr(i, lit(k))).as("grams"))
-      .select(col("doc_id"),
-        transform(grams, g => md5(g)).as("hashes"))
-      .select(col("doc_id"),
-        when(size(hashes) >= w,
-          array_sort(array_distinct(
-            transform(sequence(lit(1), size(hashes) - (w - 1)),
-              i => array_min(slice(hashes, i, lit(w)))))))
-          .otherwise(array(array_min(hashes))).as("sel"))
   }
 
   /** Language ID by corpus-trained character-trigram profiles: one
@@ -1557,17 +1463,6 @@ object TextQueries {
         explode(call_function("graft_ngram_hash", col("w"), lit(n))).as("g"))
       .distinct()
   }
-
-  /** The builtin-composed per-position gram hash the native
-    * `graft_ngram_hash` expression (functions/NgramHash.scala)
-    * replaced in hashedGramsOf / tRepetition / tSubstringSpans —
-    * retained as the independent ground truth GraftFunctionsSpec
-    * compares the fused pass against, element for element. */
-  private[graft] def ngramHashBuiltin(w: Column, n: Int): Column =
-    when(size(w) >= n,
-      transform(sequence(lit(1), size(w) - (n - 1)),
-        i => xxhash64(concat_ws(" ", slice(w, i, lit(n))))))
-      .otherwise(array().cast("array<bigint>"))
 
   def tDecontaminate(spark: SparkSession, dir: String, n: Int = 5,
       benchMod: Int = 97): DataFrame = {

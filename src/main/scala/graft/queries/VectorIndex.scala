@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Route
+import graft.{DerivedCache, Route}
 import graft.sources.Tables
 
 /** PERSISTED PQ index — the production ANN serving shape. The
@@ -144,9 +144,10 @@ object VectorIndex {
           // super owning every cell makes the two-level assignment
           // degenerate to the old flat top-2 over all cells — the
           // exact semantics that index was built under. The serve
-          // paths rebuild such roots outright (migrateGraphLayout has
-          // the corpus dir); the streaming maintainer has only the
-          // index, so it heals here instead of dying on the read.
+          // paths never meet such a root (DerivedCache keys each root
+          // on the code that built it); the streaming maintainer reads
+          // whatever index it is given, so it heals here instead of
+          // dying on the read.
           val cells = spark.read.parquet(s"$indexPath/cents")
             .select(col("kk"), col("cent")).collect()
             .sortBy(_.getInt(0)).map(r => (0, r.getSeq[Double](1))).toSeq
@@ -426,8 +427,8 @@ object VectorIndex {
     (0 until m).map(mm => (0 until k).map(kk => byCell((mm, kk))))
   }
 
-  /** Idempotent per-sfDir index bootstrap (marker stamped after a
-    * complete build) + search over the FIRST QueryK corpus vectors —
+  /** Build-once index (DerivedCache, keyed on the corpus files and
+    * the code) + search over the FIRST QueryK corpus vectors —
     * the bench/driver query form of the serving paths: warm calls
     * never retrain, so the measured number is what a serving system
     * pays per query batch. Serving semantics: self-matches included
@@ -435,7 +436,7 @@ object VectorIndex {
     * Rows-only driver check; exact ground truth lives in
     * VectorIndexSpec (recall ≥ 0.9, self at rank 1, pruned probes). */
   def annIvfStored(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "ivf")(buildIvf(spark, dir, _))
+    val idx = DerivedCache.ensure(spark, "ivf", dir, Corpus)(buildIvf(spark, dir, _))
     // the oracle register lives at the DRIVER-QUERY level (the graph
     // pattern): a register inside searchIvf would let whichever
     // stored-IVF variant ran LAST (e.g. the deletion index) silently
@@ -446,7 +447,7 @@ object VectorIndex {
 
   /** PQ twin of annIvfStored. */
   def annPqStored(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "pq")(buildPq(spark, dir, _))
+    val idx = DerivedCache.ensure(spark, "pq", dir, Corpus)(buildPq(spark, dir, _))
     searchPq(spark, dir, idx, corpusQueries(spark, dir))
   }
 
@@ -454,9 +455,12 @@ object VectorIndex {
     * as a driver query: probe prunes the scan fraction, codes bound
     * the bytes per row, one exact re-rank on the shortlist. */
   def annIvfPqStored(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "ivfpq")(buildIvfPq(spark, dir, _))
+    val idx = DerivedCache.ensure(spark, "ivfpq", dir, Corpus)(buildIvfPq(spark, dir, _))
     searchIvfPq(spark, dir, idx, corpusQueries(spark, dir))
   }
+
+  /** The input every stored ANN index derives from. */
+  private val Corpus = Seq("embeddings.parquet")
 
   private def corpusQueries(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
@@ -477,20 +481,6 @@ object VectorIndex {
     * query's best hit. */
   private[graft] val DelPredSql = "($ID % 7 = 3 OR $ID % 7 = 5)"
 
-  /** Build-code identity of the delete-bearing indexes: their BUILD
-    * (delete → fold → delete) is the behavior the oracle gate proves,
-    * so a cached index must not outlive the deletion/compaction code
-    * that wrote it (the g5 ccCodeSig precedent). */
-  private lazy val delCodeSig: String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    Seq(VectorIndex.getClass, graft.streaming.StreamOps.getClass).foreach { c =>
-      val path = "/" + c.getName.replace('.', '/') + ".class"
-      val in = c.getResourceAsStream(path)
-      try digest.update(in.readAllBytes()) finally in.close()
-    }
-    "|code:" + digest.digest().take(8).map("%02x".format(_)).mkString
-  }
-
   /** Driver query: the IVF index with DELETIONS — built once, two
     * residue classes of the corpus deleted (the first physically
     * folded by compactIvfIndex, the second live in the tombstone
@@ -499,7 +489,7 @@ object VectorIndex {
     * hash-equality proves a deleted vector stops serving with NO
     * rebuild, through both the folded and the filtered path. */
   def annIvfDel(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "ivfdel", codeSig = delCodeSig) { root =>
+    val idx = DerivedCache.ensure(spark, "ivfdel", dir, Corpus) { root =>
       buildIvf(spark, dir, root)
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
       graft.streaming.StreamOps.deleteDocs(root,
@@ -517,7 +507,7 @@ object VectorIndex {
     * survivors), second class live in the log (row-filtered serve,
     * entry resolution via cachedEntries' tombstone branch). */
   def annGraphDel(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "graphdel", codeSig = delCodeSig) { root =>
+    val idx = DerivedCache.ensure(spark, "graphdel", dir, Corpus) { root =>
       buildGraph(spark, dir, root)
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
       graft.streaming.StreamOps.deleteDocs(root,
@@ -528,53 +518,6 @@ object VectorIndex {
     }
     lastStoredGraphDel = Some(cachedGraphQuantizer(spark, idx))
     searchGraph(spark, idx, corpusQueries(spark, dir))
-  }
-
-  /** Build-once root for a derived index under tmpdir, shared by the
-    * stored-ANN queries here and the incremental-cluster query
-    * (GraphQueries.g5ComponentsInc keys on lineitem.parquet). */
-  private[graft] def ensure(spark: SparkSession, dir: String, kind: String,
-      srcTable: String = "embeddings.parquet",
-      codeSig: String = "")(
-      build: String => Unit): String = {
-    // The cache key folds in the SOURCE table's file signature
-    // (paths + sizes + mtimes), not just the dir name: a regenerated
-    // source parquet under the same path lands in a fresh root
-    // and rebuilds, instead of silently serving a stale index (the
-    // round-7 testdata regeneration was exactly this hazard — an
-    // index is derived data, and derived data must key on its
-    // inputs' identity). `codeSig` extends that identity to the
-    // BUILDER'S CODE for callers whose build path is itself the
-    // behavior under test (g5ComponentsInc hashes its implementation
-    // classes): without it, a same-machine spec or driver-gate run
-    // after a code change would keep serving an index built by the
-    // previous version. It rides the signature, not the kind, so the
-    // orphan sweep below reclaims previous-version roots naturally.
-    val src = new java.io.File(dir, srcTable)
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq(src))
-    val sig = files.sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|") + codeSig
-    val dirHex = Integer.toHexString(dir.hashCode)
-    val key = dirHex + "_" + Integer.toHexString(sig.hashCode)
-    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val rootFile = new java.io.File(tmpDir, s"graft_${kind}idx_$key")
-    val root = rootFile.getAbsolutePath
-    val marker = new java.io.File(root, "_complete")
-    if (!marker.exists()) {
-      // Reclaim orphaned roots for the SAME source dir under an OLD
-      // signature: every embeddings regeneration moves the key, and
-      // without this sweep each abandoned predecessor index would sit
-      // in tmpdir forever (unbounded accumulation across rounds).
-      Option(tmpDir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith(s"graft_${kind}idx_${dirHex}_") &&
-          f.getName != rootFile.getName)
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootFile)
-      build(root)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-    }
-    root
   }
 
   /** Persist an IVF index: the corpus REORGANIZED by coarse cell —
@@ -725,7 +668,7 @@ object VectorIndex {
     * rehearsal: the index root is signature-cached and the add is
     * batch-marker-guarded, so re-runs re-measure without re-adding. */
   def annIvfStaleness(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "ivfdrift")(buildIvf(spark, dir, _))
+    val idx = DerivedCache.ensure(spark, "ivfdrift", dir, Corpus)(buildIvf(spark, dir, _))
     val drifted = Tables.embeddings(spark, dir)
       .select((col("vec_id") + lit(DriftOffset)).as("vec_id"),
         reverse(col("embedding")).as("emb"))
@@ -971,8 +914,9 @@ object VectorIndex {
   // registers). The rendered SQL recomputes cell assignment / codes
   // from the embeddings table with the STORED model — equal to the
   // persisted index contents because the build derived them from the
-  // same table with the same expressions; a stale index (testdata
-  // regenerated under a cached _complete marker) surfaces as a loud
+  // same table with the same expressions. DerivedCache rebuilds an
+  // index whenever the embeddings files or the code change, and any
+  // stale index that still slipped through would surface as a loud
   // oracle mismatch rather than silent drift. Both serving paths keep
   // self-pairs: their queries are external by contract, so "self" has
   // no special status (corpusQueries just happens to reuse corpus
@@ -1581,24 +1525,9 @@ object VectorIndex {
     * the rendered-model oracle below; semantic ground truth — recall,
     * pruning, determinism — in VectorIndexSpec). */
   def annGraphStored(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "graph")(buildGraph(spark, dir, _))
-    migrateGraphLayout(spark, dir, idx)
+    val idx = DerivedCache.ensure(spark, "graph", dir, Corpus)(buildGraph(spark, dir, _))
     lastStoredGraph = Some(cachedGraphQuantizer(spark, idx))
     searchGraph(spark, idx, corpusQueries(spark, dir))
-  }
-
-  /** Layout migration: a root built before the quantizer (round-12
-    * pre-seeded-walk layout), before the membership roster (round-13
-    * maintainer layout), or before the two-level supers (round-14
-    * uncapped-cells layout) carries a _complete marker but lacks the
-    * table — rebuild in place rather than failing the serve. */
-  private def migrateGraphLayout(spark: SparkSession, dir: String,
-      idx: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = Seq("cents", "members", "supers").exists(sub =>
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$idx/$sub")))
-    if (stale) buildGraph(spark, dir, idx)
   }
 
   /** The corpus-sized-query-batch form of the graph walk — the
@@ -1846,8 +1775,7 @@ object VectorIndex {
     * query batch (the shape the driver walk's maxQueryBatch guard
     * fences off), against the shared stored graph index. */
   def annGraphBatch(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensure(spark, dir, "graph")(buildGraph(spark, dir, _))
-    migrateGraphLayout(spark, dir, idx)
+    val idx = DerivedCache.ensure(spark, "graph", dir, Corpus)(buildGraph(spark, dir, _))
     lastStoredGraphBatch = Some(cachedGraphQuantizer(spark, idx))
     searchGraphBatch(spark, idx, Tables.embeddings(spark, dir)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb")))
@@ -1868,9 +1796,9 @@ object VectorIndex {
     * embeddings table, then unrolls the fixed-round greedy beam walk
     * (GraphHops rounds of: top-beam unexpanded frontier, neighbor
     * expansion, anti-join against the pool, rounded-cosine scoring)
-    * as chained CTEs. A stale stored graph (testdata regenerated
-    * under a cached _complete marker) surfaces as a loud hash
-    * mismatch, exactly like the other stored indexes. Every
+    * as chained CTEs. A stale stored graph (one DerivedCache failed
+    * to rebuild) would surface as a loud hash mismatch, exactly like
+    * the other stored indexes. Every
     * arithmetic step is the proven-parity form:
     * list_transform-normalization ≡ embNormed, list_dot_product ≡
     * graft_dot/the driver dot loop, round(.,4) ≡ the engine's

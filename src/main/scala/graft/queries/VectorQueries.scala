@@ -785,21 +785,6 @@ object VectorQueries {
       m: Int, sub: Int): Column =
     call_function("graft_pq_encode", v, typedlit(book))
 
-  /** The builtin-composed encode pqAssignExpr replaced — retained as
-    * the independent ground truth GraftFunctionsSpec compares the
-    * native expression against, code for code. */
-  private[graft] def pqAssignExprBuiltin(book: Seq[Seq[Seq[Double]]], v: Column,
-      m: Int, sub: Int): Column =
-    array((0 until m).map { mm =>
-      val cents = typedlit(book(mm))
-      val norms2 = typedlit(book(mm).map(c => c.map(x => x * x).sum))
-      val sv = slice(v, mm * sub + 1, sub)
-      val scores = zip_with(cents, norms2, (c, n2) =>
-        aggregate(zip_with(sv, c, (a, b) => a * b),
-          lit(0.0d), (acc, x) => acc + x) * 2 - n2)
-      (array_position(scores, array_max(scores)) - 1).cast("int")
-    }: _*)
-
   /** Lloyd per subspace on the driver: maxTrain×sub points, k
     * centroids — bounded arithmetic (µs at any corpus size), the
     * standard quantizer-training locus when the model is

@@ -202,8 +202,8 @@ object DocStore {
 
   /** Oracle-checkable scan THROUGH the document store: the documents
     * table is materialized once per sf dir as a docdir (one JSON file
-    * per doc, written distributed via foreachPartition, idempotent
-    * behind a completion marker), then read back through the DSv2
+    * per doc, written distributed via foreachPartition, built once
+    * through DerivedCache), then read back through the DSv2
     * source + from_json — so the oracle (`SELECT doc_id, lang,
     * length(text) FROM documents`) proves the store round-trips
     * byte-faithfully, not just that the reader runs. */
@@ -218,17 +218,12 @@ object DocStore {
         length(col("text")).cast("long").as("n_chars"))
   }
 
-  /** Write `documents` as a docdir once per (tmpdir, sfDir) — each
-    * partition's task writes its own files (valid local[™] stand-in
-    * for a shared FS), marker stamped LAST so a crashed bootstrap
-    * re-runs. */
-  private def bootstrapDocstore(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_docstore_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val marker = new java.io.File(root, "_complete")
-    if (!marker.exists()) {
+  /** Write `documents` as a docdir once per documents table
+    * (DerivedCache) — each partition's task writes its own files
+    * (valid local[*] stand-in for a shared FS). */
+  private def bootstrapDocstore(spark: SparkSession, dir: String): String =
+    graft.DerivedCache.ensure(spark, "docstore", dir, Seq("documents.parquet")) { root =>
       val collDir = new java.io.File(root, "docs").getAbsolutePath
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(collDir))
       Tables.documents(spark, dir)
         .select(col("doc_id"),
@@ -241,8 +236,5 @@ object DocStore {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }
-    root
-  }
 }

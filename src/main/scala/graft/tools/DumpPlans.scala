@@ -10,7 +10,7 @@ import graft.Session
   * factor.
   *
   * NOTE: building some query frames runs driver-side work (iterative
-  * supersteps, index ensure() builds), so a full dump is minutes,
+  * supersteps, DerivedCache index builds), so a full dump is minutes,
   * not seconds. Usage:
   *   runMain graft.tools.DumpPlans <outDir> <suffix> [sfDir] [name ...]
   * (no names = all queries; suffix is e.g. "before"/"after").

@@ -61,12 +61,8 @@ object ProfileBfsStitched {
     val (baseS, baseN, baseMax) = best(dir)
 
     // build (or reuse) the stitched corpus
-    val key = Integer.toHexString((dir + ":bfs:" + reps).hashCode)
-    val root = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bfsstitch_$key")
-    val marker = new java.io.File(root, "_complete")
-    if (!marker.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
+    val root = graft.DerivedCache.ensure(spark, s"bfsstitch$reps", dir,
+        Seq("lineitem.parquet")) { out =>
       val base = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").cast("long"), col("l_partkey").cast("long"))
       val big = (0 until reps).map(k => base
@@ -84,11 +80,10 @@ object ProfileBfsStitched {
         }
       }.toDF("l_orderkey", "l_partkey")
       big.unionByName(bridges).write.mode("overwrite")
-        .parquet(s"${root.getAbsolutePath}/lineitem.parquet")
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
+        .parquet(s"$out/lineitem.parquet")
     }
 
-    val (bigS, bigN, bigMax) = best(root.getAbsolutePath)
+    val (bigS, bigN, bigMax) = best(root)
     val ratio = bigS / baseS
     val bound = LinearBoundPer10x * (reps / 10.0)
     val reachOk = bigN == reps.toLong * baseN

@@ -28,7 +28,7 @@ import graft.Session
   * AND faults actually fired (a run with zero kills proves nothing —
   * tiny tasks can finish before the async kill lands, so the residue
   * covers every stage and the report prints the realized kill count).
-  * The ensure()-cached ANN index roots are wiped before EACH session
+  * The DerivedCache roots (the stored indexes) are wiped before EACH session
   * so the faulted pass re-runs the index BUILDS (the trainer collects
   * + writes) under kills too, not just the serving reads.
   *
@@ -97,22 +97,20 @@ object ProfileRetry {
     s
   }
 
-  /** Wipe the signature-keyed stored-index roots so the next session
-    * rebuilds them (ensure() caches under tmpdir/graft_<kind>idx_*).
+  /** Wipe the DerivedCache roots so the next session rebuilds them
+    * (DerivedCache keeps them under tmpdir/graft_derived_*).
     * Operates on the RUN-PRIVATE tmpdir installed by main() — wiping
     * the shared system tmpdir would delete index roots belonging to
     * concurrent test/bench sessions on the same machine, which could
     * then serve from a half-rebuilt index. */
-  private def wipeIndexRoots(): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+  private def wipeIndexRoots(tmp: java.io.File): Unit =
     Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("graft_") && f.getName.contains("idx_"))
+      .filter(_.getName.startsWith("graft_derived_"))
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-  }
 
   /** Redirect java.io.tmpdir to a rehearsal-private directory before
-    * any session exists: every index root (ensure(), DocDirSource,
-    * the text index) resolves the property at call time, so both
+    * any session exists: every derived root (DerivedCache: the
+    * indexes, the docstore) resolves the property at call time, so both
     * passes build and wipe inside this sandbox only. */
   private def installPrivateTmpdir(): java.io.File = {
     val dir = java.nio.file.Files.createTempDirectory("graft_retry_run_").toFile
@@ -134,7 +132,7 @@ object ProfileRetry {
     }
 
     def runPass(faulty: Boolean): (Map[String, (Long, String)], Long, Long) = {
-      wipeIndexRoots()
+      wipeIndexRoots(privateTmp)
       val spark = session(faulty, cpus)
       val kills = new java.util.concurrent.atomic.AtomicLong
       val speculative = new java.util.concurrent.atomic.AtomicLong

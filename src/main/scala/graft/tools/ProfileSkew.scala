@@ -81,39 +81,33 @@ object ProfileSkew {
     "t_corpus_mix" -> "per-source census + allocate (hot domain 20%)",
     "t_source_overlap_lsh" -> "per-source sketch agg + banding (hot domain 20%)")
 
-  /** Build the equal-volume uniform/skew corpus pair under tmpdir
-    * (idempotent per sfDir via marker, like ProfileSuite10x). A row
-    * moves to the hot key when xxhash64 of its primary key lands in
-    * the hot residue — deterministic, volume-preserving. */
+  /** Build the equal-volume uniform/skew corpus pair once per input
+    * tables (DerivedCache, like ProfileSuite10x). A row moves to the
+    * hot key when xxhash64 of its primary key lands in the hot
+    * residue — deterministic, volume-preserving. */
   def buildPair(spark: SparkSession, dir: String): (String, String) = {
-    val key = Integer.toHexString((dir + ":skewpair:v1").hashCode)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_skew_$key")
-    val uni = new java.io.File(root, "uniform").getAbsolutePath
-    val skw = new java.io.File(root, "skew").getAbsolutePath
-    val marker = new java.io.File(root, "_complete")
-    if (marker.exists()) return (uni, skw)
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
-
-    def rep(table: String, mutate: DataFrame => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$dir/$table.parquet")
-      base.write.mode("overwrite").parquet(s"$uni/$table.parquet")
-      mutate(base).write.mode("overwrite").parquet(s"$skw/$table.parquet")
+    val root = graft.DerivedCache.ensure(spark, "skewpair", dir,
+        Seq("events", "orders", "documents", "customer").map(_ + ".parquet")) { out =>
+      def rep(table: String, mutate: DataFrame => DataFrame): Unit = {
+        val base = spark.read.parquet(s"$dir/$table.parquet")
+        base.write.mode("overwrite").parquet(s"$out/uniform/$table.parquet")
+        mutate(base).write.mode("overwrite").parquet(s"$out/skew/$table.parquet")
+      }
+      def hot(pk: String, mod: Int) = pmod(xxhash64(col(pk)), lit(mod)) === 0
+      // ~20% of events to user 1; ~20% of orders to customer 1; ~20% of
+      // docs to one domain; ~60% of customers into one segment (5
+      // uniform segments start at 20% — an extra 50% coin makes one
+      // segment dominate)
+      rep("events", df => df.withColumn("user_id",
+        when(hot("event_id", 5), lit(1L)).otherwise(col("user_id"))))
+      rep("orders", df => df.withColumn("o_custkey",
+        when(hot("o_orderkey", 5), lit(1L)).otherwise(col("o_custkey"))))
+      rep("documents", df => df.withColumn("source",
+        when(hot("doc_id", 5), lit("src0")).otherwise(col("source"))))
+      rep("customer", df => df.withColumn("c_mktsegment",
+        when(hot("c_custkey", 2), lit("BUILDING")).otherwise(col("c_mktsegment"))))
     }
-    def hot(pk: String, mod: Int) = pmod(xxhash64(col(pk)), lit(mod)) === 0
-    // ~20% of events to user 1; ~20% of orders to customer 1; ~20% of
-    // docs to one domain; ~60% of customers into one segment (5
-    // uniform segments start at 20% — an extra 50% coin makes one
-    // segment dominate)
-    rep("events", df => df.withColumn("user_id",
-      when(hot("event_id", 5), lit(1L)).otherwise(col("user_id"))))
-    rep("orders", df => df.withColumn("o_custkey",
-      when(hot("o_orderkey", 5), lit(1L)).otherwise(col("o_custkey"))))
-    rep("documents", df => df.withColumn("source",
-      when(hot("doc_id", 5), lit("src0")).otherwise(col("source"))))
-    rep("customer", df => df.withColumn("c_mktsegment",
-      when(hot("c_custkey", 2), lit("BUILDING")).otherwise(col("c_mktsegment"))))
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-    (uni, skw)
+    (s"$root/uniform", s"$root/skew")
   }
 
   /** Force a hot-key sort-merge join on the skew fixture and report

@@ -108,14 +108,14 @@ object ProfileSuite10x {
     "ann_ivf_stored" -> LinearBound,
     "ann_pq_stored" -> LinearBound,
     // round-12: the graph-ANN serve (build amortizes into the first
-    // best-of run via the ensure() cache like the other stored
+    // best-of run via the DerivedCache root like the other stored
     // variants, so the measured best is the partition-pruned walk —
     // near-flat by design; measured 0.99x at x40)
     "ann_graph_topk" -> LinearBound,
     // round-13: the distributed batch walk over the same stored graph
     // (corpus-sized query batch — BOTH sides of every per-hop join
     // grow linearly; the build amortizes into the first best-of run
-    // via the shared ensure() root exactly like ann_graph_topk)
+    // via the shared DerivedCache root exactly like ann_graph_topk)
     "ann_graph_batch" -> LinearBound,
     // round-12: the incremental-cluster rebuild+serve — 6 ingests
     // each over 1/6 of the edges (per-batch label lookups prune to
@@ -123,7 +123,7 @@ object ProfileSuite10x {
     // the worst case is batch-count × labels-table scans — linear in
     // corpus at fixed batch count), one mid-stream compaction, one
     // corpus-sized read. Build amortizes into the first best-of run
-    // via the ensure() cache like the stored ANN variants.
+    // via the DerivedCache root like the stored ANN variants.
     "g5_components_inc" -> LinearBound,
     // round-12: two window shuffles with WindowGroupLimit pre-prune
     // (w5), vocabulary-carrying count shuffles + broadcast scalars
@@ -157,55 +157,50 @@ object ProfileSuite10x {
     // round-17 deletion operators: each is its parent's build+serve
     // plus a tombstone append, a fold (one table rewrite — linear),
     // and an anti-join on the uniform id key; builds amortize into
-    // the first best-of run via the ensure() cache like the parents
+    // the first best-of run via the DerivedCache root like the parents
     "g7_components_del" -> LinearBound,
     "ann_ivf_del" -> LinearBound,
     "ann_graph_del" -> LinearBound)
 
   private val KeyOffset = 100000000L
 
-  /** Replicate every table of `dir` into a distinct-data `reps`×
-    * corpus under tmpdir (idempotent per (dir, reps): keyed marker,
-    * reused across runs in the same round). */
-  def replicate(spark: SparkSession, dir: String, reps: Int): String = {
-    val key = Integer.toHexString((dir + ":" + reps).hashCode)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_suite10x_$key")
-    val marker = new java.io.File(root, "_complete")
-    if (marker.exists()) return root.getAbsolutePath
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
+  private val Tables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
 
-    def rep(table: String, build: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$dir/$table.parquet")
-      val big = (0 until reps).map(k => build(base, k)).reduce(_ unionByName _)
-      big.write.mode("overwrite").parquet(s"${root.getAbsolutePath}/$table.parquet")
+  /** Replicate every table of `dir` into a distinct-data `reps`×
+    * corpus, built once per (inputs, reps) through DerivedCache. */
+  def replicate(spark: SparkSession, dir: String, reps: Int): String =
+    graft.DerivedCache.ensure(spark, s"suite10x$reps", dir,
+        Tables.map(_ + ".parquet")) { out =>
+      def rep(table: String, build: (DataFrame, Int) => DataFrame): Unit = {
+        val base = spark.read.parquet(s"$dir/$table.parquet")
+        val big = (0 until reps).map(k => build(base, k)).reduce(_ unionByName _)
+        big.write.mode("overwrite").parquet(s"$out/$table.parquet")
+      }
+      def off(k: Int) = lit(k * KeyOffset)
+      // dimension roots stay 1× (a bigger corpus has more facts, not
+      // more regions); every keyed table offsets its keys coherently
+      rep("region", (df, k) => if (k == 0) df else df.limit(0))
+      rep("nation", (df, k) => if (k == 0) df else df.limit(0))
+      rep("customer", (df, k) => df.withColumn("c_custkey", col("c_custkey") + off(k)))
+      rep("supplier", (df, k) => df.withColumn("s_suppkey", col("s_suppkey") + off(k)))
+      rep("part", (df, k) => df.withColumn("p_partkey", col("p_partkey") + off(k)))
+      rep("orders", (df, k) => df
+        .withColumn("o_orderkey", col("o_orderkey") + off(k))
+        .withColumn("o_custkey", col("o_custkey") + off(k)))
+      rep("lineitem", (df, k) => df
+        .withColumn("l_orderkey", col("l_orderkey") + off(k))
+        .withColumn("l_partkey", col("l_partkey") + off(k))
+        .withColumn("l_suppkey", col("l_suppkey") + off(k)))
+      rep("events", (df, k) => df
+        .withColumn("event_id", col("event_id") + off(k))
+        .withColumn("user_id", col("user_id") + off(k)))
+      rep("documents", (df, k) => df
+        .withColumn("doc_id", col("doc_id") + off(k))
+        .withColumn("text",
+          if (k == 0) col("text") else concat(lit(s"r$k "), col("text"))))
+      rep("embeddings", (df, k) => df.withColumn("vec_id", col("vec_id") + off(k)))
     }
-    def off(k: Int) = lit(k * KeyOffset)
-    // dimension roots stay 1× (a bigger corpus has more facts, not
-    // more regions); every keyed table offsets its keys coherently
-    rep("region", (df, k) => if (k == 0) df else df.limit(0))
-    rep("nation", (df, k) => if (k == 0) df else df.limit(0))
-    rep("customer", (df, k) => df.withColumn("c_custkey", col("c_custkey") + off(k)))
-    rep("supplier", (df, k) => df.withColumn("s_suppkey", col("s_suppkey") + off(k)))
-    rep("part", (df, k) => df.withColumn("p_partkey", col("p_partkey") + off(k)))
-    rep("orders", (df, k) => df
-      .withColumn("o_orderkey", col("o_orderkey") + off(k))
-      .withColumn("o_custkey", col("o_custkey") + off(k)))
-    rep("lineitem", (df, k) => df
-      .withColumn("l_orderkey", col("l_orderkey") + off(k))
-      .withColumn("l_partkey", col("l_partkey") + off(k))
-      .withColumn("l_suppkey", col("l_suppkey") + off(k)))
-    rep("events", (df, k) => df
-      .withColumn("event_id", col("event_id") + off(k))
-      .withColumn("user_id", col("user_id") + off(k)))
-    rep("documents", (df, k) => df
-      .withColumn("doc_id", col("doc_id") + off(k))
-      .withColumn("text",
-        if (k == 0) col("text") else concat(lit(s"r$k "), col("text"))))
-    rep("embeddings", (df, k) => df.withColumn("vec_id", col("vec_id") + off(k)))
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-    root.getAbsolutePath
-  }
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"

@@ -103,11 +103,26 @@ class BenchSpec extends SparkSpec {
     val gated: (SparkSession, String) => DataFrame = (s, _) =>
       graft.queries.TextQueries.clustersOf(
         s.range(3).select(col("id").as("a_id"), (col("id") + 1).as("b_id")))
-    val (measured, failed, routes) = Bench.measurePass(spark, "unused",
-      Seq("a_ok" -> ok, "b_boom" -> boom, "c_gated" -> gated), runsPerQuery = 3)
+    // a query over a derived root: its cold run builds it, and that is
+    // recorded; its warm runs hit it
+    val in = java.nio.file.Files.createTempDirectory("bench-derived").toString
+    spark.range(5).write.parquet(s"$in/t.parquet")
+    val derivedQ: (SparkSession, String) => DataFrame = (s, _) =>
+      s.read.parquet(DerivedCache.ensure(s, "benchspec", in, Seq("t.parquet")) { out =>
+        s.read.parquet(s"$in/t.parquet").write.parquet(s"$out/t")
+      } + "/t")
+    val (measured, failed, routes, derived) = Bench.measurePass(spark, "unused",
+      Seq("a_ok" -> ok, "b_boom" -> boom, "c_gated" -> gated, "d_derived" -> derivedQ),
+      runsPerQuery = 3)
     assert(failed == Set("b_boom"))
-    assert(measured.map(_._1) == Seq("a_ok", "b_boom", "c_gated"))
+    assert(measured.map(_._1) == Seq("a_ok", "b_boom", "c_gated", "d_derived"))
     assert(measured.forall(r => r._2 >= 0 && r._3.size == 2))
+    assert(derived("a_ok").isEmpty && derived("c_gated").isEmpty)
+    val built = derived("d_derived")("benchspec")
+    assert(built.built && built.buildSeconds > 0, built)
+    assert(DerivedCache.take() == Map("benchspec" -> DerivedCache.Record(false, 0.0)))
+    assert(DerivedCache.json(derived - "b_boom") == "{\"a_ok\":{},\"c_gated\":{}," +
+      s""""d_derived":{"benchspec":{"built":true,"build_s":${built.buildSeconds}}}}""")
     assert(routes("a_ok").isEmpty)
     val d = routes("c_gated")("local_finish")
     assert(d.local && !d.forced && d.estimate == Seq(3.0), d)

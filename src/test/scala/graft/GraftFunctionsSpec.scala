@@ -115,7 +115,7 @@ class GraftFunctionsSpec extends SparkSpec {
     val book = graft.queries.VectorQueries.pqTrain(sample, m, k, sub, 4)
     val native = call_function("graft_pq_encode", col("emb"),
       typedlit(book))
-    val builtin = graft.queries.VectorQueries
+    val builtin = BuiltinTwins
       .pqAssignExprBuiltin(book, col("emb"), m, sub)
     val diverging = emb.select((native =!= builtin).as("ne"))
       .filter(col("ne")).count()
@@ -133,7 +133,7 @@ class GraftFunctionsSpec extends SparkSpec {
     val docs = graft.queries.TextQueries.hashedShinglesOf(
       graft.sources.Tables.documents(spark, "/root/testdata/sf0.01"))
     val native = graft.queries.TextQueries.minhashSigExpr(col("sh"))
-    val builtin = graft.queries.TextQueries.minhashSigBuiltin(col("sh"))
+    val builtin = BuiltinTwins.minhashSigBuiltin(col("sh"))
     val diverging = docs.select((!(native <=> builtin)).as("ne"))
       .filter(col("ne")).count()
     assert(diverging == 0, s"$diverging docs sign differently")
@@ -147,7 +147,7 @@ class GraftFunctionsSpec extends SparkSpec {
       expr("array(9223372036854775807L, cast(null as bigint), -1L)").as("mixed"))
     Seq("empty", "allnull", "mixed").foreach { c =>
       val ne = edge.select((!(graft.queries.TextQueries.minhashSigExpr(col(c)) <=>
-        graft.queries.TextQueries.minhashSigBuiltin(col(c)))).as("ne"))
+        BuiltinTwins.minhashSigBuiltin(col(c)))).as("ne"))
         .filter(col("ne")).count()
       assert(ne == 0, s"edge case '$c' diverges from the builtin")
     }
@@ -157,7 +157,7 @@ class GraftFunctionsSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     val dir = "/root/testdata/sf0.01"
     val native = graft.queries.TextQueries.simhashSignatures(spark, dir)
-    val builtin = graft.queries.TextQueries.simhashSignaturesBuiltin(spark, dir)
+    val builtin = BuiltinTwins.simhashSignaturesBuiltin(spark, dir)
     assert(native.count() == builtin.count())
     val diverging = native.as("n")
       .join(builtin.withColumnRenamed("simhash", "simhash_b"), Seq("doc_id"))
@@ -181,7 +181,7 @@ class GraftFunctionsSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.01")
     val native = graft.queries.TextQueries.hashedShinglesOf(docs)
-    val builtin = graft.queries.TextQueries.hashedShinglesBuiltin(docs)
+    val builtin = BuiltinTwins.hashedShinglesBuiltin(docs)
     assert(native.count() == builtin.count())
     val diverging = native.as("n")
       .join(builtin.withColumnRenamed("sh", "sh_b"), Seq("doc_id"))
@@ -207,7 +207,7 @@ class GraftFunctionsSpec extends SparkSpec {
       .select(col("doc_id"), split(trim(lower(trim(col("text")))), "\\s+").as("w"))
     for (n <- Seq(2, 5, 8)) {
       val native = call_function("graft_ngram_hash", col("w"), lit(n))
-      val builtin = graft.queries.TextQueries.ngramHashBuiltin(col("w"), n)
+      val builtin = BuiltinTwins.ngramHashBuiltin(col("w"), n)
       val ne = docs.select((!(native <=> builtin)).as("ne")).filter(col("ne")).count()
       assert(ne == 0, s"n=$n: grams diverge from the builtin")
     }
@@ -227,7 +227,7 @@ class GraftFunctionsSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     val dir = "/root/testdata/sf0.01"
     val native = graft.queries.TextQueries.winnowSelected(spark, dir)
-    val builtin = graft.queries.TextQueries.winnowSelectedBuiltin(spark, dir)
+    val builtin = BuiltinTwins.winnowSelectedBuiltin(spark, dir)
     assert(native.count() == builtin.count())
     val diverging = native.as("n")
       .join(builtin.withColumnRenamed("sel", "sel_b"), Seq("doc_id"))
